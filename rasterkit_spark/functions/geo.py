@@ -114,8 +114,88 @@ def bbox_from_point_radius(x: Column, y: Column, radius: Column,
 
 
 # ---------------------------------------------------------------------------
-# G5 — bbox → pixel region (same CRS)
+# G5/G6/G7 — bbox → pixel region.  Each formula is written once, as a piece
+# over Columns; the per-arm functions compose the pieces into one select,
+# the dispatch stages them into successive projections.
 # ---------------------------------------------------------------------------
+
+def _pixel_bounds(minx: Column, miny: Column, maxx: Column, maxy: Column,
+                  origin_x: Column, pixel_w: Column,
+                  origin_y: Column, pixel_h: Column) -> list[Column]:
+    """[min_x_px, min_y_px, max_x_px, max_y_px] of a bbox already in the
+    raster's CRS (src/utils/image_extraction_utils.rs:193-223).
+
+    Quirk: floor min_x / ceil max_x in X, but floor on *both* Y conversions.
+    """
+    return [F.floor((minx - origin_x) / pixel_w),
+            F.floor((maxy - origin_y) / pixel_h),
+            F.ceil((maxx - origin_x) / pixel_w),
+            F.floor((miny - origin_y) / pixel_h)]
+
+
+def _clamped_origin(min_x_px: Column, min_y_px: Column,
+                    iw: Column, ih: Column) -> list[Column]:
+    return [F.greatest(F.lit(0), F.least(min_x_px, iw - 1)),
+            F.greatest(F.lit(0), F.least(min_y_px, ih - 1))]
+
+
+def _clipped_size(min_x_px: Column, min_y_px: Column, max_x_px: Column,
+                  max_y_px: Column, x: Column, y: Column,
+                  iw: Column, ih: Column) -> list[Column]:
+    return [F.least(F.greatest(max_x_px - min_x_px, F.lit(1)), iw - x),
+            F.least(F.greatest(max_y_px - min_y_px, F.lit(1)), ih - y)]
+
+
+def _merc_in_bounds(min_x_px: Column, min_y_px: Column, max_x_px: Column,
+                    max_y_px: Column, iw: Column, ih: Column) -> Column:
+    """G6: the projected bbox touches the image (rs:284-292)."""
+    return ((min_x_px < iw) & (max_x_px >= 0)
+            & (min_y_px < ih) & (max_y_px >= 0))
+
+
+def _merc_fallback_size(radius_m: Column, pixel_w: Column) -> Column:
+    """G6 fallback size: trunc(2r/|pw|) or 1000 px (rs:294-303).  NaN radius
+    counts as absent, like the numpy twin (a bare CAST(NaN AS BIGINT) would
+    yield 0 — a degenerate region — where the kernel returns 1000 px)."""
+    return F.when(radius_m.isNull() | F.isnan(radius_m),
+                  F.lit(1000).cast("long")) \
+        .otherwise((radius_m * 2 / F.abs(pixel_w)).cast("long"))
+
+
+def _generic_fallback_size(radius_m: Column, pixel_w: Column) -> Column:
+    """G7 fallback size: clamp(ceil(2r/|pw|), 100, 5000) or 100 px
+    (rs:341-414)."""
+    return F.when(
+        radius_m.isNull(), F.lit(100).cast("long")
+    ).otherwise(
+        F.greatest(F.lit(100).cast("long"),
+                   F.least(F.lit(5000).cast("long"),
+                           F.ceil(radius_m * 2 / F.abs(pixel_w)))))
+
+
+def _centered_origin(size: Column, iw: Column, ih: Column) -> list[Column]:
+    """Fallback placement, saturating at 0; center and half-size use
+    integer division (rs:298,304-305,309-314 and the G7 twin)."""
+    half = (size / 2).cast("long")
+    return [F.greatest((iw / 2).cast("long") - half, F.lit(0)),
+            F.greatest((ih / 2).cast("long") - half, F.lit(0))]
+
+
+def _crude_transform(minx: Column, miny: Column, maxx: Column, maxy: Column,
+                     source_epsg: Column) -> list[Column]:
+    """G7 ``try_transform_bbox`` (rs:158-181): 4326 → crude meters scaling
+    at the bbox center latitude; every other CRS passes through."""
+    is_wgs = source_epsg == 4326
+    m_lat = F.lit(METERS_PER_DEG_LAT)
+    m_lon = m_lat * F.cos(F.radians((miny + maxy) / 2))
+    return [F.when(is_wgs, minx * m_lon).otherwise(minx),
+            F.when(is_wgs, miny * m_lat).otherwise(miny),
+            F.when(is_wgs, maxx * m_lon).otherwise(maxx),
+            F.when(is_wgs, maxy * m_lat).otherwise(maxy)]
+
+
+_REGION_NAMES = ["region_x", "region_y", "region_w", "region_h"]
+
 
 def region_same_crs(minx: Column, miny: Column, maxx: Column, maxy: Column,
                     origin_x: Column, pixel_w: Column,
@@ -124,25 +204,15 @@ def region_same_crs(minx: Column, miny: Column, maxx: Column, maxy: Column,
     """``convert_same_crs_to_pixels``
     (src/utils/image_extraction_utils.rs:193-223).
 
-    Quirk: floor min_x / ceil max_x in X, but floor on *both* Y conversions.
     Returns [x, y, w, h] long columns aliased region_x/y/w/h.
     """
-    min_x_px = F.floor((minx - origin_x) / pixel_w)
-    max_y_px = F.floor((miny - origin_y) / pixel_h)
-    max_x_px = F.ceil((maxx - origin_x) / pixel_w)
-    min_y_px = F.floor((maxy - origin_y) / pixel_h)
+    iw, ih = img_w.cast("long"), img_h.cast("long")
+    px = _pixel_bounds(minx, miny, maxx, maxy,
+                       origin_x, pixel_w, origin_y, pixel_h)
+    x, y = _clamped_origin(px[0], px[1], iw, ih)
+    w, h = _clipped_size(*px, x, y, iw, ih)
+    return [c.alias(n) for c, n in zip([x, y, w, h], _REGION_NAMES)]
 
-    x = F.greatest(F.lit(0), F.least(min_x_px, img_w.cast("long") - 1))
-    y = F.greatest(F.lit(0), F.least(min_y_px, img_h.cast("long") - 1))
-    w = F.least(F.greatest(max_x_px - min_x_px, F.lit(1)), img_w.cast("long") - x)
-    h = F.least(F.greatest(max_y_px - min_y_px, F.lit(1)), img_h.cast("long") - y)
-    return [x.alias("region_x"), y.alias("region_y"),
-            w.alias("region_w"), h.alias("region_h")]
-
-
-# ---------------------------------------------------------------------------
-# G6 — bbox(4326) → pixel region on a 3857 raster, with fallback
-# ---------------------------------------------------------------------------
 
 def region_wgs84_on_mercator(minx: Column, miny: Column,
                              maxx: Column, maxy: Column,
@@ -155,134 +225,105 @@ def region_wgs84_on_mercator(minx: Column, miny: Column,
     centered-fallback when the projected bbox misses the image entirely
     (lines 294-315: size = trunc(2r/pw) or 1000, saturating placement).
     """
-    x_min = merc_x_inline(minx)
-    x_max = merc_x_inline(maxx)
-    y_min = merc_y_inline(miny)
-    y_max = merc_y_inline(maxy)
-
-    iw = img_w.cast("long")
-    ih = img_h.cast("long")
-
-    min_x_px = F.floor((x_min - origin_x) / pixel_w)
-    max_y_px = F.floor((y_min - origin_y) / pixel_h)
-    max_x_px = F.ceil((x_max - origin_x) / pixel_w)
-    min_y_px = F.floor((y_max - origin_y) / pixel_h)
-
-    in_bounds = ((min_x_px < iw) & (max_x_px >= 0)
-                 & (min_y_px < ih) & (max_y_px >= 0))
-
-    x = F.greatest(F.lit(0), F.least(min_x_px, iw - 1))
-    y = F.greatest(F.lit(0), F.least(min_y_px, ih - 1))
-    w = F.least(F.greatest(max_x_px - min_x_px, F.lit(1)), iw - x)
-    h = F.least(F.greatest(max_y_px - min_y_px, F.lit(1)), ih - y)
-
-    # NaN radius counts as absent, like the numpy twin (a bare CAST(NaN
-    # AS BIGINT) would yield 0 — a degenerate region — where the kernel
-    # returns the documented 1000-px fallback)
-    size = F.when(radius_m.isNull() | F.isnan(radius_m),
-                  F.lit(1000).cast("long")) \
-            .otherwise((radius_m * 2 / F.abs(pixel_w)).cast("long"))
-    # integer semantics: center and half-size use integer division
-    # (image_extraction_utils.rs:298,304-305,309-314)
-    fb_x = F.greatest((iw / 2).cast("long") - (size / 2).cast("long"), F.lit(0))
-    fb_y = F.greatest((ih / 2).cast("long") - (size / 2).cast("long"), F.lit(0))
-    fb_w = F.least(size, iw)
-    fb_h = F.least(size, ih)
-
-    return [
-        F.when(in_bounds, x).otherwise(fb_x).alias("region_x"),
-        F.when(in_bounds, y).otherwise(fb_y).alias("region_y"),
-        F.when(in_bounds, w).otherwise(fb_w).alias("region_w"),
-        F.when(in_bounds, h).otherwise(fb_h).alias("region_h"),
-    ]
+    iw, ih = img_w.cast("long"), img_h.cast("long")
+    px = _pixel_bounds(merc_x_inline(minx), merc_y_inline(miny),
+                       merc_x_inline(maxx), merc_y_inline(maxy),
+                       origin_x, pixel_w, origin_y, pixel_h)
+    x, y = _clamped_origin(px[0], px[1], iw, ih)
+    w, h = _clipped_size(*px, x, y, iw, ih)
+    in_bounds = _merc_in_bounds(*px, iw, ih)
+    size = _merc_fallback_size(radius_m, pixel_w)
+    fb_x, fb_y = _centered_origin(size, iw, ih)
+    fb = [fb_x, fb_y, F.least(size, iw), F.least(size, ih)]
+    return [F.when(in_bounds, c).otherwise(f).alias(n)
+            for c, f, n in zip([x, y, w, h], fb, _REGION_NAMES)]
 
 
-# ---------------------------------------------------------------------------
-# G7 — generic CRS pair: crude transform → same-CRS → bounds adjust
-# ---------------------------------------------------------------------------
-
-def region_generic_crs(minx: Column, miny: Column, maxx: Column, maxy: Column,
-                       source_epsg: Column,
-                       origin_x: Column, pixel_w: Column,
-                       origin_y: Column, pixel_h: Column,
-                       img_w: Column, img_h: Column,
-                       radius_m: Column) -> list[Column]:
-    """``generic_crs_to_pixel_region`` non-special-case branch
-    (src/utils/image_extraction_utils.rs:126-147): ``try_transform_bbox``
-    (4326 → crude meters scaling at center latitude, lines 158-181), then
-    same-CRS pixel math, then ``adjust_region_to_image_bounds``
-    (lines 341-414: fully-outside/zero → centered fallback of
-    clamp(ceil(2r/|pw|), 100, 5000) px, else clip with w/h ≥ 1).
-    This path is *approximate by design* — replicated, not fixed.
-    """
-    is_wgs = source_epsg == 4326
-    center_lat = (miny + maxy) / 2
-    m_lat = F.lit(METERS_PER_DEG_LAT)
-    m_lon = F.lit(METERS_PER_DEG_LAT) * F.cos(F.radians(center_lat))
-    tminx = F.when(is_wgs, minx * m_lon).otherwise(minx)
-    tmaxx = F.when(is_wgs, maxx * m_lon).otherwise(maxx)
-    tminy = F.when(is_wgs, miny * m_lat).otherwise(miny)
-    tmaxy = F.when(is_wgs, maxy * m_lat).otherwise(maxy)
-
-    base = region_same_crs(tminx, tminy, tmaxx, tmaxy,
-                           origin_x, pixel_w, origin_y, pixel_h, img_w, img_h)
-    iw = img_w.cast("long")
-    ih = img_h.cast("long")
-    x, y, w, h = base[0], base[1], base[2], base[3]
-
-    bad = (x >= iw) | (y >= ih) | (w == 0) | (h == 0)
-
-    size = F.when(
-        radius_m.isNull(), F.lit(100).cast("long")
-    ).otherwise(
-        F.greatest(F.lit(100).cast("long"),
-                   F.least(F.lit(5000).cast("long"),
-                           F.ceil(radius_m * 2 / F.abs(pixel_w)))))
-    center_x = (iw / 2).cast("long")
-    center_y = (ih / 2).cast("long")
-    half = (size / 2).cast("long")
-    fb_x = F.greatest(center_x - half, F.lit(0))
-    fb_y = F.greatest(center_y - half, F.lit(0))
-    fb_w = F.least(size, iw - fb_x)
-    fb_h = F.least(size, ih - fb_y)
-
-    cx = F.when(x >= iw, iw - 1).otherwise(x)
-    cy = F.when(y >= ih, ih - 1).otherwise(y)
-    cw = F.greatest(F.when(cx + w > iw, iw - cx).otherwise(w), F.lit(1))
-    ch = F.greatest(F.when(cy + h > ih, ih - cy).otherwise(h), F.lit(1))
-
-    return [
-        F.when(bad, fb_x).otherwise(cx).alias("region_x"),
-        F.when(bad, fb_y).otherwise(cy).alias("region_y"),
-        F.when(bad, fb_w).otherwise(cw).alias("region_w"),
-        F.when(bad, fb_h).otherwise(ch).alias("region_h"),
-    ]
+#: intermediate columns of :func:`region_dispatch_stages`
+REGION_STAGE_COLS = [
+    "_rg_arm", "_rg_iw", "_rg_ih", "_rg_x0", "_rg_y0", "_rg_x1", "_rg_y1",
+    "_rg_px0", "_rg_py0", "_rg_px1", "_rg_py1", "_rg_x", "_rg_y",
+    "_rg_size", "_rg_inb", "_rg_w", "_rg_h", "_rg_fx", "_rg_fy", "_rg_cx",
+    "_rg_cy", "_rg_ok", "_rg_cw", "_rg_ch", "_rg_fw", "_rg_fh"]
 
 
-def region_dispatch(minx: Column, miny: Column, maxx: Column, maxy: Column,
-                    source_epsg: Column, target_epsg: Column,
-                    origin_x: Column, pixel_w: Column,
-                    origin_y: Column, pixel_h: Column,
-                    img_w: Column, img_h: Column,
-                    radius_m: Column) -> list[Column]:
+def region_dispatch_stages(minx: Column, miny: Column, maxx: Column,
+                           maxy: Column, source_epsg: Column,
+                           target_epsg: Column,
+                           origin_x: Column, pixel_w: Column,
+                           origin_y: Column, pixel_h: Column,
+                           img_w: Column, img_h: Column,
+                           radius_m: Column) -> list[list[Column]]:
     """Full ``generic_crs_to_pixel_region`` dispatch
-    (src/utils/image_extraction_utils.rs:104-147): 4326→3857 special case,
-    same-CRS direct, otherwise generic.  One Column per region field.
+    (src/utils/image_extraction_utils.rs:104-147): 4326→3857 special case
+    (G6), same-CRS direct (G5), otherwise crude transform + same-CRS +
+    ``adjust_region_to_image_bounds`` (G7, lines 126-147 and 341-414 —
+    approximate by design, replicated, not fixed).
+
+    Returned as successive narrow projections: apply each list with
+    ``df.select("*", *stage)`` in order, then drop
+    :data:`REGION_STAGE_COLS`; region_x/y/w/h remain.  Each stage reads the
+    previous one's columns by name, so a shared value (the pixel bounds
+    feed the origin, the size, the in-bounds test and the fallback) is one
+    column, not a subtree copied into every consumer — written as one
+    expression per field, the dispatch analyzed to trees of 766 nodes.
+    The arms share one pixel-bounds formula over their projected bbox
+    (inline Mercator, identity, crude meters scaling).
     """
-    merc = region_wgs84_on_mercator(minx, miny, maxx, maxy, origin_x, pixel_w,
-                                    origin_y, pixel_h, img_w, img_h, radius_m)
-    same = region_same_crs(minx, miny, maxx, maxy, origin_x, pixel_w,
-                           origin_y, pixel_h, img_w, img_h)
-    gen = region_generic_crs(minx, miny, maxx, maxy, source_epsg, origin_x,
-                             pixel_w, origin_y, pixel_h, img_w, img_h, radius_m)
-    is_merc_case = (source_epsg == 4326) & (target_epsg == 3857)
-    is_same = source_epsg == target_epsg
-    out = []
-    for i, name in enumerate(["region_x", "region_y", "region_w", "region_h"]):
-        out.append(F.when(is_merc_case, merc[i])
-                    .when(is_same, same[i])
-                    .otherwise(gen[i]).alias(name))
-    return out
+    c = F.col
+    arm, iw, ih = c("_rg_arm"), c("_rg_iw"), c("_rg_ih")
+    x, y, w, h = c("_rg_x"), c("_rg_y"), c("_rg_w"), c("_rg_h")
+    cx, cy, size = c("_rg_cx"), c("_rg_cy"), c("_rg_size")
+    proj = zip([merc_x_inline(minx), merc_y_inline(miny),
+                merc_x_inline(maxx), merc_y_inline(maxy)],
+               [minx, miny, maxx, maxy],
+               _crude_transform(minx, miny, maxx, maxy, source_epsg),
+               ["_rg_x0", "_rg_y0", "_rg_x1", "_rg_y1"])
+    px = [c("_rg_px0"), c("_rg_py0"), c("_rg_px1"), c("_rg_py1")]
+    # G7 bounds adjust: outside or zero-sized → fallback, else clip
+    bad = (x >= iw) | (y >= ih) | (w == 0) | (h == 0)
+    return [
+        # arm: 0 = 4326 bbox on a 3857 raster, 1 = same CRS, 2 = generic
+        [F.when((source_epsg == 4326) & (target_epsg == 3857), 0)
+          .when(source_epsg == target_epsg, 1).otherwise(2).alias("_rg_arm"),
+         img_w.cast("long").alias("_rg_iw"),
+         img_h.cast("long").alias("_rg_ih")],
+        [F.when(arm == 0, m).when(arm == 1, s).otherwise(g).alias(n)
+         for m, s, g, n in proj],
+        [p.alias(n) for p, n in zip(
+            _pixel_bounds(c("_rg_x0"), c("_rg_y0"), c("_rg_x1"), c("_rg_y1"),
+                          origin_x, pixel_w, origin_y, pixel_h),
+            ["_rg_px0", "_rg_py0", "_rg_px1", "_rg_py1"])],
+        [*(v.alias(n) for v, n in zip(_clamped_origin(px[0], px[1], iw, ih),
+                                      ["_rg_x", "_rg_y"])),
+         F.when(arm == 0, _merc_fallback_size(radius_m, pixel_w))
+          .otherwise(_generic_fallback_size(radius_m, pixel_w))
+          .alias("_rg_size"),
+         _merc_in_bounds(*px, iw, ih).alias("_rg_inb")],
+        [*(v.alias(n) for v, n in zip(_clipped_size(*px, x, y, iw, ih),
+                                      ["_rg_w", "_rg_h"])),
+         *(v.alias(n) for v, n in zip(_centered_origin(size, iw, ih),
+                                      ["_rg_fx", "_rg_fy"])),
+         F.when((arm == 2) & (x >= iw), iw - 1).otherwise(x).alias("_rg_cx"),
+         F.when((arm == 2) & (y >= ih), ih - 1).otherwise(y).alias("_rg_cy")],
+        # _rg_ok: keep the clipped region; F.when reads a NULL test as
+        # false, so NULL means "not in bounds" (G6) and "not bad" (G7)
+        [F.when(arm == 0, F.coalesce(c("_rg_inb"), F.lit(False)))
+          .when(arm == 1, F.lit(True))
+          .otherwise(~F.coalesce(bad, F.lit(False))).alias("_rg_ok"),
+         F.when(arm == 2, F.greatest(
+             F.when(cx + w > iw, iw - cx).otherwise(w), F.lit(1)))
+          .otherwise(w).alias("_rg_cw"),
+         F.when(arm == 2, F.greatest(
+             F.when(cy + h > ih, ih - cy).otherwise(h), F.lit(1)))
+          .otherwise(h).alias("_rg_ch"),
+         F.when(arm == 0, F.least(size, iw))
+          .otherwise(F.least(size, iw - c("_rg_fx"))).alias("_rg_fw"),
+         F.when(arm == 0, F.least(size, ih))
+          .otherwise(F.least(size, ih - c("_rg_fy"))).alias("_rg_fh")],
+        [F.when(c("_rg_ok"), c(f"_rg_c{k}")).otherwise(c(f"_rg_f{k}"))
+          .alias(n) for k, n in zip("xywh", _REGION_NAMES)],
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -6,8 +6,8 @@ Distributed re-expression of the reference's
 strip_reader.rs → src/tiff/builders/geo_tags.rs:114-201):
 
 1. **Region resolution** — pure Column expressions
-   (:func:`rasterkit_spark.functions.geo.region_dispatch`), whole-stage
-   codegen, no Python.
+   (:func:`rasterkit_spark.functions.geo.region_dispatch_stages`, applied
+   as successive narrow projections), whole-stage codegen, no Python.
 2. **Tile-key expansion** — each query row explodes into the covered
    ``(media_ref, level, tile_x, tile_y)`` keys (J1/J2; strips are tiles with
    tile_w = image width, so one code path covers both layouts).
@@ -15,22 +15,26 @@ strip_reader.rs → src/tiff/builders/geo_tags.rs:114-201):
    usually tiny → broadcast; at corpus scale both sides are bucketed by
    media_ref (AQE handles residual skew; hot refs can additionally be
    salted — see operators/spatial.py).
-4. **Decode + clip + reassemble** — one ``applyInPandas`` over
-   ``(query_id, media_ref)`` groups running the *same* numpy kernels the
+4. **Decode + clip + reassemble** — the matched rows are hash-partitioned
+   by ``(query_id, media_ref)`` into one partition per core, sorted within
+   each partition, and streamed through one ``mapInPandas`` pass that
+   assembles each run of equal keys with the *same* numpy kernels the
    oracle uses (C1/C2 → W1 → P1), emitting the clipped window bytes, its
-   sha256, and the adjusted geotransform (G9).
+   sha256, and the adjusted geotransform (G9) in batched frames.
 
-Two shuffles total: the tile join (skippable via broadcast) and the group-by
-reassembly.  Everything else is narrow.
+Two shuffles total: the tile join (skippable via broadcast) and the
+assembly exchange.  Everything else is narrow.
 """
 
 from __future__ import annotations
 
 import hashlib
+import operator
 import zlib
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -77,22 +81,39 @@ def _catalog_select(catalog: DataFrame) -> DataFrame:
         "compression", "predictor", spp, *normalized_chunk_cols())
 
 
+#: (SparkContext, {has_radius: stages}) — the region Column lists are
+#: built once per context: building them costs thousands of py4j round
+#: trips, and a Column belongs to the JVM of the context it was made in
+_REGION_STAGES: tuple = (None, {})
+
+
+def _region_stages(has_radius: bool) -> list[list]:
+    global _REGION_STAGES
+    sc = SparkContext._active_spark_context
+    if _REGION_STAGES[0] is not sc:
+        _REGION_STAGES = (sc, {})
+    cache = _REGION_STAGES[1]
+    if has_radius not in cache:
+        c = F.col
+        stages = geo.region_dispatch_stages(
+            c("minx"), c("miny"), c("maxx"), c("maxy"), c("crs"), c("epsg"),
+            c("origin_x"), c("pixel_sx"), c("origin_y"), -c("pixel_sy"),
+            c("width"), c("height"),
+            c("radius_m") if has_radius else F.lit(None).cast("double"))
+        stages.append(geo.adjusted_tiepoint_cols(
+            c("region_x"), c("region_y"), c("origin_x"), c("origin_y"),
+            c("pixel_sx"), c("pixel_sy")))
+        cache[has_radius] = stages
+    return cache[has_radius]
+
+
 def _resolve_regions_joined(q: DataFrame, has_radius: bool) -> DataFrame:
     """Region + adjusted-tiepoint columns over an already query×catalog
-    joined frame (the geotransform columns may be level-scaled)."""
-    region = geo.region_dispatch(
-        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-        F.col("crs"), F.col("epsg"),
-        F.col("origin_x"), F.col("pixel_sx"),
-        F.col("origin_y"), -F.col("pixel_sy"),
-        F.col("width"), F.col("height"),
-        F.col("radius_m") if has_radius else F.lit(None).cast("double"))
-    out = q.select("*", *region)
-    tie = geo.adjusted_tiepoint_cols(
-        F.col("region_x"), F.col("region_y"),
-        F.col("origin_x"), F.col("origin_y"),
-        F.col("pixel_sx"), F.col("pixel_sy"))
-    return out.select("*", *tie)
+    joined frame (the geotransform columns may be level-scaled;
+    pixel_h = -pixel_sy, G8)."""
+    for stage in _region_stages(has_radius):
+        q = q.select("*", *stage)
+    return q.drop(*geo.REGION_STAGE_COLS)
 
 
 def resolve_regions(queries: DataFrame, catalog: DataFrame) -> DataFrame:
@@ -104,7 +125,6 @@ def resolve_regions(queries: DataFrame, catalog: DataFrame) -> DataFrame:
     """
     cat = _catalog_select(catalog)
     q = queries.join(F.broadcast(cat), "media_ref", "inner")
-    # geotransform: pixel_h = -pixel_sy (G8)
     return _resolve_regions_joined(q, "radius_m" in queries.columns)
 
 
@@ -179,194 +199,157 @@ def _decode_chunk_cached(blob: bytes, comp: int, pred: int, cw: int,
     return chunk
 
 
-def _assemble(pdf: pd.DataFrame, emit_window: bool = True) -> pd.DataFrame:
-    """Per-(query_id, media_ref) group: decode every chunk through the shared
-    kernels and clip into the output window (C→W1→P1).
+#: output batching bounds for the streaming passes: emit one pandas frame
+#: per ~this many records / payload bytes — per-window 1-row DataFrames
+#: (plus a groupby+concat per window) were measured round 6 as ~60% of
+#: the whole big-raster assembly stage
+_ASSEMBLE_OUT_ROWS = 256
+_ASSEMBLE_OUT_BYTES = 32 * 1024 * 1024
 
-    ``emit_window=False`` still assembles the full window (the sha256
-    proves it) but returns a null ``window`` column — the verification /
-    benchmarking mode, where shipping the pixel payload back through
-    Arrow would only measure serialization (real pipelines write windows
-    executor-side via a sink)."""
-    first = pdf.iloc[0]
+
+def sorted_by_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Hash-partition ``df`` by ``keys`` into one partition per core and sort
+    each partition by them — the input :func:`key_runs` needs.
+
+    The count is explicit (REPARTITION_BY_NUM, exempt from AQE coalescing):
+    the rows are small in BYTES (compressed blobs, or key rows) but costly
+    downstream, and AQE's byte-sized coalescing squeezed whole assembly
+    stages onto ONE task.  One per core, not more: every Python task pays a
+    fixed set-up (Spark 4.1's worker runs ``importlib.invalidate_caches()``
+    per task, which re-reads pyspark.zip's directory once per zip
+    importer), so each extra wave of tasks adds that cost to the wall.  On
+    a 4-core host an identity ``mapInPandas`` over 4,000 tiny rows took
+    0.33 s as 4 tasks and 1.03 s as 12; the former ``3 × cores`` count
+    paid it in three waves.  Measure before raising the count."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *keys).sortWithinPartitions(*keys)
+
+
+def key_runs(pdf_iter, keys: list[str]):
+    """Runs of consecutive rows with equal ``keys`` over a ``mapInPandas``
+    batch iterator sorted by them (:func:`sorted_by_keys`); a run may span
+    Arrow batches.  Yields each run as a list of row namedtuples — plain
+    tuples, no per-group pandas frame."""
+    key_of = operator.attrgetter(*keys)
+    run, cur = [], None
+    for pdf in pdf_iter:
+        for row in pdf.itertuples(index=False):
+            k = key_of(row)
+            if run and k != cur:
+                yield run
+                run = []
+            cur = k
+            run.append(row)
+    if run:
+        yield run
+
+
+def batched_frames(records, payload: str):
+    """Pack dict records (None = no output) into pandas frames of at most
+    ``_ASSEMBLE_OUT_ROWS`` rows, cut as soon as their ``payload`` bytes
+    reach ``_ASSEMBLE_OUT_BYTES``.  The bounds are tested after every
+    record, so a frame holds at most the byte bound plus one record."""
+    out, nbytes = [], 0
+    for rec in records:
+        if rec is None:
+            continue
+        out.append(rec)
+        nbytes += len(rec[payload] or b"")
+        if len(out) >= _ASSEMBLE_OUT_ROWS or nbytes >= _ASSEMBLE_OUT_BYTES:
+            yield pd.DataFrame(out)
+            out, nbytes = [], 0
+    if out:
+        yield pd.DataFrame(out)
+
+
+_WINDOW_KEY = ["query_id", "media_ref"]
+_ASSEMBLE_COLS = ["query_id", "media_ref", "level", "region_x", "region_y",
+                  "region_w", "region_h", "chunk_w", "chunk_h",
+                  "compression", "predictor", "samples_per_pixel", "tile_x",
+                  "tile_y", "new_origin_x", "new_origin_y"]
+
+
+def _assemble_window(rows: list, emit_window: bool, tile_map: dict | None,
+                     memo: dict | None) -> dict | None:
+    """One (query_id, media_ref) run: decode every chunk through the shared
+    kernels and clip it into the output window (C→W1→P1).
+
+    With ``tile_map`` the rows are keys only and the blobs come from the
+    map; keys with no tile (OOB covers, shallow pyramids) are dropped —
+    inner-join semantics — and a run left empty yields no window.
+    ``memo`` is then a per-task decoded-chunk front memo keyed by tile
+    coords — valid because the map pins one blob per key, so repeats skip
+    the global cache's per-call blob crc32 (measured: most of the decode
+    phase)."""
+    first = rows[0]
+    media = first.media_ref
+    chunks = []
+    for row in rows:
+        key = (media, int(row.level), int(row.tile_x), int(row.tile_y))
+        blob = row.blob if tile_map is None else tile_map.get(key)
+        if blob is not None:
+            chunks.append((key, blob))
+    if not chunks:
+        return None
     rx, ry = int(first.region_x), int(first.region_y)
     rw, rh = int(first.region_w), int(first.region_h)
     cw, ch = int(first.chunk_w), int(first.chunk_h)
     comp, pred = int(first.compression), int(first.predictor)
-    spp = int(getattr(first, "samples_per_pixel", 1) or 1)
-    shape = (rh, rw) if spp == 1 else (rh, rw, spp)
-    out = np.zeros(shape, dtype=np.uint8)
-    for row in pdf.itertuples():
-        chunk = _decode_chunk_cached(bytes(row.blob), comp, pred, cw, ch,
-                                     spp, first.media_ref,
-                                     int(row.tile_x), int(row.tile_y),
-                                     int(getattr(row, "level", 0) or 0))
-        K.clip_chunk_into(out, chunk, cw, ch,
-                          int(row.tile_x) * cw, int(row.tile_y) * ch,
+    spp = int(first.samples_per_pixel or 1)
+    out = np.zeros((rh, rw) if spp == 1 else (rh, rw, spp), dtype=np.uint8)
+    for key, blob in chunks:
+        _, lvl, tx, ty = key
+        chunk = memo.get(key) if memo is not None else None
+        if chunk is None:
+            chunk = _decode_chunk_cached(bytes(blob), comp, pred, cw, ch,
+                                         spp, media, tx, ty, lvl)
+            if memo is not None:
+                memo[key] = chunk
+                if len(memo) > _DECODE_CACHE_CAP:
+                    memo.pop(next(iter(memo)))
+        K.clip_chunk_into(out, chunk, cw, ch, tx * cw, ty * ch,
                           rx, ry, rw, rh, spp)
     buf = out.tobytes()
-    return pd.DataFrame([{
+    return {
         "query_id": first.query_id,
-        "media_ref": first.media_ref,
+        "media_ref": media,
         "region_x": rx, "region_y": ry, "region_w": rw, "region_h": rh,
         "window": bytearray(buf) if emit_window else None,
         "window_sha256": hashlib.sha256(buf).hexdigest(),
         "new_origin_x": float(first.new_origin_x),
         "new_origin_y": float(first.new_origin_y),
         "samples_per_pixel": spp,
-    }])
+    }
+
+
+def _assemble_stream(pdf_iter, emit_window: bool = True,
+                     tile_map: dict | None = None):
+    """``mapInPandas`` window assembly over rows partitioned and sorted by
+    (query_id, media_ref): one window per key run, emitted in batched
+    frames.  ``emit_window=False`` still assembles the full window (the
+    sha256 proves it) but returns a null ``window`` column — the
+    verification / benchmarking mode, where shipping the pixel payload
+    back through Arrow would only measure serialization (real pipelines
+    write windows executor-side via a sink).  ``tile_map``: see
+    :func:`_assemble_window`."""
+    memo = {} if tile_map is not None else None
+    yield from batched_frames(
+        (_assemble_window(rows, emit_window, tile_map, memo)
+         for rows in key_runs(pdf_iter, _WINDOW_KEY)), "window")
 
 
 def decode_and_clip(joined: DataFrame, emit_window: bool = True) -> DataFrame:
-    """Group chunks back into clipped windows (Arrow-batched).
-
-    The group exchange is pinned to an explicit partition count
-    (REPARTITION_BY_NUM — exempt from AQE coalescing): the matched rows
-    are small in BYTES (compressed blobs) but huge in downstream decode/
-    assembly cost, and AQE's byte-sized coalescing squeezed the whole
-    assembly stage onto ONE task (observed as a (0+1)/1 stage in the
-    round-6 bench).  applyInPandas' required ClusteredDistribution on the
-    group keys is satisfied by this hash partitioning, so no second
-    exchange is added."""
-    cols = ["query_id", "media_ref", "level", "region_x", "region_y",
-            "region_w", "region_h", "chunk_w", "chunk_h", "compression",
-            "predictor", "samples_per_pixel", "tile_x", "tile_y", "blob",
-            "new_origin_x", "new_origin_y"]
-    n_parts = joined.sparkSession.sparkContext.defaultParallelism * 3
-    return (joined.select(*cols)
-            .repartition(n_parts, "query_id", "media_ref")
-            .groupBy("query_id", "media_ref")
-            .applyInPandas(lambda pdf: _assemble(pdf, emit_window),
-                           WINDOW_SCHEMA))
-
-
-#: output batching bounds for the streaming assembly: emit one pandas
-#: frame per ~this many windows / payload bytes — per-window 1-row
-#: DataFrames (plus a groupby+concat per window) were measured round 6
-#: as ~60% of the whole big-raster assembly stage
-_ASSEMBLE_OUT_ROWS = 256
-_ASSEMBLE_OUT_BYTES = 32 * 1024 * 1024
-
-
-def _assemble_stream(pdf_iter, emit_window: bool = True, blob_of=None,
-                     chunk_memo: dict | None = None):
-    """mapInPandas streaming assembly: rows arrive sorted by
-    (query_id, media_ref) within the partition; iterate plain row tuples
-    (no per-batch groupby, no per-window concat), assemble each window
-    straight from the accumulated (tile, blob) list when its key closes,
-    and emit output in BATCHED frames (_ASSEMBLE_OUT_ROWS/_BYTES).
-
-    ``blob_of(row)`` (lookup path) fetches the blob for a key row —
-    returning None drops the row (OOB covers: inner-join semantics);
-    ``blob_of=None`` reads the row's own ``blob`` column.
-    ``chunk_memo`` (lookup path) is a per-task decoded-chunk front memo
-    keyed by tile coords — valid there because the broadcast tile map
-    pins one blob per key, so repeated rows skip the global cache's
-    per-call blob crc32."""
-    out_rows: list = []
-    out_bytes = 0
-    cur_key = None
-    cur_meta = None
-    chunks: list = []
-
-    def assemble() -> None:
-        nonlocal out_bytes
-        first = cur_meta
-        rx, ry = int(first.region_x), int(first.region_y)
-        rw, rh = int(first.region_w), int(first.region_h)
-        cw, ch = int(first.chunk_w), int(first.chunk_h)
-        comp, pred = int(first.compression), int(first.predictor)
-        spp = int(getattr(first, "samples_per_pixel", 1) or 1)
-        shape = (rh, rw) if spp == 1 else (rh, rw, spp)
-        out = np.zeros(shape, dtype=np.uint8)
-        for tx, ty, lvl, blob in chunks:
-            chunk = None
-            if chunk_memo is not None:
-                chunk = chunk_memo.get((first.media_ref, lvl, tx, ty))
-            if chunk is None:
-                chunk = _decode_chunk_cached(bytes(blob), comp, pred, cw,
-                                             ch, spp, first.media_ref,
-                                             tx, ty, lvl)
-                if chunk_memo is not None:
-                    chunk_memo[(first.media_ref, lvl, tx, ty)] = chunk
-                    if len(chunk_memo) > _DECODE_CACHE_CAP:
-                        chunk_memo.pop(next(iter(chunk_memo)))
-            K.clip_chunk_into(out, chunk, cw, ch, tx * cw, ty * ch,
-                              rx, ry, rw, rh, spp)
-        buf = out.tobytes()
-        out_rows.append({
-            "query_id": first.query_id,
-            "media_ref": first.media_ref,
-            "region_x": rx, "region_y": ry, "region_w": rw, "region_h": rh,
-            "window": bytearray(buf) if emit_window else None,
-            "window_sha256": hashlib.sha256(buf).hexdigest(),
-            "new_origin_x": float(first.new_origin_x),
-            "new_origin_y": float(first.new_origin_y),
-            "samples_per_pixel": spp,
-        })
-        out_bytes += len(buf) if emit_window else 64
-
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        for row in pdf.itertuples():
-            if blob_of is not None:
-                blob = blob_of(row)
-                if blob is None:
-                    continue
-            else:
-                blob = row.blob
-            key = (row.query_id, row.media_ref)
-            if key != cur_key:
-                if cur_key is not None and chunks:
-                    assemble()
-                cur_key, cur_meta = key, row
-                chunks = []
-            chunks.append((int(row.tile_x), int(row.tile_y),
-                           int(getattr(row, "level", 0) or 0), blob))
-        if out_rows and (len(out_rows) >= _ASSEMBLE_OUT_ROWS
-                         or out_bytes >= _ASSEMBLE_OUT_BYTES):
-            yield pd.DataFrame(out_rows)
-            out_rows, out_bytes = [], 0
-    if cur_key is not None and chunks:
-        assemble()
-    if out_rows:
-        yield pd.DataFrame(out_rows)
+    """Reassemble the matched chunks into clipped windows: one exchange of
+    the matched rows (:func:`sorted_by_keys` on (query_id, media_ref)),
+    then one streaming ``mapInPandas`` pass (:func:`_assemble_stream`)."""
+    rows = sorted_by_keys(joined.select(*_ASSEMBLE_COLS, "blob"), _WINDOW_KEY)
+    return rows.mapInPandas(lambda it: _assemble_stream(it, emit_window),
+                            WINDOW_SCHEMA)
 
 
 #: blob-bytes ceiling for the python-side tile broadcast; above it the
 #: JVM-broadcast join path is used instead (still no blob shuffle)
 MAX_PY_TILE_BROADCAST = 512 * 1024 * 1024
-
-
-def _assemble_stream_lookup(pdf_iter, tile_map, emit_window: bool = True):
-    """Streaming assembly over KEY rows only: blobs come from the
-    python-broadcast tile map (one copy per executor), never through
-    Arrow per matched row.  Keys with no tile (OOB covers, shallow
-    pyramids) are dropped — the inner-join semantics."""
-
-    def blob_of(row):
-        return tile_map.get((row.media_ref, int(row.level),
-                             int(row.tile_x), int(row.tile_y)))
-
-    # per-task decoded-chunk memo: the broadcast map pins one blob per
-    # tile key, so repeat decodes within the task skip the global
-    # cache's per-call blob crc32 (measured: most of the decode phase)
-    yield from _assemble_stream(pdf_iter, emit_window, blob_of=blob_of,
-                                chunk_memo={})
-
-
-def decode_and_clip_mapside(joined_sorted: DataFrame,
-                            emit_window: bool = True) -> DataFrame:
-    """Map-side window assembly — requires rows already partitioned AND
-    sorted by (query_id, media_ref) (the broadcast-tiles regime below
-    guarantees it).  No group shuffle: the blobs never move."""
-    cols = ["query_id", "media_ref", "level", "region_x", "region_y",
-            "region_w", "region_h", "chunk_w", "chunk_h", "compression",
-            "predictor", "samples_per_pixel", "tile_x", "tile_y", "blob",
-            "new_origin_x", "new_origin_y"]
-    return joined_sorted.select(*cols).mapInPandas(
-        lambda it: _assemble_stream(it, emit_window), WINDOW_SCHEMA)
 
 
 def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
@@ -379,15 +362,15 @@ def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
     Two physical strategies, picked by which side is small:
 
     - default (``broadcast_keys``): broadcast the expanded query keys,
-      stream the big tile table, then ONE group shuffle of the matched
-      blobs into per-(query, media) assembly — the 100-TB regime, where
-      tiles dwarf every other side.
+      stream the big tile table, then ONE shuffle of the matched blobs
+      into the sorted per-(query, media) assembly — the 100-TB regime,
+      where tiles dwarf every other side.
     - ``broadcast_tiles=True``: broadcast the tile table and keep the
       blobs where the query keys already live — the matched blobs NEVER
       shuffle (the group shuffle of decoded-size payloads is the
-      non-scaling term when queries ≫ catalog).  Keys are repartitioned
-      by query (tiny rows), the broadcast join is narrow, and assembly
-      streams map-side over the sorted partition.
+      non-scaling term when queries ≫ catalog).  Only the key rows (tiny)
+      are repartitioned and sorted, and assembly looks the blobs up from
+      a python-side broadcast of the tile table.
 
     ``level`` selects an overview: regions resolve against the LEVEL's
     geotransform/dims/chunk geometry (half-size per level), matching a
@@ -414,14 +397,8 @@ def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
             F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("b")
         ).collect()[0]["b"]
         if total <= MAX_PY_TILE_BROADCAST:
-            # explicit partition count: the key rows are tiny (no blobs
-            # yet), so AQE would coalesce the shuffle to ~1 partition by
-            # byte size — but the DOWNSTREAM per-row cost (decode+assembly)
-            # is huge, and a coalesced shuffle serializes the whole decode
-            # onto one task
-            n_parts = keys.sparkSession.sparkContext.defaultParallelism * 3
-            k = keys.repartition(n_parts, "query_id") \
-                .sortWithinPartitions("query_id", "media_ref")
+            # key rows only (no blobs): partitioned like decode_and_clip
+            k = sorted_by_keys(keys.select(*_ASSEMBLE_COLS), _WINDOW_KEY)
             t_rows = tiles.select("media_ref", "level", "tile_x", "tile_y",
                                   "blob").collect()
             # python-side broadcast: the tile bytes cross the wire ONCE
@@ -433,14 +410,8 @@ def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
             bc = keys.sparkSession.sparkContext.broadcast(
                 {(r["media_ref"], int(r["level"]), int(r["tile_x"]),
                   int(r["tile_y"])): bytes(r["blob"]) for r in t_rows})
-            cols = ["query_id", "media_ref", "level", "region_x",
-                    "region_y", "region_w", "region_h", "chunk_w",
-                    "chunk_h", "compression", "predictor",
-                    "samples_per_pixel", "tile_x", "tile_y",
-                    "new_origin_x", "new_origin_y"]
-            return k.select(*cols).mapInPandas(
-                lambda it: _assemble_stream_lookup(it, bc.value,
-                                                   emit_window),
+            return k.mapInPandas(
+                lambda it: _assemble_stream(it, emit_window, bc.value),
                 WINDOW_SCHEMA)
         # over-ceiling tile table: a JVM broadcast of >512 MB of blobs is
         # itself a driver/executor memory hazard and Spark hard-caps any

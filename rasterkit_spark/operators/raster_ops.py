@@ -10,12 +10,12 @@
 - :func:`grayscale_minmax` — A1/A2 as partial (per-chunk numpy) + final
   (groupBy) aggregation (src/utils/tiff_extraction_utils.rs:40-94).
 - :func:`build_pyramid` — A5 overview generation (the reference only reads
-  overviews, src/tiff/types.rs:35-45): groupBy parent-tile 2×2 box reduce.
+  overviews, src/tiff/types.rs:35-45): parent-tile 2×2 box reduce.
 - :func:`analyze` — §3.2 metadata describe with code→name translators
   (src/utils/tiff_code_translators.rs:10-73).
 
 All pixel work runs through the shared kernels inside Arrow-batched
-``mapInPandas``/``applyInPandas`` — never per-row Python.
+``mapInPandas`` — never per-row Python.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from .. import kernels as K
+from . import extract as EX
 
 
 def window_2d(row) -> np.ndarray:
@@ -378,11 +379,12 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
     """Generate level ``source_level+1`` chunk rows by 2×2 box-reduction.
 
     Each parent chunk (tx//2, ty//2) gathers its ≤4 source chunks (one
-    groupBy = one shuffle per level), crops storage padding to the true
-    image bounds, box-reduces (kernels.box_reduce_2x2 — floor average,
-    trailing odd row/col dropped), then re-encodes with the raster's own
-    predictor + compression so the output rows are indistinguishable from
-    stored overview tiles."""
+    shuffle per level, :func:`extract.sorted_by_keys` on the parent key,
+    then one streaming pass over its key runs), crops storage padding to
+    the true image bounds, box-reduces (kernels.box_reduce_2x2 — floor
+    average, trailing odd row/col dropped), then re-encodes with the
+    raster's own predictor + compression so the output rows are
+    indistinguishable from stored overview tiles."""
     meta = catalog.select("media_ref", "width", "height", "compression",
                           "predictor", "tile_w", "tile_h", "rows_per_strip")
     # chunk dims at source/target level (columns, so the parent-key mapping
@@ -422,8 +424,8 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
     ])
     tgt_level = source_level + 1
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
+    def assemble(rows: list) -> dict | None:
+        first = rows[0]
         lvl = source_level
         w_src = int(first.width) >> lvl
         h_src = int(first.height) >> lvl
@@ -444,7 +446,7 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
         # canvas over the source pixels feeding this parent chunk
         canvas = np.zeros((2 * ch_t, 2 * cw_t), dtype=np.uint8)
         base_x, base_y = ptx * 2 * cw_t, pty * 2 * ch_t
-        for row in pdf.itertuples():
+        for row in rows:
             chunk = K.decode_chunk(bytes(row.blob), int(first.compression),
                                    int(first.predictor), cw_s, ch_s)
             K.clip_chunk_into(canvas, chunk, cw_s, ch_s,
@@ -458,7 +460,7 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
         out_w = max(0, min(cw_t, w_tgt - ptx * cw_t))
         out_h = max(0, min(ch_t, h_tgt - pty * ch_t))
         if out_w == 0 or out_h == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
+            return None
         reduced = reduced[:out_h, :out_w]
         if tiled:  # tiles are stored full-size, zero-padded
             store = np.zeros((ch_t, cw_t), dtype=np.uint8)
@@ -472,14 +474,21 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
             flat = K.apply_horizontal_predictor_encode(flat, enc_w, enc_h)
         blob = K.compress(bytes(flat), int(first.compression))
         across_t = (w_tgt + cw_t - 1) // cw_t
-        return pd.DataFrame([{
+        return {
             "media_ref": first.media_ref, "level": tgt_level,
             "tile_x": ptx, "tile_y": pty,
             "tile_idx": pty * across_t + ptx,
-            "blob": bytearray(blob), "byte_count": len(blob)}])
+            "blob": bytearray(blob), "byte_count": len(blob)}
 
-    return (src.groupBy("media_ref", "ptx", "pty")
-            .applyInPandas(assemble, out_schema))
+    def parents(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        runs = EX.key_runs(it, keys)
+        yield from EX.batched_frames(map(assemble, runs), "blob")
+
+    keys = ["media_ref", "ptx", "pty"]
+    rows = src.select(*keys, "tile_x", "tile_y", "blob", "width", "height",
+                      "compression", "predictor", "tile_w", "tile_h",
+                      "rows_per_strip")
+    return EX.sorted_by_keys(rows, keys).mapInPandas(parents, out_schema)
 
 
 # ---------------------------------------------------------------------------

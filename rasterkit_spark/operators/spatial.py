@@ -458,9 +458,9 @@ _ZONAL_PARTIAL_SCHEMA = StructType([
 def _zonal_partials_lookup(pdf_iter, tile_map):
     """Partials over KEY rows only: blobs come from the python-broadcast
     tile map (one copy per executor), never through Arrow per matched
-    row — the zonal mirror of extract._assemble_stream_lookup.  Keys
-    with no tile (OOB covers) are dropped: inner-join semantics, and the
-    caller's left join restores the pair with zmin/zmax=-1.
+    row — the zonal mirror of extract._assemble_stream's tile-map path.
+    Keys with no tile (OOB covers) are dropped: inner-join semantics, and
+    the caller's left join restores the pair with zmin/zmax=-1.
 
     The DECODED chunk is fetched by TILE KEY through a per-task memo —
     the blob bytes are touched once per (task, tile), never per row.

@@ -8,6 +8,7 @@ import pytest
 
 from rasterkit_spark.fixtures import corpus as CP
 from rasterkit_spark.operators import extract as EX
+from rasterkit_spark.operators import raster_ops as RO
 
 
 @pytest.fixture(scope="module")
@@ -56,11 +57,58 @@ def test_region_math_stays_jvm_side(spark, parquet_tables):
     assert "FlatMapGroupsInPandas" not in plan
 
 
+def _max_expression_nodes(df) -> int:
+    """Largest expression tree in the analyzed plan, in nodes (one
+    ``treeString()`` line per node)."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    best, todo = 0, [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        for e in seq(node.expressions()):
+            best = max(best, len(e.treeString().splitlines()))
+        todo.extend(seq(node.children()))
+    return best
+
+
+@pytest.mark.parametrize("with_radius", [True, False])
+def test_region_expressions_stay_small(spark, parquet_tables, with_radius):
+    """The region dispatch is staged through narrow projections; written as
+    one expression per field it analyzed to trees of 766 nodes, and the
+    driver paid for building and analyzing them on every call."""
+    q = parquet_tables["queries_bbox"]
+    if not with_radius:
+        q = q.drop("radius_m")
+    regions = EX.resolve_regions(q, parquet_tables["media_catalog"])
+    assert _max_expression_nodes(regions) <= 64
+
+
+def _assert_one_streaming_pass(spark, df, keys):
+    """Exactly one Python stage — a MapInPandas over one exchange that
+    pins one partition per core by ``keys`` (REPARTITION_BY_NUM, which AQE
+    never coalesces) — and no grouped-map stage."""
+    plan = _formatted_plan(spark, df)
+    # formatted mode prints each operator twice: tree + detail → count
+    # distinct ids
+    assert len(set(re.findall(r"\bMapInPandas \((\d+)\)", plan))) == 1
+    assert "FlatMapGroupsInPandas" not in plan
+    exchanges = re.findall(r"Arguments: hashpartitioning\(([^)]*)\), (\w+)",
+                           plan)
+    assert len(exchanges) == 1, exchanges
+    args, mode = exchanges[0]
+    *cols, n = (a.split("#")[0] for a in args.split(", "))
+    assert (cols, int(n), mode) == (
+        keys, spark.sparkContext.defaultParallelism, "REPARTITION_BY_NUM")
+
+
 def test_decode_is_single_grouped_pandas_stage(spark, parquet_tables):
     t = parquet_tables
     out = EX.extract(t["queries_bbox"], t["media_catalog"], t["tiles"])
-    plan = _formatted_plan(spark, out)
-    # exactly one Python stage: the grouped decode+clip (formatted mode
-    # prints each operator twice: tree + detail → count distinct ids)
-    ids = set(re.findall(r"FlatMapGroupsInPandas \((\d+)\)", plan))
-    assert len(ids) == 1
+    _assert_one_streaming_pass(spark, out, ["query_id", "media_ref"])
+
+
+def test_pyramid_is_single_streaming_pass(spark, parquet_tables):
+    t = parquet_tables
+    out = RO.build_pyramid(t["tiles"], t["media_catalog"], 0)
+    _assert_one_streaming_pass(spark, out, ["media_ref", "ptx", "pty"])
