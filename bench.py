@@ -445,8 +445,9 @@ def run_benchmarks(spark, sf_dir: str, big: bool | None = None,
           units=n_docs)
 
     # cluster resolution over a PRE-materialized pair graph (cached +
-    # counted outside the timer) so the bench isolates the iterative
-    # large-star/small-star rounds, not a re-run of the signature stage
+    # counted outside the timer) so the bench isolates connected
+    # components (star rounds while the edge set is large, then the
+    # driver union-find) and labeling, not a re-run of the signature stage
     pair_graph = DD.simhash_pairs(amplified, max_hamming=3).cache()
     n_pairs = pair_graph.count()
     bench("dup_clusters",

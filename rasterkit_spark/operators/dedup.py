@@ -14,14 +14,21 @@ Scale notes (10¹²-doc design point):
   LSH stages only affect recall, never precision;
 - all joins are equi-joins on hashed keys → well-distributed by default,
   with AQE skew handling on; pair generation uses id< id ordering to halve
-  the shuffle volume.
+  the shuffle volume;
+- dup-cluster resolution runs large-star/small-star rounds only while the
+  live edge set is larger than ``CC_DRIVER_EDGE_CAP``; the edge count is
+  observed on each round's eager checkpoint (no extra job), and a graph
+  under the cap is finished by a union-find on the driver, so a small dup
+  graph costs one checkpoint and one collect instead of two jobs a round.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
+from pyspark.sql.types import (BinaryType, IntegralType, StringType,
+                               StructField, StructType)
 
 MERSENNE_61 = (1 << 61) - 1
 
@@ -29,6 +36,24 @@ MERSENNE_61 = (1 << 61) - 1
 #: gram self-join (~24 B/row → ≈200 MB built relation, the guide's
 #: "few hundred MB is fine" band); above it the join sort-merges
 SPANS_BROADCAST_ANCHOR_CAP = 8_000_000
+
+#: live-edge ceiling under which connected_components stops the star
+#: rounds and finishes on the driver.  Measured on a 4-core host: a
+#: driver finish of 1M edges took ~4 s of Row collect plus 2.7 s of
+#: union-find against 7.9 s for ONE star round; of 100k edges 0.2 s
+#: (Arrow toPandas) plus 0.2 s against 3.0 s.  1M (long, long) edges are
+#: ~16 MB of Arrow on the driver.
+CC_DRIVER_EDGE_CAP = 1_000_000
+
+
+def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint plus its row count.  The count is an
+    Observation riding the checkpoint's own job, so it costs no job of its
+    own (a separate ``count()`` is one more job over the block)."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")) \
+        .localCheckpoint(eager=True)
+    return df, obs.get["n"]
 
 
 def md5_int(c: Column) -> Column:
@@ -150,49 +175,102 @@ def _is_min_star_forest(e: DataFrame) -> bool:
     return bad.isEmpty()
 
 
+def _driver_components(e: DataFrame) -> DataFrame:
+    """(node, component) of a small edge set, finished on the driver:
+    Arrow-collect the edges, then union-find over the sorted distinct ids
+    where the smaller root always wins, so every root is its component's
+    min id.  Callers guarantee the ids' Python order is Spark's order."""
+    pdf = e.toPandas()
+    ends = np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()])
+    nodes, idx = np.unique(ends, return_inverse=True)
+    parent = list(range(len(nodes)))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    half = len(pdf)
+    for a, b in zip(idx[:half].tolist(), idx[half:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    root = np.asarray(parent, dtype=np.int64)
+    while True:  # pointer jumping: every node straight to its root
+        nxt = root[root]
+        if np.array_equal(nxt, root):
+            break
+        root = nxt
+    t = e.schema["u"].dataType
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "component": nodes[root]}),
+        StructType([StructField("node", t), StructField("component", t)]))
+
+
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 25) -> DataFrame:
     """Connected components of an undirected dup-pair graph →
     (node, component) with component = min node id of the component.
 
-    Alternating large-star/small-star (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") — O(log² n) rounds, every round
-    two equi-join shuffles on node id, no per-task neighborhood
-    materialization, so it survives the 100-TB dup graph (power-law
-    degrees: boilerplate pages duplicated 10⁶×).  Each round is
-    localCheckpoint-ed: iterative self-referencing plans otherwise grow an
-    unbounded lineage that re-executes from round 0 on any recompute.
+    Two arms, picked from the live edge count, which
+    :func:`_counted_checkpoint` observes on every eager checkpoint at no
+    extra job:
 
-    Convergence: stop when the round's output IS the fixed point — a
-    two-level min-star forest, detected structurally by ONE aggregation
-    (:func:`_is_min_star_forest`; exact, not an aggregate signature like
-    sum(u)/sum(v), which can collide between different edge sets and
-    would break silently).  This fires one round earlier than the old
-    compare-to-previous-round check (which needed a confirmation round
-    re-producing the identical set, plus an ``exceptAll`` pass).  Raises
-    after ``max_iter`` rounds — for n nodes log₂²(n) rounds suffice, so
-    25 covers any physically storable graph.
+    - *star rounds*, while the edge set is larger than
+      ``CC_DRIVER_EDGE_CAP``: alternating large-star/small-star (Kiveris
+      et al., "Connected Components in MapReduce and Beyond") —
+      O(log² n) rounds, every round two equi-join shuffles on node id, no
+      per-task neighborhood materialization, so it survives the 100-TB
+      dup graph (power-law degrees: boilerplate pages duplicated 10⁶×).
+      Each round is localCheckpoint-ed: iterative self-referencing plans
+      otherwise grow an unbounded lineage that re-executes from round 0
+      on any recompute.
+    - *driver finish*, as soon as the entry edge set or a round's output
+      has at most ``CC_DRIVER_EDGE_CAP`` edges: collect them and run a
+      min-labelled union-find on the driver (:func:`_driver_components`).
+      On a graph that fits in the driver every star round is pure job
+      and stage latency.  Only for ids whose Python order is Spark's
+      order — integral, string (UTF-8 byte order is code-point order)
+      and binary — so the driver's min is the min the rounds would pick;
+      floating-point ids (NaN, −0.0) and other types always take the
+      rounds.
 
-    Ids keep their NATIVE type (long, string, …) — the algorithm only
-    needs the column's total order, and a silent cast would turn string
-    ids into NULLs and an empty (not failed) result.
+    Convergence of the rounds: stop when a round's output IS the fixed
+    point — a two-level min-star forest, detected structurally by ONE
+    aggregation (:func:`_is_min_star_forest`; exact, not an aggregate
+    signature like sum(u)/sum(v), which can collide between different
+    edge sets and would break silently).  The check runs on round outputs
+    only, never on the entry edge set: that set is not oriented u > v, and
+    a lone edge (6, 7) passes the predicate there and would be labelled 7.
+    Raises after ``max_iter`` rounds — for n nodes log₂²(n) rounds
+    suffice, so 25 covers any physically storable graph.
+
+    Ids keep their NATIVE type (long, string, …) in both arms — the
+    algorithm only needs the column's total order, and a silent cast
+    would turn string ids into NULLs and an empty (not failed) result.
     """
     e = (pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u") != F.col("v"))
          .dropDuplicates(["u", "v"]))
-    e = e.localCheckpoint(eager=True)
+    t = e.schema["u"].dataType
+    driver_ok = t == e.schema["v"].dataType and (
+        isinstance(t, (IntegralType, BinaryType)) or t == StringType())
+    e, n = _counted_checkpoint(e)
     # exactly ONE alternation round per checkpoint: each star references
     # its input ~3× (the union's two sides + the min join-back), so an
     # un-materialized previous round would re-execute several times
     # inside the next one — batching two rounds per checkpoint was tried
     # round 6 and measured SLOWER for exactly that reason
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        if _is_min_star_forest(e):
+    for rnd in range(max_iter + 1):
+        if driver_ok and n <= CC_DRIVER_EDGE_CAP:
+            return _driver_components(e)
+        if rnd and _is_min_star_forest(e):
             break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds")
+        if rnd == max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds")
+        e, n = _counted_checkpoint(_small_star(_large_star(e)))
     # converged star forest: every edge is (member, component-min)
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node"),
@@ -283,11 +361,10 @@ def shared_span_pairs(docs: DataFrame, min_len: int = 40,
     # with one copy shipped as a broadcast that dies at the 8 GB cap at
     # corpus scale).  After the checkpoint both sides read the same
     # ~24 B/row (id, pos, g) blocks; the block is freed by the
-    # ContextCleaner on GC.
-    grams = grams.localCheckpoint(eager=True)
-    # exact anchor count: one cheap job over the checkpoint block counts
-    # (pre-df-cap upper bound), driving the join strategy below
-    n_anchors_total = grams.count()
+    # ContextCleaner on GC.  The exact anchor count (pre-df-cap upper
+    # bound), which drives the join strategy below, is observed on the
+    # checkpoint's own job.
+    grams, n_anchors_total = _counted_checkpoint(grams)
     if max_gram_docs is not None:
         keep = (grams.groupBy("g")
                 .agg(F.countDistinct("id").alias("df"))
@@ -604,7 +681,10 @@ def _verify_candidates(cand: DataFrame, docs: DataFrame, threshold: float,
              F.col("shared") * 1e6 /
              (F.size("sh_a") + F.size("sh_b") - F.col("shared")))
           .cast("long")))
-    return (j.filter(F.col("jaccard_e6") >= int(threshold * 1e6))
+    # shared > 0: a pair with no common shingle is no near-dup at any
+    # threshold, and ngram_jaccard_pairs' shingle join never emits one
+    return (j.filter((F.col("shared") > 0)
+                     & (F.col("jaccard_e6") >= int(threshold * 1e6)))
             .select("id_a", "id_b", "jaccard_e6"))
 
 
