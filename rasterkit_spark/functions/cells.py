@@ -102,18 +102,6 @@ def grid_neighbors(cell: Column, ring: int = 1) -> Column:
     return F.array_compact(F.transform(offsets, mk))
 
 
-def grid_cell_bounds_merc(cell: Column) -> list[Column]:
-    """(minx, miny, maxx, maxy) of a grid cell in Mercator meters."""
-    res = (cell / F.lit(1 << GRID_RES_BITS)).cast("long")
-    ix = (cell / F.lit(1 << GRID_IX_SHIFT)).cast("long") % F.lit(1 << GRID_IX_SHIFT)
-    iy = cell % F.lit(1 << GRID_IX_SHIFT)
-    size = F.lit(2.0 * MERC_LIMIT) / F.pow(F.lit(2.0), res.cast("double"))
-    minx = ix.cast("double") * size - F.lit(MERC_LIMIT)
-    miny = iy.cast("double") * size - F.lit(MERC_LIMIT)
-    return [minx.alias("cell_minx"), miny.alias("cell_miny"),
-            (minx + size).alias("cell_maxx"), (miny + size).alias("cell_maxy")]
-
-
 def grid_cells_for_bbox(minx: Column, miny: Column, maxx: Column,
                         maxy: Column, res: int) -> Column:
     """Array of all grid cells covering a Mercator bbox (polyfill for
@@ -188,11 +176,6 @@ def _s2_st_from_uv(u: np.ndarray) -> np.ndarray:
                         1.0 - 0.5 * np.sqrt(1.0 - 3.0 * u))
 
 
-def _s2_uv_from_st(s: np.ndarray) -> np.ndarray:
-    return np.where(s >= 0.5, (1.0 / 3.0) * (4.0 * s * s - 1.0),
-                    (1.0 / 3.0) * (1.0 - 4.0 * (1.0 - s) * (1.0 - s)))
-
-
 def s2_cell_id(lat: np.ndarray, lon: np.ndarray, level: int = 30) -> np.ndarray:
     """Vectorized lat/lon (degrees) → S2 cell id at ``level``.
 
@@ -255,17 +238,6 @@ def s2_level(cell_id: np.ndarray) -> np.ndarray:
     lsb = cid & (~cid + np.uint64(1))
     lvl = _S2_MAX_LEVEL - (np.log2(lsb.astype(np.float64)) / 2).astype(np.int64)
     return lvl
-
-
-def s2_cell_udf(level: int):
-    """pandas UDF (lat, lon) → s2 cell id at ``level`` (Arrow-batched)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(LongType())
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(s2_cell_id(lat.to_numpy(), lon.to_numpy(), level))
-
-    return _udf
 
 
 # ---------------------------------------------------------------------------

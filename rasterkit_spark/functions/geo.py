@@ -385,16 +385,6 @@ def tile_range_cols(region_x: Column, region_y: Column,
     ]
 
 
-def strip_range_cols(region_y: Column, region_h: Column,
-                     rows_per_strip: Column) -> list[Column]:
-    """Covered strips (src/extractor/strip_reader.rs:147-149)."""
-    end_y = region_y + region_h
-    return [
-        (region_y / rows_per_strip).cast("long").alias("start_strip"),
-        ((end_y + rows_per_strip - 1) / rows_per_strip).cast("long").alias("end_strip"),
-    ]
-
-
 # ---------------------------------------------------------------------------
 # G12 — EPSG classification
 # ---------------------------------------------------------------------------

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 # ---------------------------------------------------------------------------
 # X1 — bbox / coordinate / filter-range string parsing
 # (src/coordinate/bbox.rs:48-64, src/utils/coordinate_utils.rs:35-46,
@@ -15,13 +13,6 @@ def parse_bbox_str(s: str):
     if len(parts) != 4:
         raise ValueError(f"Invalid bounding box format '{s}'")
     return tuple(float(p) for p in parts)
-
-
-def parse_coord_str(s: str):
-    parts = [p.strip() for p in s.split(",")]
-    if len(parts) != 2:
-        raise ValueError("Coordinate must be in format 'x,y'")
-    return float(parts[0]), float(parts[1])
 
 
 def parse_filter_range(s: str):
@@ -37,13 +28,6 @@ def parse_filter_range(s: str):
     return lo, hi
 
 
-def bbox_cols_from_string(c: Column) -> list[Column]:
-    """Column flavor of X1: 'a,b,c,d' → four double columns."""
-    p = F.split(c, ",")
-    return [F.trim(p[i]).cast("double").alias(n)
-            for i, n in enumerate(["minx", "miny", "maxx", "maxy"])]
-
-
 # ---------------------------------------------------------------------------
 # X2 — hex color parse/format (src/tiff/colormap.rs:50-85)
 # ---------------------------------------------------------------------------
@@ -57,12 +41,6 @@ def hex_to_rgb(s: str):
 
 def rgb_to_hex(r: int, g: int, b: int) -> str:
     return f"#{r:02X}{g:02X}{b:02X}"
-
-
-def hex_to_rgb_cols(c: Column) -> list[Column]:
-    h = F.regexp_replace(F.trim(c), "^#", "")
-    return [F.conv(F.substring(h, 1 + 2 * i, 2), 16, 10).cast("int").alias(n)
-            for i, n in enumerate(["r", "g", "b"])]
 
 
 # ---------------------------------------------------------------------------
@@ -103,14 +81,6 @@ def replace_gdal_metadata_item(xml: str, name: str, value: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# X5 — trailing-null trim (src/utils/string_utils.rs:6-10)
-# ---------------------------------------------------------------------------
-
-def trim_trailing_nulls(c: Column) -> Column:
-    return F.regexp_replace(c, "\x00+$", "")
-
-
-# ---------------------------------------------------------------------------
 # X6/X8 — code→name translators (src/utils/tiff_code_translators.rs:10-73,
 # src/tiff/geo_key_parser.rs:299-346); the display-name registries
 # ---------------------------------------------------------------------------
@@ -118,10 +88,6 @@ def trim_trailing_nulls(c: Column) -> Column:
 COMPRESSION_NAMES = {1: "None", 2: "CCITT RLE", 5: "LZW", 6: "JPEG (old)",
                      7: "JPEG", 8: "Deflate (zlib)", 14: "ZStd",
                      32773: "PackBits"}
-PHOTOMETRIC_NAMES = {0: "WhiteIsZero", 1: "BlackIsZero", 2: "RGB",
-                     3: "Palette", 4: "Mask", 5: "CMYK", 6: "YCbCr"}
-PREDICTOR_NAMES = {1: "None", 2: "Horizontal differencing",
-                   3: "Floating point"}
 EPSG_DESCRIPTIONS = {
     # geographic
     4326: "WGS 84 geographic (lat/lon)",
@@ -191,7 +157,7 @@ def epsg_description(code: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# X7 — TIFF/GeoTIFF tag-name registry.  TIFF tag + geokey names below are
+# X7 — TIFF/GeoTIFF tag-name registry.  The TIFF tag names below are
 # written fresh from the public TIFF 6.0 / GeoTIFF 1.1 specs; the full
 # section-6.3 code tables (GCS/PCS/datum/ellipsoid/projection/vertical —
 # the reference's 1785-entry geotiff_tags.toml) live in
@@ -249,45 +215,8 @@ TAG_NAMES = {
     50731: "BaselineNoise", 50732: "BaselineSharpness",
 }
 
-GEOKEY_NAMES = {
-    # GeoTIFF 1.1 configuration keys
-    1024: "GTModelTypeGeoKey", 1025: "GTRasterTypeGeoKey",
-    1026: "GTCitationGeoKey",
-    # geographic CRS keys
-    2048: "GeographicTypeGeoKey", 2049: "GeogCitationGeoKey",
-    2050: "GeogGeodeticDatumGeoKey", 2051: "GeogPrimeMeridianGeoKey",
-    2052: "GeogLinearUnitsGeoKey", 2053: "GeogLinearUnitSizeGeoKey",
-    2054: "GeogAngularUnitsGeoKey", 2055: "GeogAngularUnitSizeGeoKey",
-    2056: "GeogEllipsoidGeoKey", 2057: "GeogSemiMajorAxisGeoKey",
-    2058: "GeogSemiMinorAxisGeoKey", 2059: "GeogInvFlatteningGeoKey",
-    2060: "GeogAzimuthUnitsGeoKey", 2061: "GeogPrimeMeridianLongGeoKey",
-    2062: "GeogTOWGS84GeoKey",
-    # projected CRS keys
-    3072: "ProjectedCSTypeGeoKey", 3073: "PCSCitationGeoKey",
-    3074: "ProjectionGeoKey", 3075: "ProjCoordTransGeoKey",
-    3076: "ProjLinearUnitsGeoKey", 3077: "ProjLinearUnitSizeGeoKey",
-    3078: "ProjStdParallel1GeoKey", 3079: "ProjStdParallel2GeoKey",
-    3080: "ProjNatOriginLongGeoKey", 3081: "ProjNatOriginLatGeoKey",
-    3082: "ProjFalseEastingGeoKey", 3083: "ProjFalseNorthingGeoKey",
-    3084: "ProjFalseOriginLongGeoKey", 3085: "ProjFalseOriginLatGeoKey",
-    3086: "ProjFalseOriginEastingGeoKey",
-    3087: "ProjFalseOriginNorthingGeoKey",
-    3088: "ProjCenterLongGeoKey", 3089: "ProjCenterLatGeoKey",
-    3090: "ProjCenterEastingGeoKey", 3091: "ProjCenterNorthingGeoKey",
-    3092: "ProjScaleAtNatOriginGeoKey", 3093: "ProjScaleAtCenterGeoKey",
-    3094: "ProjAzimuthAngleGeoKey", 3095: "ProjStraightVertPoleLongGeoKey",
-    # vertical CRS keys
-    4096: "VerticalCSTypeGeoKey", 4097: "VerticalCitationGeoKey",
-    4098: "VerticalDatumGeoKey", 4099: "VerticalUnitsGeoKey",
-}
-
-
 def tag_name(tag: int) -> str:
     return TAG_NAMES.get(tag, f"Tag{tag}")
-
-
-def geokey_name(key_id: int) -> str:
-    return GEOKEY_NAMES.get(key_id, f"GeoKey{key_id}")
 
 
 def geokey_value_name(key_id: int, code: int) -> str:

@@ -416,17 +416,6 @@ def adjust_tiepoint_for_region(region_x, region_y, orig_map_x, orig_map_y,
     return new_x, new_y
 
 
-def bounds_from_geoinfo(origin_x, origin_y, width, height, px, py):
-    """(minx, miny, maxx, maxy) (src/tiff/geo_key_parser.rs:435-446)."""
-    ox = np.asarray(origin_x, dtype=np.float64)
-    oy = np.asarray(origin_y, dtype=np.float64)
-    w = np.asarray(width, dtype=np.float64)
-    h = np.asarray(height, dtype=np.float64)
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    return ox, oy - h * py, ox + w * px, oy
-
-
 # ---------------------------------------------------------------------------
 # J1/J2 — chunk range math (tile/strip pruning keys)
 # ---------------------------------------------------------------------------

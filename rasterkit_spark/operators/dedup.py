@@ -485,12 +485,6 @@ def minhash_sigs_from_hashes(base: Column, n_hashes: int) -> Column:
     return F.array(*sigs)
 
 
-def minhash_signature(text: Column, n_hashes: int, shingle_n: int = 5) -> Column:
-    """Convenience one-shot signature (prefer the two-step flavor above in
-    hot paths)."""
-    return minhash_sigs_from_hashes(shingle_hashes(text, shingle_n), n_hashes)
-
-
 def shingle_set_udf(shingle_n: int, use_words: bool):
     """Arrow-batched distinct-shingle arrays (same semantics as
     shingles()/word_shingles() + array_distinct, but ~10× faster than the

@@ -128,6 +128,10 @@ def resolve_regions(queries: DataFrame, catalog: DataFrame) -> DataFrame:
     return _resolve_regions_joined(q, "radius_m" in queries.columns)
 
 
+#: tile identity: one chunk of one raster at one overview level
+TILE_KEY = ["media_ref", "level", "tile_x", "tile_y"]
+
+
 def expand_tile_keys(regions: DataFrame, level: int = 0) -> DataFrame:
     """J1/J2 key expansion: one row per covered chunk.
 
@@ -149,17 +153,11 @@ def expand_tile_keys(regions: DataFrame, level: int = 0) -> DataFrame:
     return r.drop("start_tile_x", "start_tile_y", "end_tile_x", "end_tile_y")
 
 
-def join_tiles(keys: DataFrame, tiles: DataFrame,
-               broadcast_keys: bool | None = None) -> DataFrame:
-    """Equi-join covered keys against the tile table.
-
-    ``broadcast_keys=True`` broadcasts the (small) query side so the big
-    tile table never shuffles — the right call when queries ≪ tiles.
-    ``None`` lets AQE decide.
-    """
-    t = tiles.select("media_ref", "level", "tile_x", "tile_y", "blob")
-    k = F.broadcast(keys) if broadcast_keys else keys
-    return k.join(t, ["media_ref", "level", "tile_x", "tile_y"], "inner")
+def join_tiles(keys: DataFrame, tiles: DataFrame) -> DataFrame:
+    """Equi-join covered keys against the tile table, broadcasting the
+    (small) key side so the big tile table never shuffles."""
+    t = tiles.select(*TILE_KEY, "blob")
+    return F.broadcast(keys).join(t, TILE_KEY, "inner")
 
 
 #: per-python-worker decode memo: many queries over the same raster hit
@@ -196,6 +194,31 @@ def _decode_chunk_cached(blob: bytes, comp: int, pred: int, cw: int,
     _DECODE_CACHE[key] = chunk
     if len(_DECODE_CACHE) > _DECODE_CACHE_CAP:
         _DECODE_CACHE.popitem(last=False)
+    return chunk
+
+
+def fetch_chunk(key: tuple, blob, comp: int, pred: int, cw: int, ch: int,
+                spp: int, memo: dict | None = None) -> np.ndarray | None:
+    """Decoded chunk of tile ``key`` = (media_ref, level, tile_x, tile_y),
+    the one chunk read both extract and zonal stats go through.
+
+    ``blob`` is the row's blob, or ``tile_map.get(key)`` where the rows are
+    keys only; None means the key has no tile (OOB cover, shallow pyramid)
+    and returns None — inner-join semantics.  ``memo`` is a per-task front
+    memo keyed by tile coords, valid only where a broadcast tile map pins
+    one blob per key: repeats then skip the worker cache's per-call blob
+    crc32 (measured: most of the decode phase)."""
+    if blob is None:
+        return None
+    chunk = memo.get(key) if memo is not None else None
+    if chunk is None:
+        media, lvl, tx, ty = key
+        chunk = _decode_chunk_cached(bytes(blob), comp, pred, cw, ch, spp,
+                                     media, tx, ty, lvl)
+        if memo is not None:
+            memo[key] = chunk
+            if len(memo) > _DECODE_CACHE_CAP:
+                memo.pop(next(iter(memo)))
     return chunk
 
 
@@ -244,17 +267,19 @@ def key_runs(pdf_iter, keys: list[str]):
         yield run
 
 
-def batched_frames(records, payload: str):
+def batched_frames(records, payload: str | None):
     """Pack dict records (None = no output) into pandas frames of at most
     ``_ASSEMBLE_OUT_ROWS`` rows, cut as soon as their ``payload`` bytes
-    reach ``_ASSEMBLE_OUT_BYTES``.  The bounds are tested after every
-    record, so a frame holds at most the byte bound plus one record."""
+    reach ``_ASSEMBLE_OUT_BYTES`` (``payload=None``: rows only).  The
+    bounds are tested after every record, so a frame holds at most the
+    byte bound plus one record."""
     out, nbytes = [], 0
     for rec in records:
         if rec is None:
             continue
         out.append(rec)
-        nbytes += len(rec[payload] or b"")
+        if payload is not None:
+            nbytes += len(rec[payload] or b"")
         if len(out) >= _ASSEMBLE_OUT_ROWS or nbytes >= _ASSEMBLE_OUT_BYTES:
             yield pd.DataFrame(out)
             out, nbytes = [], 0
@@ -275,12 +300,8 @@ def _assemble_window(rows: list, emit_window: bool, tile_map: dict | None,
     kernels and clip it into the output window (C→W1→P1).
 
     With ``tile_map`` the rows are keys only and the blobs come from the
-    map; keys with no tile (OOB covers, shallow pyramids) are dropped —
-    inner-join semantics — and a run left empty yields no window.
-    ``memo`` is then a per-task decoded-chunk front memo keyed by tile
-    coords — valid because the map pins one blob per key, so repeats skip
-    the global cache's per-call blob crc32 (measured: most of the decode
-    phase)."""
+    map; a run whose keys all miss it yields no window.  ``memo``: see
+    :func:`fetch_chunk`."""
     first = rows[0]
     media = first.media_ref
     chunks = []
@@ -298,15 +319,8 @@ def _assemble_window(rows: list, emit_window: bool, tile_map: dict | None,
     spp = int(first.samples_per_pixel or 1)
     out = np.zeros((rh, rw) if spp == 1 else (rh, rw, spp), dtype=np.uint8)
     for key, blob in chunks:
-        _, lvl, tx, ty = key
-        chunk = memo.get(key) if memo is not None else None
-        if chunk is None:
-            chunk = _decode_chunk_cached(bytes(blob), comp, pred, cw, ch,
-                                         spp, media, tx, ty, lvl)
-            if memo is not None:
-                memo[key] = chunk
-                if len(memo) > _DECODE_CACHE_CAP:
-                    memo.pop(next(iter(memo)))
+        _, _, tx, ty = key
+        chunk = fetch_chunk(key, blob, comp, pred, cw, ch, spp, memo)
         K.clip_chunk_into(out, chunk, cw, ch, tx * cw, ty * ch,
                           rx, ry, rw, rh, spp)
     buf = out.tobytes()
@@ -348,29 +362,55 @@ def decode_and_clip(joined: DataFrame, emit_window: bool = True) -> DataFrame:
 
 
 #: blob-bytes ceiling for the python-side tile broadcast; above it the
-#: JVM-broadcast join path is used instead (still no blob shuffle)
+#: key-broadcast join path is used instead (still no blob broadcast)
 MAX_PY_TILE_BROADCAST = 512 * 1024 * 1024
 
 
+def tile_map_broadcast(tiles: DataFrame):
+    """Python-side broadcast of the tile table as ``{(media_ref, level,
+    tile_x, tile_y): blob}``, or None above ``MAX_PY_TILE_BROADCAST``
+    blob bytes.
+
+    The blobs are sized by a cluster-side aggregate BEFORE any driver
+    collect: collecting an over-ceiling tile table to *measure* it would
+    OOM the driver inside the guard itself.  Under the ceiling each blob
+    crosses the wire once per executor; a JVM broadcast join would still
+    serialize the matched blob into EVERY (query, tile) Arrow row headed
+    for the UDF — |matches| × blob bytes, the dominant cost when queries
+    ≫ tiles (measured: ~2× the whole big-raster extract wall).  Over it,
+    callers take the key-broadcast join instead: a JVM broadcast of
+    >512 MB of blobs is itself a driver/executor memory hazard, and Spark
+    hard-caps any broadcast relation at 8 GB / 512M rows."""
+    total = tiles.agg(
+        F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("b")
+    ).collect()[0]["b"]
+    if total > MAX_PY_TILE_BROADCAST:
+        return None
+    t_rows = tiles.select(*TILE_KEY, "blob").collect()
+    return tiles.sparkSession.sparkContext.broadcast(
+        {(r["media_ref"], int(r["level"]), int(r["tile_x"]),
+          int(r["tile_y"])): bytes(r["blob"]) for r in t_rows})
+
+
 def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
-            level: int = 0, broadcast_keys: bool = True,
-            broadcast_tiles: bool = False,
+            level: int = 0, broadcast_tiles: bool = False,
             emit_window: bool = True) -> DataFrame:
     """End-to-end flagship extraction: bbox queries → clipped windows +
     adjusted geotransform.  See module docstring for the physical plan.
 
     Two physical strategies, picked by which side is small:
 
-    - default (``broadcast_keys``): broadcast the expanded query keys,
-      stream the big tile table, then ONE shuffle of the matched blobs
-      into the sorted per-(query, media) assembly — the 100-TB regime,
-      where tiles dwarf every other side.
+    - default: broadcast the expanded query keys, stream the big tile
+      table, then ONE shuffle of the matched blobs into the sorted
+      per-(query, media) assembly — the 100-TB regime, where tiles dwarf
+      every other side.
     - ``broadcast_tiles=True``: broadcast the tile table and keep the
       blobs where the query keys already live — the matched blobs NEVER
       shuffle (the group shuffle of decoded-size payloads is the
       non-scaling term when queries ≫ catalog).  Only the key rows (tiny)
       are repartitioned and sorted, and assembly looks the blobs up from
-      a python-side broadcast of the tile table.
+      a python-side broadcast of the tile table
+      (:func:`tile_map_broadcast`; over its ceiling the default runs).
 
     ``level`` selects an overview: regions resolve against the LEVEL's
     geotransform/dims/chunk geometry (half-size per level), matching a
@@ -389,38 +429,14 @@ def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
     else:
         regions = resolve_regions(queries, catalog)
     keys = expand_tile_keys(regions, level=level)
-    if broadcast_tiles:
-        # size the blobs with a cluster-side aggregate BEFORE any driver
-        # collect: collecting an over-ceiling tile table to *measure* it
-        # would OOM the driver inside the guard itself
-        total = tiles.agg(
-            F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("b")
-        ).collect()[0]["b"]
-        if total <= MAX_PY_TILE_BROADCAST:
-            # key rows only (no blobs): partitioned like decode_and_clip
-            k = sorted_by_keys(keys.select(*_ASSEMBLE_COLS), _WINDOW_KEY)
-            t_rows = tiles.select("media_ref", "level", "tile_x", "tile_y",
-                                  "blob").collect()
-            # python-side broadcast: the tile bytes cross the wire ONCE
-            # per executor.  A JVM broadcast join would still serialize
-            # the matched blob into EVERY (query, tile) Arrow row headed
-            # for the assembly UDF — |matches| × blob bytes, the actual
-            # dominant cost when queries ≫ tiles (measured: ~2× the whole
-            # big-raster extract wall)
-            bc = keys.sparkSession.sparkContext.broadcast(
-                {(r["media_ref"], int(r["level"]), int(r["tile_x"]),
-                  int(r["tile_y"])): bytes(r["blob"]) for r in t_rows})
-            return k.mapInPandas(
-                lambda it: _assemble_stream(it, emit_window, bc.value),
-                WINDOW_SCHEMA)
-        # over-ceiling tile table: a JVM broadcast of >512 MB of blobs is
-        # itself a driver/executor memory hazard and Spark hard-caps any
-        # broadcast relation at 8 GB / 512M rows — fall through to the
-        # shuffle strategy instead (VERDICT r5 item #3): the blob-free
-        # keys broadcast, and the matched blobs cross the wire exactly
-        # once, in the group-assembly exchange, which scales.
-    joined = join_tiles(keys, tiles, broadcast_keys=broadcast_keys)
-    return decode_and_clip(joined, emit_window)
+    bc = tile_map_broadcast(tiles) if broadcast_tiles else None
+    if bc is not None:
+        # key rows only (no blobs): partitioned like decode_and_clip
+        k = sorted_by_keys(keys.select(*_ASSEMBLE_COLS), _WINDOW_KEY)
+        return k.mapInPandas(
+            lambda it: _assemble_stream(it, emit_window, bc.value),
+            WINDOW_SCHEMA)
+    return decode_and_clip(join_tiles(keys, tiles), emit_window)
 
 
 def catalog_at_levels(catalog: DataFrame, max_level: int) -> DataFrame:
@@ -451,7 +467,6 @@ def catalog_at_levels(catalog: DataFrame, max_level: int) -> DataFrame:
 def extract_auto_level(queries: DataFrame, catalog: DataFrame,
                        tiles: DataFrame, max_level: int = 2,
                        target_col: str = "target_res",
-                       broadcast_keys: bool = True,
                        emit_window: bool = True) -> DataFrame:
     """LOD-aware extraction (S7 overview read + §4 level selection, wired
     into the flagship pipeline): each query carries a target resolution
@@ -485,7 +500,7 @@ def extract_auto_level(queries: DataFrame, catalog: DataFrame,
     q = q.filter(F.col("level") == want).drop("_max_tile_level")
     regions = _resolve_regions_joined(q, "radius_m" in queries.columns)
     keys = expand_tile_keys(regions)
-    joined = join_tiles(keys, tiles, broadcast_keys=broadcast_keys)
+    joined = join_tiles(keys, tiles)
     out = decode_and_clip(joined, emit_window)
     lv = regions.select("query_id", "media_ref", "level")
     return out.join(lv, ["query_id", "media_ref"])
@@ -493,8 +508,7 @@ def extract_auto_level(queries: DataFrame, catalog: DataFrame,
 
 def extract_pixel_region(queries: DataFrame, catalog: DataFrame,
                          tiles: DataFrame, level: int = 0,
-                         strict: bool = True,
-                         broadcast_keys: bool = True) -> DataFrame:
+                         strict: bool = True) -> DataFrame:
     """Explicit pixel-region extraction — the reference's ``--region=x,y,WxH``
     path (P2, ``determine_extraction_region``,
     src/utils/tiff_extraction_utils.rs:268-293).
@@ -539,7 +553,7 @@ def extract_pixel_region(queries: DataFrame, catalog: DataFrame,
         F.col("pixel_sx"), F.col("pixel_sy"))
     regions = q.select("*", *tie)
     keys = expand_tile_keys(regions, level=level)
-    joined = join_tiles(keys, tiles, broadcast_keys=broadcast_keys)
+    joined = join_tiles(keys, tiles)
     return decode_and_clip(joined)
 
 

@@ -158,23 +158,6 @@ def apply_filter(windows: DataFrame, lo: int, hi: int,
     return _map_windows(windows, fn, [sha])
 
 
-def apply_filter_per_row(windows: DataFrame) -> DataFrame:
-    """P3 with per-query lo/hi columns (filter_lo / filter_hi), rows with
-    NULL bounds pass through untouched."""
-    sha = StructField("filtered_sha256", StringType())
-
-    def fn(arr, row):
-        lo = getattr(row, "filter_lo", None)
-        hi = getattr(row, "filter_hi", None)
-        if lo is None or hi is None or pd.isna(lo) or pd.isna(hi):
-            out = arr
-        else:
-            out = K.filter_values(arr, int(lo), int(hi), 0)
-        return out, (hashlib.sha256(out.tobytes()).hexdigest(),)
-
-    return _map_windows(windows, fn, [sha])
-
-
 def apply_filter_transparency(windows: DataFrame, lo: int, hi: int) -> DataFrame:
     """P3 transparency variant (filter_utils.rs:70-111): out-of-range pixels
     become fully transparent RGBA instead of a background value; output

@@ -12,7 +12,7 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType)
 
@@ -63,12 +63,6 @@ def ensure_png_extension(path: str) -> str:
         return path
     stem = path.rsplit(".", 1)[0] if "." in path.rsplit("/", 1)[-1] else path
     return stem + ".png"
-
-
-def output_name_col(path: F.Column, shape: F.Column) -> F.Column:
-    """Column flavor: circle-shaped outputs force .png."""
-    png = F.concat(F.regexp_replace(path, r"\.[^./]+$", ""), F.lit(".png"))
-    return F.when(F.lower(shape) == "circle", png).otherwise(path)
 
 
 # ---------------------------------------------------------------------------

@@ -10,16 +10,19 @@ Operators:
   correctness certificate: after a ring-r pass, a query's result is final
   only if its Kth candidate distance ≤ the minimum possible distance to any
   unexplored cell; others retry with a wider ring (J6).
-- :func:`zonal_stats` — polygon × raster: region → tile join → decode →
-  PIP-masked min/max/sum/count per zone (J7; aggregate semantics follow
-  A1/A2, src/utils/tiff_extraction_utils.rs:40-94).
+- :func:`zonal_stats` — polygon × raster: extract's read path (region →
+  tile keys → tile join or broadcast tile map → one chunk decode per run
+  of equal tile keys) with a PIP mask in place of the window clip, then
+  min/max/sum/count per zone (J7; aggregate semantics follow A1/A2,
+  src/utils/tiff_extraction_utils.rs:40-94).
 - :func:`add_salt` / hot-cell salting for skewed cells (north_rule).
 
 Scale notes: the polygon side is exploded per covering cell and joined on
 the cell key — broadcast when small, shuffle otherwise; AQE skew-join plus
-explicit salting handles Zipf-hot cells.  All refinement kernels are
-Arrow-batched numpy grouped *per polygon* inside each batch (no per-row
-Python).
+explicit salting handles Zipf-hot cells.  The PIP refinement is
+Arrow-batched numpy grouped *per polygon* inside each batch; zonal's
+partials are grouped *per tile* (one decode per run of equal tile keys).
+Neither runs per-row Python over pixels.
 """
 
 from __future__ import annotations
@@ -27,11 +30,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from .. import kernels as K
 from ..functions import cells as C
+from . import extract as EX
 
 #: every published WebMercator code (functions/geo.classify_epsg agrees)
 MERC_EPSGS = (3857, 3785, 900913)
@@ -435,16 +439,6 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
 # J7 — zonal stats (raster ↔ vector)
 # ---------------------------------------------------------------------------
 
-ZONAL_SCHEMA = StructType([
-    StructField("zone_id", StringType()),
-    StructField("media_ref", StringType()),
-    StructField("zmin", LongType()),
-    StructField("zmax", LongType()),
-    StructField("zsum", LongType()),
-    StructField("zcount", LongType()),
-])
-
-
 _ZONAL_PARTIAL_SCHEMA = StructType([
     StructField("zone_id", StringType()),
     StructField("media_ref", StringType()),
@@ -455,189 +449,99 @@ _ZONAL_PARTIAL_SCHEMA = StructType([
 ])
 
 
-def _zonal_partials_lookup(pdf_iter, tile_map):
-    """Partials over KEY rows only: blobs come from the python-broadcast
-    tile map (one copy per executor), never through Arrow per matched
-    row — the zonal mirror of extract._assemble_stream's tile-map path.
-    Keys with no tile (OOB covers) are dropped: inner-join semantics, and
-    the caller's left join restores the pair with zmin/zmax=-1.
-
-    The DECODED chunk is fetched by TILE KEY through a per-task memo —
-    the blob bytes are touched once per (task, tile), never per row.
-    The earlier shape assigned the blob into the pandas frame and
-    re-copied + re-crc'd it per (zone, tile) row: with zones ≫ tiles
-    that is |rows| × blob-size of pure memory traffic, measured as a
-    ~5 s parallelism-independent wall on the big-raster config (the bus
-    saturates — stream ceiling ~0.27 — so it cannot scale)."""
-    from .extract import _decode_chunk_cached
-
-    # no per-task raw-chunk layer here: the caller's post-luma memo
-    # (bounded by bytes) fronts this getter, so it only runs on gray
-    # misses — a raw-chunk LRU in between would retain up to 3× the luma
-    # bytes for ~no extra hit rate; cross-task reuse is the global
-    # crc-keyed _DECODE_CACHE's job
-    def get_chunk(row, comp, pred, cw, ch_, spp):
-        key = (row.media_ref, int(getattr(row, "level", 0) or 0),
-               int(row.tile_x), int(row.tile_y))
-        blob = tile_map.get(key)
-        if blob is None:
-            return None              # OOB cover: inner-join semantics
-        return _decode_chunk_cached(blob, comp, pred, cw, ch_, spp,
-                                    key[0], key[2], key[3], key[1])
-
-    yield from _zonal_tile_partials(pdf_iter, get_chunk)
-
-
-#: per-task post-luma memo budget in BYTES (an entry-count cap lets 256
-#: large-strip arrays grow to GBs; bytes are what the executor runs out
-#: of).  64 MB ≈ a thousand 256-px tiles or sixteen 2048² luma strips.
-_ZONAL_TASK_MEMO_BYTES = 64 * 1024 * 1024
-
-
-#: per-worker memo of the per-TILE CRS-converted pixel-center arrays:
-#: they depend only on (raster, level, tile) geometry — never on the zone —
-#: yet the pre-memo code rebuilt cols/rows + meshgrid + Mercator trig for
-#: every (zone, tile) row.  The r4 scaling bisection pinned zonal's 0.72
-#: two-parallelism efficiency on exactly that allocator+trig traffic.
-#: Bounded LRU: 2 float64 vectors per tile (~4 KB for 256-px tiles).
-_TILE_LL_CACHE: "OrderedDict[tuple, tuple]" = None
-_TILE_LL_CACHE_CAP = 4096
-
-
-def _tile_lonlat(media_ref, level, tx, ty, tx0, ty0, w, h,
-                 ox, oy, psx, psy, epsg):
-    """(lon[w], lat[h]) center arrays for one tile, CRS-converted to 4326.
-    Bit-equal to the meshgrid path: each element is the same float
-    expression ox + (global_px + 0.5)·psx (global int indices are exact
+def _tile_lonlat(first, tx0: int, ty0: int, w: int, h: int):
+    """(lon[w], lat[h]) pixel-center arrays of one tile, converted to the
+    zone polygons' 4326.  Each element is the expression the whole-window
+    path used, ox + (global_px + 0.5)·psx (global int indices are exact
     in float64), and the WebMercator inverse is separable (lon = f(x),
-    lat = g(y) — kernels.webmercator_to_wgs84)."""
-    global _TILE_LL_CACHE
-    if _TILE_LL_CACHE is None:
-        from collections import OrderedDict
-        _TILE_LL_CACHE = OrderedDict()
-    key = (media_ref, level, tx, ty, ox, oy, psx, psy, epsg)
-    hit = _TILE_LL_CACHE.get(key)
-    if hit is not None:
-        _TILE_LL_CACHE.move_to_end(key)
-        return hit
+    lat = g(y) — kernels.webmercator_to_wgs84), so slicing a zone's
+    window out of them is bit-equal to rebuilding it.  Any other CRS
+    raises: meter coordinates against degree polygons would be silently
+    all-outside."""
+    ox, oy = float(first.origin_x), float(first.origin_y)
+    psx, psy = float(first.pixel_sx), float(first.pixel_sy)
+    epsg = int(first.epsg)
     cols = ox + (tx0 + np.arange(w) + 0.5) * psx
     rows_ = oy - (ty0 + np.arange(h) + 0.5) * psy
     if epsg in MERC_EPSGS:
         lon, _ = K.webmercator_to_wgs84(cols, np.zeros(1))
         _, lat = K.webmercator_to_wgs84(np.zeros(1), rows_)
-    elif epsg == 4326:
-        lon, lat = cols, rows_
-    else:
-        raise ValueError(
-            f"zonal_stats: raster {media_ref} has CRS EPSG:{epsg}, which "
-            f"the 4326-polygon PIP stage cannot place (expected "
-            f"WebMercator or 4326)")
-    _TILE_LL_CACHE[key] = (lon, lat)
-    if len(_TILE_LL_CACHE) > _TILE_LL_CACHE_CAP:
-        _TILE_LL_CACHE.popitem(last=False)
-    return lon, lat
+        return lon, lat
+    if epsg == 4326:
+        return cols, rows_
+    raise ValueError(
+        f"zonal_stats: raster {first.media_ref} has CRS EPSG:{epsg}, which "
+        f"the 4326-polygon PIP stage cannot place (expected "
+        f"WebMercator or 4326)")
 
 
-def _zonal_tile_partials(pdf_iter, chunk_getter=None):
-    """mapInPandas: one partial (min/max/sum/count of the PIP-masked slice)
-    per (zone, raster, tile) row.  No zone×raster window is ever
-    materialized — peak memory is one decoded chunk plus the byte-capped
-    post-luma memo (_ZONAL_TASK_MEMO_BYTES) — and there is no group
-    fan-in: rows are independent, the final reduce is a groupBy.
-    Pixel-center arithmetic is the exact expression the whole-window
-    path used (ox + (global_px + 0.5)·scale), so results are bit-equal.
+def _zonal_run(rows: list, tile_map: dict | None):
+    """Partials of one run of (zone, tile) rows sharing a tile key: the
+    chunk is fetched (:func:`extract.fetch_chunk`), luma-collapsed and
+    lon/lat-projected once, then every zone row in the run reduces its
+    PIP-masked slice of it to one (min, max, sum, count) record.
 
     Multi-sample (RGB, spp=3) chunks decode with the sample-aware
     predictor stride and collapse to luma8 before the stats — the
     reference's grayscale-stats semantics (A1 calls ``to_luma8()`` first,
-    src/utils/tiff_extraction_utils.rs:41).  Other spp values raise."""
-    # per-worker decode memo (extract._decode_chunk_cached): many zones
-    # overlap the same tile, and the hot-zone replication re-decodes it
-    # once per (zone, tile) row without the cache
-    from collections import OrderedDict
-
-    from .extract import _decode_chunk_cached
-
-    # per-task memo of the POST-luma 2-D chunk: the luma collapse is
-    # zone-independent, and converting the full 3·cw·ch chunk per
-    # (zone, tile) row re-created exactly the per-row full-chunk memory
-    # traffic the decode memo removed.  Keyed by tile coords — safe
-    # within one task (one job, one tile table); the cross-job global
-    # cache is the one that needs the blob crc.  Evicted by BYTES
-    # (_ZONAL_TASK_MEMO_BYTES): an entry-count cap would retain GBs of
-    # large strips and break the bounded-peak-memory contract.
-    gray: "OrderedDict[tuple, np.ndarray]" = OrderedDict()
-    gray_bytes = 0
-
-    for pdf in pdf_iter:
-        out = []
-        for row in pdf.itertuples():
-            cw, ch = int(row.chunk_w), int(row.chunk_h)
-            spp = int(getattr(row, "samples_per_pixel", 1) or 1)
-            if spp not in (1, 3):
-                raise ValueError(
-                    f"zonal_stats: unsupported samples_per_pixel={spp} "
-                    f"for {row.media_ref} (expected 1 or 3)")
-            gkey = (row.media_ref, int(getattr(row, "level", 0) or 0),
-                    int(row.tile_x), int(row.tile_y))
-            chunk = gray.get(gkey)
-            if chunk is None:
-                if chunk_getter is not None:
-                    raw = chunk_getter(row, int(row.compression),
-                                       int(row.predictor), cw, ch, spp)
-                    if raw is None:
-                        continue
-                else:
-                    raw = _decode_chunk_cached(
-                        bytes(row.blob), int(row.compression),
-                        int(row.predictor), cw, ch, spp,
-                        row.media_ref, int(row.tile_x), int(row.tile_y),
-                        int(getattr(row, "level", 0) or 0))
-                chunk = (K.rgb_to_luma8(raw.reshape(-1, cw, 3))
-                         if spp == 3 else raw.reshape(-1, cw))
-                gray[gkey] = chunk
-                gray_bytes += chunk.nbytes
-                while gray_bytes > _ZONAL_TASK_MEMO_BYTES and len(gray) > 1:
-                    _, ev = gray.popitem(last=False)
-                    gray_bytes -= ev.nbytes
-            else:
-                gray.move_to_end(gkey)
-            rx, ry = int(row.region_x), int(row.region_y)
-            rw, rh = int(row.region_w), int(row.region_h)
-            tx0, ty0 = int(row.tile_x) * cw, int(row.tile_y) * ch
-            gx0, gx1 = max(rx, tx0), min(rx + rw, tx0 + chunk.shape[1])
-            gy0, gy1 = max(ry, ty0), min(ry + rh, ty0 + chunk.shape[0])
-            if gx0 >= gx1 or gy0 >= gy1:
-                continue
-            sub = chunk[gy0 - ty0: gy1 - ty0, gx0 - tx0: gx1 - tx0]
-            ox, oy = float(row.origin_x), float(row.origin_y)
-            psx, psy = float(row.pixel_sx), float(row.pixel_sy)
-            # polygon is in 4326: the per-TILE memo holds the centers
-            # already converted (Mercator aliases or raw 4326; anything
-            # else raises there — comparing meter coordinates against
-            # degree polygons would be silently all-outside).  Slicing by
-            # global pixel index is bit-equal to rebuilding the arrays
-            # for the zone's window.
-            lon_t, lat_t = _tile_lonlat(
-                row.media_ref, int(getattr(row, "level", 0) or 0),
-                int(row.tile_x), int(row.tile_y), tx0, ty0,
-                chunk.shape[1], chunk.shape[0], ox, oy, psx, psy,
-                int(row.epsg))
-            inside = K.points_in_polygon_grid(
-                lon_t[gx0 - tx0: gx1 - tx0], lat_t[gy0 - ty0: gy1 - ty0],
-                np.asarray(row.poly_xs), np.asarray(row.poly_ys))
-            vals = sub[inside]
-            if vals.size:
-                out.append((row.zone_id, row.media_ref, int(vals.min()),
-                            int(vals.max()), int(vals.sum(dtype=np.int64)),
-                            int(vals.size)))
-        if out:
-            yield pd.DataFrame(out, columns=[
-                "zone_id", "media_ref", "pmin", "pmax", "psum", "pcount"])
+    src/utils/tiff_extraction_utils.rs:41).  Other spp values raise.
+    With ``tile_map`` the rows are keys only; a key with no tile (OOB
+    cover) yields nothing — inner-join semantics, and the caller's left
+    join restores the pair with zmin/zmax=-1."""
+    first = rows[0]
+    key = (first.media_ref, int(first.level), int(first.tile_x),
+           int(first.tile_y))
+    cw, ch = int(first.chunk_w), int(first.chunk_h)
+    spp = int(first.samples_per_pixel or 1)
+    if spp not in (1, 3):
+        raise ValueError(
+            f"zonal_stats: unsupported samples_per_pixel={spp} "
+            f"for {first.media_ref} (expected 1 or 3)")
+    blob = first.blob if tile_map is None else tile_map.get(key)
+    raw = EX.fetch_chunk(key, blob, int(first.compression),
+                         int(first.predictor), cw, ch, spp)
+    if raw is None:
+        return
+    chunk = (K.rgb_to_luma8(raw.reshape(-1, cw, 3))
+             if spp == 3 else raw.reshape(-1, cw))
+    h, w = chunk.shape
+    tx0, ty0 = key[2] * cw, key[3] * ch
+    lon, lat = _tile_lonlat(first, tx0, ty0, w, h)
+    for row in rows:
+        rx, ry = int(row.region_x), int(row.region_y)
+        gx0, gx1 = max(rx, tx0), min(rx + int(row.region_w), tx0 + w)
+        gy0, gy1 = max(ry, ty0), min(ry + int(row.region_h), ty0 + h)
+        if gx0 >= gx1 or gy0 >= gy1:
+            continue
+        xs, ys = slice(gx0 - tx0, gx1 - tx0), slice(gy0 - ty0, gy1 - ty0)
+        inside = K.points_in_polygon_grid(
+            lon[xs], lat[ys], np.asarray(row.poly_xs),
+            np.asarray(row.poly_ys))
+        vals = chunk[ys, xs][inside]
+        if vals.size:
+            yield {"zone_id": row.zone_id, "media_ref": row.media_ref,
+                   "pmin": int(vals.min()), "pmax": int(vals.max()),
+                   "psum": int(vals.sum(dtype=np.int64)),
+                   "pcount": int(vals.size)}
 
 
-def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame,
-                          res: int = 6) -> DataFrame:
+def _zonal_partials(pdf_iter, tile_map: dict | None = None):
+    """``mapInPandas``: one partial per (zone, raster, tile) row, computed
+    per run of equal tile keys (:func:`extract.key_runs`), so the chunk
+    work is paid once per run, not once per zone.  No zone×raster window
+    is ever materialized — peak memory is one decoded chunk — and a tile
+    split across runs costs only a decode-cache hit, never a wrong row:
+    the final reduce is a groupBy."""
+    yield from EX.batched_frames(
+        (rec for rows in EX.key_runs(pdf_iter, EX.TILE_KEY)
+         for rec in _zonal_run(rows, tile_map)), None)
+
+
+#: grid-cell resolution of the zone/raster footprint cover
+_ZONAL_COVER_RES = 6
+
+
+def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame) -> DataFrame:
     """Candidate (query_id, media_ref) pairs whose bboxes share a covering
     grid cell in Mercator — the footprint-overlap pre-join that replaces a
     zone × raster cartesian (with millions of rasters the cartesian is the
@@ -650,7 +554,7 @@ def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame,
         F.explode(C.grid_cells_for_bbox(
             geo.merc_x(F.col("minx")), geo.merc_y(F.col("miny")),
             geo.merc_x(F.col("maxx")), geo.merc_y(F.col("maxy")),
-            res)).alias("cell"))
+            _ZONAL_COVER_RES)).alias("cell"))
     rasters = catalog.filter(F.col("media_kind") == "raster")
     rb = rasters.select(
         "media_ref", "epsg",
@@ -665,7 +569,8 @@ def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame,
     my1 = F.when(is_merc, F.col("maxy")).otherwise(geo.merc_y(F.col("maxy")))
     rc = placeable.select(
         "media_ref",
-        F.explode(C.grid_cells_for_bbox(mx0, my0, mx1, my1, res))
+        F.explode(C.grid_cells_for_bbox(mx0, my0, mx1, my1,
+                                        _ZONAL_COVER_RES))
         .alias("cell"))
     pairs = (zc.join(rc, "cell")
              .select("query_id", "media_ref").distinct())
@@ -676,10 +581,7 @@ def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame,
 
 
 def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
-                cover_res: int = 6,
-                broadcast_keys: bool = True,
                 broadcast_tiles: bool = False,
-                balance: bool = False,
                 on_unplaceable: str = "error") -> DataFrame:
     """min/max/sum/count of raster values per (zone polygon, raster).
 
@@ -693,16 +595,24 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
 
     Pipeline: zone bbox (from WKT) → footprint-overlap pre-join (cell
     cover equi-join — never zone × raster cartesian) → region on each
-    candidate raster (G5/G6 dispatch) → tile-key expansion → tile join →
-    per-tile decode + PIP-masked partials → groupBy reduce.
+    candidate raster (G5/G6 dispatch) → tile-key expansion → one
+    ``mapInPandas`` pass over runs of equal tile keys (each tile's chunk
+    is decoded and projected once per run, then every zone row in the run
+    takes its PIP-masked partial) → groupBy reduce.  This is extract's
+    read path (:func:`extract.fetch_chunk`, :func:`extract.key_runs`)
+    with a PIP mask in place of the window clip.  The two arms differ only
+    in where the blob meets the key rows:
 
-    ``broadcast_tiles=True`` (zones ≫ catalog regime): python-broadcast
-    the tile map and run the partials over key rows only, so each blob
-    crosses the wire once per executor instead of once per matched
-    (zone, tile) row — results are identical (same partials UDF after
-    blob lookup); falls back to the scale-safe shuffle join above
-    extract.MAX_PY_TILE_BROADCAST blob bytes (blobs cross the wire once
-    in the partials exchange — never a multi-GB JVM broadcast).
+    - default: the blob-free key rows broadcast and the tile table
+      streams, so the join already emits each tile's zone rows together —
+      the runs need no exchange of their own;
+    - ``broadcast_tiles=True`` (zones ≫ catalog regime): the tile map is
+      python-broadcast (:func:`extract.tile_map_broadcast`) and only the
+      key rows cross Arrow, hash-partitioned and sorted by tile key
+      (:func:`extract.sorted_by_keys`), so each blob crosses the wire
+      once per executor instead of once per matched (zone, tile) row.
+      Above ``extract.MAX_PY_TILE_BROADCAST`` blob bytes it falls back to
+      the default arm.  Both arms return identical rows.
 
     Output contract: one row per candidate pair whose bboxes overlap a
     shared cover cell; pairs whose polygons touch no pixel report
@@ -720,7 +630,7 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
                         .fillna({"zmin": -1, "zmax": -1,
                                  "zsum": 0, "zcount": 0})
     """
-    from . import extract as EX
+    from ..session import ensure_parallelism
     bad = (catalog.filter(F.col("media_kind") == "raster")
            .filter(~F.col("epsg").isin(*_ZONAL_PLACEABLE)))
     if on_unplaceable == "error":
@@ -757,75 +667,28 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
     # while the zonal wall is 7-12 s — the wall is this plan/stage
     # latency, not pixel work).  The table is one id pair per candidate,
     # the same cardinality class as the output itself.
-    pairs = zonal_footprint_pairs(zq, catalog, cover_res) \
-        .localCheckpoint(eager=True)
+    pairs = zonal_footprint_pairs(zq, catalog).localCheckpoint(eager=True)
     zr = zq.join(pairs, "query_id")
-    regions = EX.resolve_regions(zr, catalog)
-    keys = EX.expand_tile_keys(regions)
-    cols = ["query_id", "media_ref", "level", "region_x", "region_y",
+    keys = EX.expand_tile_keys(EX.resolve_regions(zr, catalog)) \
+        .withColumnRenamed("query_id", "zone_id")
+    cols = ["zone_id", "media_ref", "level", "region_x", "region_y",
             "region_w", "region_h", "chunk_w", "chunk_h", "compression",
-            "predictor", "samples_per_pixel", "tile_x", "tile_y", "blob",
+            "predictor", "samples_per_pixel", "tile_x", "tile_y",
             "origin_x", "origin_y", "pixel_sx", "pixel_sy", "epsg",
             "poly_xs", "poly_ys"]
-    if broadcast_tiles:
-        # cluster-side size aggregate BEFORE any collect — measuring an
-        # over-ceiling tile table by collecting it would OOM the driver
-        # inside the guard (ADVICE r4)
-        total = tiles.agg(
-            F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("b")
-        ).collect()[0]["b"]
-        if total <= EX.MAX_PY_TILE_BROADCAST:
-            # zones ≫ catalog regime (the mirror of extract's
-            # broadcast_tiles): every (zone, tile) matched row would carry
-            # the tile blob through the Arrow boundary — |matches| × blob
-            # bytes, the dominant, memory-bandwidth-bound term when many
-            # zones overlap each tile.  Broadcasting the
-            # (small-by-contract, ≤MAX_PY_TILE_BROADCAST) tile map to the
-            # python workers ships each blob once per EXECUTOR instead;
-            # only tiny key rows cross Arrow.  Explicit repartition: key
-            # rows are tiny, so AQE would coalesce the exchange to ~1
-            # partition by byte size and serialize the decode.
-            n_parts = keys.sparkSession.sparkContext.defaultParallelism * 3
-            # balance composes with broadcast_tiles: key rows are blob-free
-            # here, so a round-robin spread of the (zone, tile) work units
-            # is free of blob-shuffle cost — use it instead of the query_id
-            # hash when the caller asked for balancing (ADVICE r4)
-            k = keys.repartition(n_parts) if balance \
-                else keys.repartition(n_parts, "query_id")
-            t_rows = tiles.select("media_ref", "level", "tile_x", "tile_y",
-                                  "blob").collect()
-            bc = keys.sparkSession.sparkContext.broadcast(
-                {(r["media_ref"], int(r["level"]), int(r["tile_x"]),
-                  int(r["tile_y"])): bytes(r["blob"]) for r in t_rows})
-            nb_cols = [c for c in cols if c != "blob"]
-            partials = (k.select(*nb_cols)
-                        .withColumnRenamed("query_id", "zone_id")
-                        .mapInPandas(
-                            lambda it: _zonal_partials_lookup(it, bc.value),
-                            _ZONAL_PARTIAL_SCHEMA))
-            return _zonal_finish(partials, pairs)
-        # over-ceiling tile table: the old fallback JVM-broadcast the
-        # whole >512 MB blob table — a driver/executor hazard with a hard
-        # 8 GB broadcast cap — so fall through to the shuffle strategy
-        # below instead (VERDICT r5 item #3): blob-free keys broadcast,
-        # blobs cross the wire once in the partials exchange.
-    # the partials stage inherits the tile side's partitioning (stream side
-    # of the broadcast join) — a small cached tile table in few partitions
-    # would serialize the decode; widen it (no-op on already-wide tables)
-    from ..session import ensure_parallelism
-    joined = EX.join_tiles(keys, ensure_parallelism(tiles, 3),
-                           broadcast_keys=broadcast_keys)
-    if balance:
-        # the per-row partial cost varies with chunk size (a whole-image
-        # strip is ~64x a 256-px tile) and hot zones replicate hot tiles —
-        # a round-robin repartition of the matched rows evens the stage at
-        # the price of one shuffle of matched blobs.  Off by default: at
-        # raster-corpus scale prefer salting the hot media_refs instead.
-        n = tiles.sparkSession.sparkContext.defaultParallelism * 4
-        joined = joined.repartition(n)
-    partials = (joined.select(*cols)
-                .withColumnRenamed("query_id", "zone_id")
-                .mapInPandas(_zonal_tile_partials, _ZONAL_PARTIAL_SCHEMA))
+    bc = EX.tile_map_broadcast(tiles) if broadcast_tiles else None
+    if bc is not None:
+        partials = EX.sorted_by_keys(keys.select(*cols), EX.TILE_KEY) \
+            .mapInPandas(lambda it: _zonal_partials(it, bc.value),
+                         _ZONAL_PARTIAL_SCHEMA)
+    else:
+        # the partials stage inherits the tile side's partitioning (stream
+        # side of the key broadcast join) — a small cached tile table in
+        # few partitions would serialize the decode; widen it (no-op on
+        # already-wide tables)
+        partials = EX.join_tiles(keys, ensure_parallelism(tiles, 3)) \
+            .select(*cols, "blob") \
+            .mapInPandas(_zonal_partials, _ZONAL_PARTIAL_SCHEMA)
     return _zonal_finish(partials, pairs)
 
 

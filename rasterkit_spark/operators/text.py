@@ -61,16 +61,6 @@ def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def regex_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Engine-grade tokenizer (GPT-2-style word/number/punct regex) — not
-    oracle-matched (regex dialects differ across engines)."""
-    pat = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), 0))
-         .cast("long").alias("regex_tokens"))
-
-
 def count_occurrences(text: Column, needle: str) -> Column:
     """Occurrences of a literal substring via length arithmetic (portable)."""
     return ((F.length(text)

@@ -86,14 +86,6 @@ class ResumableJob:
         return self.spark.read.parquet(self.metrics_dir)
 
 
-def bucket_partitions(n_buckets: int) -> list[str]:
-    """Logical partition ids for :func:`bucket_filter`'s hash buckets —
-    the id space is just range(n_buckets) (deliberately data-independent:
-    deriving it from the data would cost a scan and change the resume key
-    set when the input grows)."""
-    return [str(b) for b in range(n_buckets)]
-
-
 def bucket_filter(df: DataFrame, key: str, n_buckets: int,
                   pid: str) -> DataFrame:
     return df.filter(F.pmod(F.xxhash64(F.col(key)), n_buckets) == int(pid))

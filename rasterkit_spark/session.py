@@ -98,11 +98,6 @@ def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     return df
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one of the driver-provided parquet tables."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def table_writer(df: DataFrame, mode: str = "overwrite"):
     """Engine sink: Iceberg on a configured cluster, parquet here."""
     return df.write.format(TABLE_FORMAT).mode(mode)

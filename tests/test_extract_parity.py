@@ -50,7 +50,7 @@ def test_regions_match_oracle(spark, corpus, sdfs):
 def test_tile_assignments_match_oracle(spark, corpus, sdfs):
     regions = EX.resolve_regions(sdfs["queries_bbox"], sdfs["media_catalog"])
     keys = EX.expand_tile_keys(regions)
-    joined = EX.join_tiles(keys, sdfs["tiles"], broadcast_keys=True)
+    joined = EX.join_tiles(keys, sdfs["tiles"])
     got = (joined
            .withColumn("across", F.ceil(F.col("width") / F.col("chunk_w")))
            .withColumn("tile_idx", F.col("tile_y") * F.col("across") + F.col("tile_x"))

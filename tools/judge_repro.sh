@@ -1,15 +1,15 @@
 #!/bin/bash
-# One-command verification harness (VERDICT r5 #10): reproduce the round's
-# three evidence surfaces with pinned env, in order of cost.
+# One-command verification harness (VERDICT r5 #10): reproduce the oracle
+# gate and the headline bench with pinned env, in order of cost.
 #
 #   ./tools/judge_repro.sh gate       # oracle gate replica (~2 min)
 #   ./tools/judge_repro.sh bench      # headline bench, driver contract (~6 min)
-#   ./tools/judge_repro.sh scaling    # interleaved min-merged captures (~1 h)
 #   ./tools/judge_repro.sh all
 #
 # Walls on this host swing +/-40% with co-tenant load; compare min-of-3
-# (the bench's own statistic) and the min-merged scaling pairs, never
-# single samples.  See OPTIMIZATION_r06.md for the round-6 numbers.
+# (the bench's own statistic), never single samples.  For per-layer
+# breakdowns and interleaved before/after pairs use perfbench/run.py
+# (perfbench/README.md).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -30,19 +30,9 @@ run_bench() {
   python bench.py
 }
 
-run_scaling() {
-  echo "== interleaved min-merged scaling captures (local[2] vs local[8]) =="
-  python tools/scaling_pairs_r5.py 3 --config dedup
-  python tools/scaling_pairs_r5.py 3 --config knn
-  SPARK_GRAFT_BENCH_ZREP=2048 python tools/scaling_pairs_r5.py 3 --config big
-  echo "(parity corpus: run 'python bench.py --scaling' twice and min-merge"
-  echo " with tools/merge_scaling_r6.py — ~40 min per run)"
-}
-
 case "$mode" in
   gate) run_gate ;;
   bench) run_bench ;;
-  scaling) run_scaling ;;
-  all) run_gate; run_bench; run_scaling ;;
-  *) echo "usage: $0 [gate|bench|scaling|all]" >&2; exit 2 ;;
+  all) run_gate; run_bench ;;
+  *) echo "usage: $0 [gate|bench|all]" >&2; exit 2 ;;
 esac
