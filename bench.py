@@ -290,12 +290,13 @@ def run_benchmarks(spark, sf_dir: str, big: bool | None = None,
         # replicate queries/zones with distinct ids: each replica re-runs
         # the full region→join→decode path, so pixel work scales to ~GBs
         # while the corpus stays driver-buildable
-        # SPARK_GRAFT_BENCH_ZREP: the round-5 zonal kernel (per-tile
-        # lon/lat memo + separable-grid PIP) cut the zonal wall ~4x, which
-        # dropped the default 32-rep config into the scheduler-latency
-        # regime at local[2] (~7 s wall, efficiency reads ~0.3 on pure
-        # latency).  Scaling children raise the rep count so the zonal row
-        # is compute-bound again — same protocol as the 4M-edge CC config.
+        # SPARK_GRAFT_BENCH_ZREP: the zonal kernel (lon/lat projected once
+        # per run of equal tile keys + separable-grid PIP) cut the zonal
+        # wall ~4x, which dropped the default 32-rep config into the
+        # scheduler-latency regime at local[2] (~7 s wall, efficiency
+        # reads ~0.3 on pure latency).  Scaling children raise the rep
+        # count so the zonal row is compute-bound again — same protocol as
+        # the 4M-edge CC config.
         qrep = 256
         zrep = int(os.environ.get("SPARK_GRAFT_BENCH_ZREP", "32"))
         sdfs["queries_bbox"] = sdfs["queries_bbox"].crossJoin(

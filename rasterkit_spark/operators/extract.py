@@ -197,24 +197,28 @@ def _decode_chunk_cached(blob: bytes, comp: int, pred: int, cw: int,
     return chunk
 
 
-def fetch_chunk(key: tuple, blob, comp: int, pred: int, cw: int, ch: int,
-                spp: int, memo: dict | None = None) -> np.ndarray | None:
-    """Decoded chunk of tile ``key`` = (media_ref, level, tile_x, tile_y),
+def fetch_chunk(row, tile_map: dict | None = None,
+                memo: dict | None = None) -> np.ndarray | None:
+    """Decoded chunk of ``row``'s tile (media_ref, level, tile_x, tile_y),
     the one chunk read both extract and zonal stats go through.
 
-    ``blob`` is the row's blob, or ``tile_map.get(key)`` where the rows are
-    keys only; None means the key has no tile (OOB cover, shallow pyramid)
-    and returns None — inner-join semantics.  ``memo`` is a per-task front
-    memo keyed by tile coords, valid only where a broadcast tile map pins
-    one blob per key: repeats then skip the worker cache's per-call blob
-    crc32 (measured: most of the decode phase)."""
+    The blob is ``row.blob``, or with ``tile_map`` (the rows are keys only)
+    the map's entry for the tile; a tile missing from the map (OOB cover,
+    shallow pyramid) returns None — inner-join semantics.  ``memo`` is a
+    per-task front memo keyed by tile coords, valid only where a broadcast
+    tile map pins one blob per key: repeats then skip the worker cache's
+    per-call blob crc32 (measured: most of the decode phase)."""
+    key = (row.media_ref, int(row.level), int(row.tile_x), int(row.tile_y))
+    blob = row.blob if tile_map is None else tile_map.get(key)
     if blob is None:
         return None
     chunk = memo.get(key) if memo is not None else None
     if chunk is None:
         media, lvl, tx, ty = key
-        chunk = _decode_chunk_cached(bytes(blob), comp, pred, cw, ch, spp,
-                                     media, tx, ty, lvl)
+        chunk = _decode_chunk_cached(
+            bytes(blob), int(row.compression), int(row.predictor),
+            int(row.chunk_w), int(row.chunk_h),
+            int(row.samples_per_pixel or 1), media, tx, ty, lvl)
         if memo is not None:
             memo[key] = chunk
             if len(memo) > _DECODE_CACHE_CAP:
@@ -303,30 +307,26 @@ def _assemble_window(rows: list, emit_window: bool, tile_map: dict | None,
     map; a run whose keys all miss it yields no window.  ``memo``: see
     :func:`fetch_chunk`."""
     first = rows[0]
-    media = first.media_ref
-    chunks = []
-    for row in rows:
-        key = (media, int(row.level), int(row.tile_x), int(row.tile_y))
-        blob = row.blob if tile_map is None else tile_map.get(key)
-        if blob is not None:
-            chunks.append((key, blob))
-    if not chunks:
-        return None
     rx, ry = int(first.region_x), int(first.region_y)
     rw, rh = int(first.region_w), int(first.region_h)
     cw, ch = int(first.chunk_w), int(first.chunk_h)
-    comp, pred = int(first.compression), int(first.predictor)
     spp = int(first.samples_per_pixel or 1)
-    out = np.zeros((rh, rw) if spp == 1 else (rh, rw, spp), dtype=np.uint8)
-    for key, blob in chunks:
-        _, _, tx, ty = key
-        chunk = fetch_chunk(key, blob, comp, pred, cw, ch, spp, memo)
-        K.clip_chunk_into(out, chunk, cw, ch, tx * cw, ty * ch,
-                          rx, ry, rw, rh, spp)
+    out = None
+    for row in rows:
+        chunk = fetch_chunk(row, tile_map, memo)
+        if chunk is None:
+            continue
+        if out is None:
+            out = np.zeros((rh, rw) if spp == 1 else (rh, rw, spp),
+                           dtype=np.uint8)
+        K.clip_chunk_into(out, chunk, cw, ch, int(row.tile_x) * cw,
+                          int(row.tile_y) * ch, rx, ry, rw, rh, spp)
+    if out is None:
+        return None
     buf = out.tobytes()
     return {
         "query_id": first.query_id,
-        "media_ref": media,
+        "media_ref": first.media_ref,
         "region_x": rx, "region_y": ry, "region_w": rw, "region_h": rh,
         "window": bytearray(buf) if emit_window else None,
         "window_sha256": hashlib.sha256(buf).hexdigest(),

@@ -489,23 +489,19 @@ def _zonal_run(rows: list, tile_map: dict | None):
     cover) yields nothing — inner-join semantics, and the caller's left
     join restores the pair with zmin/zmax=-1."""
     first = rows[0]
-    key = (first.media_ref, int(first.level), int(first.tile_x),
-           int(first.tile_y))
     cw, ch = int(first.chunk_w), int(first.chunk_h)
     spp = int(first.samples_per_pixel or 1)
     if spp not in (1, 3):
         raise ValueError(
             f"zonal_stats: unsupported samples_per_pixel={spp} "
             f"for {first.media_ref} (expected 1 or 3)")
-    blob = first.blob if tile_map is None else tile_map.get(key)
-    raw = EX.fetch_chunk(key, blob, int(first.compression),
-                         int(first.predictor), cw, ch, spp)
+    raw = EX.fetch_chunk(first, tile_map)
     if raw is None:
         return
     chunk = (K.rgb_to_luma8(raw.reshape(-1, cw, 3))
              if spp == 3 else raw.reshape(-1, cw))
     h, w = chunk.shape
-    tx0, ty0 = key[2] * cw, key[3] * ch
+    tx0, ty0 = int(first.tile_x) * cw, int(first.tile_y) * ch
     lon, lat = _tile_lonlat(first, tx0, ty0, w, h)
     for row in rows:
         rx, ry = int(row.region_x), int(row.region_y)
@@ -608,9 +604,10 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
       the runs need no exchange of their own;
     - ``broadcast_tiles=True`` (zones ≫ catalog regime): the tile map is
       python-broadcast (:func:`extract.tile_map_broadcast`) and only the
-      key rows cross Arrow, hash-partitioned and sorted by tile key
-      (:func:`extract.sorted_by_keys`), so each blob crosses the wire
-      once per executor instead of once per matched (zone, tile) row.
+      key rows cross Arrow, hash-partitioned by zone into three tasks per
+      core and sorted by tile key within each task, so each blob crosses
+      the wire once per executor instead of once per matched (zone, tile)
+      row, and a tile decodes once per task that holds its zones.
       Above ``extract.MAX_PY_TILE_BROADCAST`` blob bytes it falls back to
       the default arm.  Both arms return identical rows.
 
@@ -678,7 +675,13 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
             "poly_xs", "poly_ys"]
     bc = EX.tile_map_broadcast(tiles) if broadcast_tiles else None
     if bc is not None:
-        partials = EX.sorted_by_keys(keys.select(*cols), EX.TILE_KEY) \
+        # spread by zone, not by tile: by tile, all zone rows of a hot tile
+        # share one task (bench.py big mode, zones x768, 4 cores: longest
+        # task ~34 s by tile, ~11 s by zone).  Explicit count: the key rows
+        # are tiny, and AQE would coalesce them onto ~1 task.
+        n_parts = keys.sparkSession.sparkContext.defaultParallelism * 3
+        partials = keys.select(*cols).repartition(n_parts, "zone_id") \
+            .sortWithinPartitions(*EX.TILE_KEY) \
             .mapInPandas(lambda it: _zonal_partials(it, bc.value),
                          _ZONAL_PARTIAL_SCHEMA)
     else:

@@ -125,9 +125,10 @@ def fetches(monkeypatch):
     calls = []
     real = EX.fetch_chunk
 
-    def counted(key, *a, **kw):
-        calls.append(key)
-        return real(key, *a, **kw)
+    def counted(row, *a, **kw):
+        calls.append((row.media_ref, int(row.level), int(row.tile_x),
+                      int(row.tile_y)))
+        return real(row, *a, **kw)
 
     monkeypatch.setattr(EX, "fetch_chunk", counted)
     return calls
@@ -229,9 +230,15 @@ def test_zonal_plan_and_job_budget(spark, arm):
         assert "REPARTITION_BY_NUM" not in plan, plan
         return
     n = spark.sparkContext.defaultParallelism
+    # key rows spread by zone into three tasks per core and sorted by tile
+    # key within each task; no exchange by tile key
+    by_zone = re.findall(
+        rf"Exchange hashpartitioning\(zone_id#\d+, {3 * n}\), "
+        r"REPARTITION_BY_NUM", plan)
+    assert len(by_zone) == 1, plan
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
     # the level column is the literal 0 here, which the plan prints folded
-    by_tile = re.findall(
-        r"Exchange hashpartitioning\(media_ref#\d+, (?:level#\d+L?|0), "
-        rf"tile_x#\d+L?, tile_y#\d+L?, {n}\), REPARTITION_BY_NUM", plan)
-    assert len(by_tile) == 1, plan
-    assert plan.count("REPARTITION_BY_NUM") == 1, plan  # none by query_id
+    assert re.search(r"Sort \[media_ref#\d+ ASC NULLS FIRST, "
+                     r"(?:level#\d+L? ASC NULLS FIRST, )?tile_x#\d+L? ASC "
+                     r"NULLS FIRST, tile_y#\d+L? ASC NULLS FIRST\], false",
+                     plan), plan
