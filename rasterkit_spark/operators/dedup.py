@@ -12,6 +12,12 @@ Scale notes (10¹²-doc design point):
   (band, signature); frequent-shingle caps bound the quadratic blowup;
 - candidate pairs are always verified exactly before being emitted, so the
   LSH stages only affect recall, never precision;
+- MinHash crosses the Python boundary once per doc: one Arrow UDF emits
+  the band keys and the distinct shingle set, and one eager checkpoint of
+  that table feeds banding and both verify joins.  The price is a shingle
+  array stored and shuffled for every doc, not only for candidate docs;
+  above ``MINHASH_ONE_PASS_BYTES`` of input the verify shingles only the
+  candidate docs, in a second pass;
 - all joins are equi-joins on hashed keys → well-distributed by default,
   with AQE skew handling on; pair generation uses id< id ordering to halve
   the shuffle volume;
@@ -27,8 +33,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
-from pyspark.sql.types import (BinaryType, IntegralType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, BinaryType, IntegralType,
+                               StringType, StructField, StructType)
 
 MERSENNE_61 = (1 << 61) - 1
 
@@ -36,6 +42,19 @@ MERSENNE_61 = (1 << 61) - 1
 #: gram self-join (~24 B/row → ≈200 MB built relation, the guide's
 #: "few hundred MB is fine" band); above it the join sort-merges
 SPANS_BROADCAST_ANCHOR_CAP = 8_000_000
+
+#: docs-plan bytes (Spark's size estimate of the (id, text) columns) up
+#: to which minhash_lsh_pairs keeps every doc's shingle set in its one
+#: Python pass; above it only candidate docs are shingled, in a second
+#: pass (_verify_candidates).  Both arms forced, interleaved, on bench.py's
+#: big-dedup texts (5.4 KB docs, word 3-grams, 32 hashes / 8 bands), 4-core
+#: host, median walls one pass vs two: 5.4 MB 4.8 vs 5.6 s and 16.5 MB
+#: 5.3 vs 5.9 s (one pass faster in 5/5 pairs each), 33 MB 9.9 vs 9.5 s
+#: (one pass faster in 4/5), 55 MB 9.9 vs 9.0 s (two passes faster in
+#: 4/4); 170 MB within noise (3 pairs).  The saved jobs are a fixed cost,
+#: while the all-docs shingle table the verify joins twice grows with the
+#: corpus.
+MINHASH_ONE_PASS_BYTES = 32 * 1024 * 1024
 
 #: live-edge ceiling under which connected_components stops the star
 #: rounds and finishes on the driver.  Measured on a 4-core host: a
@@ -353,7 +372,7 @@ def shared_span_pairs(docs: DataFrame, min_len: int = 40,
                 md5_int(F.col("t").substr(F.col("pos"),
                                           F.lit(L))).alias("g")))
     # materialize the anchor table once: the self-join's two sides are
-    # separate subtrees (the same trap _band_signatures documents), and
+    # separate subtrees (the same trap _minhash_table documents), and
     # the planner additionally mis-estimates the post-explode cardinality
     # from the doc-count stats and JVM-BROADCASTS one fully-exploded gram
     # side (measured round 6: the |text|-anchor explode + per-position
@@ -485,76 +504,120 @@ def minhash_sigs_from_hashes(base: Column, n_hashes: int) -> Column:
     return F.array(*sigs)
 
 
+def _shingle_set(t: str, shingle_n: int, use_words: bool) -> set:
+    """Distinct shingles of one non-NULL text: the rule of
+    :func:`shingles` / :func:`word_shingles` + ``array_distinct``.  Words
+    split on single spaces after trimming SPACES only (``F.trim`` and the
+    oracle's ``TRIM`` leave tabs and newlines); a text shorter than
+    ``shingle_n`` yields one partial shingle."""
+    if use_words:
+        words = t.strip(" ").split(" ")
+        n_sh = max(len(words) - shingle_n + 1, 1)
+        return {" ".join(words[i:i + shingle_n]) for i in range(n_sh)}
+    n_sh = max(len(t) - shingle_n + 1, 1)
+    return {t[i:i + shingle_n] for i in range(n_sh)}
+
+
 def shingle_set_udf(shingle_n: int, use_words: bool):
-    """Arrow-batched distinct-shingle arrays (same semantics as
+    """Arrow-batched distinct-shingle arrays, unordered (same set as
     shingles()/word_shingles() + array_distinct, but ~10× faster than the
     interpreted nested-HOF expression)."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
 
     @pandas_udf(ArrayType(StringType()))
     def _udf(text):
-        out = []
-        for t in text:
-            if t is None:  # match shingles(NULL) -> NULL (explode drops it)
-                out.append(None)
-                continue
-            if use_words:
-                words = t.strip().split(" ")
-                n_sh = max(len(words) - shingle_n + 1, 1)
-                sh = {" ".join(words[i:i + shingle_n]) for i in range(n_sh)}
-            else:
-                n_sh = max(len(t) - shingle_n + 1, 1)
-                sh = {t[i:i + shingle_n] for i in range(n_sh)}
-            out.append(sorted(sh))
-        return pd.Series(out)
+        # NULL text -> NULL array, as shingles(NULL) explodes to nothing
+        return pd.Series([None if t is None else
+                          list(_shingle_set(t, shingle_n, use_words))
+                          for t in text])
 
     return _udf
 
 
-def minhash_sig_udf(n_hashes: int, shingle_n: int, use_words: bool):
-    """Arrow-batched numpy minhash — identical math to the SQL flavor
-    (md5[:12hex] base, h_k = ((2k+1)h + 104729(k+1)) mod M61) but ~10-30×
-    faster: the 32-permutation nested HOF expression tree falls out of
-    whole-stage codegen and evaluates interpreted, with erratic JIT
-    behavior under concurrency.  Per batch: one md5 pass per distinct
-    shingle, then a vectorized (perms × shingles) min-reduce."""
+def minhash_band_udf(n_hashes: int, bands: int, shingle_n: int,
+                     use_words: bool, with_shingles: bool):
+    """One Python pass per doc → ``struct<bkeys: array<string>,
+    sh: array<string>>``.
+
+    ``bkeys[b]`` is LSH band b's bucket key: the ``"_"``-joined decimal
+    minhash values ``b·rows … b·rows + rows − 1`` — byte-identical to
+    ``concat_ws("_", element_at(sig, …))`` over the SQL spec's signature
+    (:func:`shingle_hashes` → :func:`minhash_sigs_from_hashes`; md5[:12
+    hex] base, h_k = ((2k+1)h + 104729(k+1)) mod M61), so stored
+    :func:`build_minhash_index` tables keep probing.  NULL text gives
+    ``bands`` empty keys, as ``concat_ws`` of NULLs does.  ``sh`` is the
+    doc's distinct shingle set, unordered (``array_intersect`` needs no
+    order), or NULL when ``with_shingles`` is off or the text is NULL.
+
+    Numpy per doc: one md5 per distinct shingle, then a vectorized
+    (perms × shingles) min-reduce.  The Column spec's 32-permutation
+    nested HOF tree falls out of whole-stage codegen and evaluates
+    interpreted — 10-30× slower."""
     import hashlib as _hl
 
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
 
+    rows = n_hashes // bands
     ks = np.arange(n_hashes, dtype=np.int64)
     a = (2 * ks + 1)[:, None]
     b = (104729 * (ks + 1))[:, None]
+    empty = [""] * bands
+    strs = ArrayType(StringType())
 
     # note: no type hints — `from __future__ import annotations` stringifies
     # them and pandas_udf can't resolve the local 'pd' alias at decode time
-    @pandas_udf(ArrayType(LongType()))
+    @pandas_udf(StructType([StructField("bkeys", strs),
+                            StructField("sh", strs)]))
     def _udf(text):
-        out = []
+        keys, sets = [], []
         for t in text:
-            if t is None:  # NULL text -> NULL signature (no bands emitted)
-                out.append(None)
+            if t is None:
+                keys.append(empty)
+                sets.append(None)
                 continue
-            if use_words:
-                words = t.strip().split(" ")  # match F.split(trim, " ")
-                n_sh = max(len(words) - shingle_n + 1, 1)
-                sh = {" ".join(words[i:i + shingle_n]) for i in range(n_sh)}
-            else:
-                n_sh = max(len(t) - shingle_n + 1, 1)
-                sh = {t[i:i + shingle_n] for i in range(n_sh)}
+            sh = _shingle_set(t, shingle_n, use_words)
             hs = np.fromiter(
                 (int(_hl.md5(s.encode()).hexdigest()[:12], 16) for s in sh),
                 dtype=np.int64, count=len(sh))
-            sig = ((hs[None, :] * a + b) % MERSENNE_61).min(axis=1)
-            out.append(sig.tolist())
-        return pd.Series(out)
+            sig = [str(v) for v in
+                   ((hs[None, :] * a + b) % MERSENNE_61).min(axis=1).tolist()]
+            keys.append(["_".join(sig[i:i + rows])
+                         for i in range(0, n_hashes, rows)])
+            sets.append(list(sh) if with_shingles else None)
+        return pd.DataFrame({"bkeys": keys, "sh": sets})
 
     return _udf
+
+
+def _minhash_table(docs: DataFrame, n_hashes: int, bands: int,
+                   shingle_n: int, text_col: str, id_col: str,
+                   use_words: bool, with_shingles: bool) -> DataFrame:
+    """(id, bkeys, sh) from :func:`minhash_band_udf`, materialized by one
+    eager localCheckpoint: every consumer (both sides of the banding
+    self-join, both verify joins) reads the block instead of re-running
+    the UDF, the dominant per-doc cost.  The block is freed by the
+    ContextCleaner on GC."""
+    from ..session import ensure_parallelism
+    if bands < 1 or n_hashes % bands != 0:
+        # rows=0 would make every band signature the empty string and the
+        # bucket self-join all-pairs (the quadratic blowup LSH exists to
+        # avoid); a non-divisible split would silently ignore trailing
+        # hashes and degrade recall below the documented 1-(1-s^r)^b
+        raise ValueError(
+            f"minhash banding: bands={bands} must divide n_hashes="
+            f"{n_hashes} with rows >= 1")
+    docs = ensure_parallelism(docs)
+    udf = minhash_band_udf(n_hashes, bands, shingle_n, use_words,
+                           with_shingles)
+    return docs.select(F.col(id_col).alias("id"),
+                       udf(F.col(text_col)).alias("m")) \
+        .select("id", "m.bkeys", "m.sh") \
+        .localCheckpoint(eager=True)
+
+
+def _bands(table: DataFrame) -> DataFrame:
+    """(id, band, bsig) rows of a :func:`_minhash_table`."""
+    return table.select("id", F.posexplode("bkeys").alias("band", "bsig"))
 
 
 def minhash_lsh_pairs(docs: DataFrame, threshold: float,
@@ -568,102 +631,77 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float,
     bands × rows = n_hashes; a pair collides if any band's signature slice
     matches exactly.  Candidates are verified with
     :func:`ngram_jaccard_pairs` semantics, so precision is exact; recall is
-    1−(1−s^r)^b (≈1 for near-dups at these defaults)."""
-    buckets = _band_signatures(docs, n_hashes, bands, shingle_n,
-                               text_col, id_col, use_words)
-    a = buckets.select(F.col("id").alias("id_a"), "band", "bsig")
-    b = buckets.select(F.col("id").alias("id_b"), "band", "bsig")
+    1−(1−s^r)^b (≈1 for near-dups at these defaults).
+
+    One Python pass and one materialization: :func:`minhash_band_udf`
+    emits every doc's band keys AND distinct shingle set, and one eager
+    checkpoint of that table feeds both the band self-join (posexplode →
+    equi-join on (band, bsig) → distinct pairs) and both sides of the
+    verify, which runs on a fixed count of partitions hashed by id_a (see
+    :func:`_jaccard_verify`).  The trade-off: shingle arrays are stored,
+    and shuffled into the verify joins, for every doc, not only for the
+    docs in some candidate pair — on a corpus with a small dup fraction
+    most of them are never read.  That costs more than the saved jobs
+    once the docs plan is estimated above ``MINHASH_ONE_PASS_BYTES``
+    (read off Spark's plan statistics, no job); there the UDF emits band
+    keys only and :func:`_verify_candidates` shingles just the candidate
+    docs in a second pass, as ``minhash_pairs_against_index`` does."""
+    one_pass = _plan_bytes(docs.select(id_col, text_col)) \
+        <= MINHASH_ONE_PASS_BYTES
+    table = _minhash_table(docs, n_hashes, bands, shingle_n, text_col,
+                           id_col, use_words, with_shingles=one_pass)
+    bnd = _bands(table)
+    a = bnd.select(F.col("id").alias("id_a"), "band", "bsig")
+    b = bnd.select(F.col("id").alias("id_b"), "band", "bsig")
     cand = (a.join(b, ["band", "bsig"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").dropDuplicates())
+    if one_pass:
+        return _jaccard_verify(cand, table.select("id", "sh"), threshold)
     return _verify_candidates(cand, docs, threshold, shingle_n, use_words,
                               text_col, id_col)
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Spark's size estimate of ``df``'s optimized plan, at no job: the
+    in-memory bytes of a materialized cache or checkpoint, the file bytes
+    of a scan, and Long.MaxValue where the plan has no statistics (a
+    DataFrame built from an RDD)."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
 
 
 def _band_signatures(docs: DataFrame, n_hashes: int, bands: int,
                      shingle_n: int, text_col: str, id_col: str,
                      use_words: bool) -> DataFrame:
     """(id, band, bsig) banded MinHash signatures — the LSH bucket keys."""
-    from ..session import ensure_parallelism
-    if bands < 1 or n_hashes % bands != 0:
-        # rows=0 would make every band signature the empty string and the
-        # bucket self-join all-pairs (the quadratic blowup LSH exists to
-        # avoid); a non-divisible split would silently ignore trailing
-        # hashes and degrade recall below the documented 1-(1-s^r)^b
-        raise ValueError(
-            f"minhash banding: bands={bands} must divide n_hashes="
-            f"{n_hashes} with rows >= 1")
-    docs = ensure_parallelism(docs)
-    rows = n_hashes // bands
-    # Arrow-batched numpy signatures (see minhash_sig_udf for why not HOFs)
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        minhash_sig_udf(n_hashes, shingle_n, use_words)(F.col(text_col))
-        .alias("sig"))
-    # materialize the signature table once: the banding self-join's two
-    # sides are separate subtrees, and exchange reuse is not guaranteed —
-    # left lazy, the signature UDF (the dominant per-doc cost) runs TWICE
-    # over the corpus (measured 2× wall).  The sketch is compact
-    # (n_docs × n_hashes × 8 B — the same bytes the banding shuffle ships
-    # anyway); the block is freed by the ContextCleaner on GC.
-    sig = sig.localCheckpoint(eager=True)
-    bands_df = sig.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(bnd).alias("band"),
-                     F.concat_ws("_", *[
-                         F.element_at("sig", bnd * rows + r + 1)
-                         for r in range(rows)]).alias("bsig"))
-            for bnd in range(bands)])).alias("b"))
-    return bands_df.select("id", F.col("b.band").alias("band"),
-                           F.col("b.bsig").alias("bsig"))
+    return _bands(_minhash_table(docs, n_hashes, bands, shingle_n,
+                                 text_col, id_col, use_words,
+                                 with_shingles=False))
 
 
-def _verify_candidates(cand: DataFrame, docs: DataFrame, threshold: float,
-                       shingle_n: int, use_words: bool, text_col: str,
-                       id_col: str) -> DataFrame:
-    """Exact-Jaccard verification of (id_a, id_b) candidate pairs; docs
-    must carry the text for every candidate id."""
-    # materialize the (small) candidate set once: it feeds BOTH the
-    # verify joins and the semi-join below — left lazy, every branch
-    # would re-run the whole signature pipeline; the checkpoint block is
-    # freed by the ContextCleaner when the result is GC'd (no pinned
-    # cache, same pattern as knn_join)
-    cand = cand.localCheckpoint(eager=True)
-    # exact verification driven BY the candidate pairs — never a raw
-    # shingle self-join (hot shingles in low-entropy corpora would make
-    # that quadratic).  The re-shingling is candidate-reduced: only docs
-    # that appear in some candidate pair are re-shingled (semi-join on
-    # the candidate id set) — at corpus scale with a small dup fraction
-    # the verify cost is ∝ |candidates|, not ∝ |corpus|.
-    #
-    # Intersections run on compact shingle-set ARRAYS, never an explode:
-    # the previous shape (cand ⋈ exploded-shingles(id_a) ⋈ shingles on
-    # (id_b, shingle)) fanned every pair out to |shingles per doc| rows —
-    # |cand|·~200 rows through two shuffles, measured round 6 as ~85% of
-    # the whole minhash wall.  Joining the (id, sorted distinct shingle
-    # array) table twice ships each pair as two array cells instead, and
-    # the shared count is a JVM-codegen array_intersect — identical math
-    # (both sides are DISTINCT sets, so |array_intersect| is exactly the
-    # old per-shingle match count and sizes are the array sizes).
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .unionByName(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    cand_docs = docs.join(cand_ids,
-                          docs[id_col] == cand_ids["id"], "left_semi")
-    tok = cand_docs.select(
-        F.col(id_col).alias("id"),
-        shingle_set_udf(shingle_n, use_words)(F.col(text_col)).alias("sh"))
-    # materialize tok once: the a- and b-side joins are two separate
-    # subtrees that would each re-shingle (and re-read) the candidate
-    # docs; tok is candidate-bound (|cand docs| rows of one array each)
-    tok = tok.localCheckpoint(eager=True)
+def _jaccard_verify(cand: DataFrame, tok: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Exact Jaccard of (id_a, id_b) candidate pairs from ``tok``'s
+    (id, sh) distinct-shingle arrays → (id_a, id_b, jaccard_e6).
+
+    Driven BY the candidate pairs, never a raw shingle self-join (hot
+    shingles in low-entropy corpora would make that quadratic).
+    Intersections run on compact shingle-set ARRAYS, never an explode:
+    an (id, shingle) shape fans every pair out to |shingles per doc| rows
+    through two shuffles (measured round 6 as ~85% of the minhash wall).
+    Joining the array table twice ships each pair as two array cells, and
+    the shared count is a JVM-codegen array_intersect — both sides are
+    DISTINCT sets, so |array_intersect| is exactly the per-shingle match
+    count and the set sizes are the array sizes."""
     # pin the verify stage's parallelism: the candidate rows are tiny
     # (two ids), so AQE coalesces their exchange to a handful of tasks by
     # BYTE size — but each row then pays an array_intersect over two
     # ~200-element shingle arrays, the stage's real cost (the same
     # bytes-vs-compute mismatch extract's key repartition documents).
-    # REPARTITION_BY_NUM is exempt from AQE coalescing.
+    # REPARTITION_BY_NUM is exempt from AQE coalescing.  By id_a alone:
+    # keyed (id_a, id_b) it matches the distinct's own exchange, Spark
+    # drops it as redundant, and AQE coalesces the verify into one task.
     n_parts = cand.sparkSession.sparkContext.defaultParallelism * 2
     cand = cand.repartition(n_parts, "id_a")
     tok_a = tok.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -680,6 +718,34 @@ def _verify_candidates(cand: DataFrame, docs: DataFrame, threshold: float,
     return (j.filter((F.col("shared") > 0)
                      & (F.col("jaccard_e6") >= int(threshold * 1e6)))
             .select("id_a", "id_b", "jaccard_e6"))
+
+
+def _verify_candidates(cand: DataFrame, docs: DataFrame, threshold: float,
+                       shingle_n: int, use_words: bool, text_col: str,
+                       id_col: str) -> DataFrame:
+    """Exact-Jaccard verification of (id_a, id_b) candidate pairs that
+    shingles only the docs in some candidate pair; docs must carry the
+    text for every candidate id.  At corpus scale with a small dup
+    fraction the verify cost is ∝ |candidates|, not ∝ |corpus|."""
+    # materialize the (small) candidate set once: it feeds BOTH the
+    # verify joins and the semi-join below — left lazy, every branch
+    # would re-run the whole signature pipeline; the checkpoint block is
+    # freed by the ContextCleaner when the result is GC'd (no pinned
+    # cache, same pattern as knn_join)
+    cand = cand.localCheckpoint(eager=True)
+    cand_ids = (cand.select(F.col("id_a").alias("id"))
+                .unionByName(cand.select(F.col("id_b").alias("id")))
+                .distinct())
+    cand_docs = docs.join(cand_ids,
+                          docs[id_col] == cand_ids["id"], "left_semi")
+    tok = cand_docs.select(
+        F.col(id_col).alias("id"),
+        shingle_set_udf(shingle_n, use_words)(F.col(text_col)).alias("sh"))
+    # materialize tok once: the a- and b-side joins are two separate
+    # subtrees that would each re-shingle (and re-read) the candidate
+    # docs; tok is candidate-bound (|cand docs| rows of one array each)
+    tok = tok.localCheckpoint(eager=True)
+    return _jaccard_verify(cand, tok, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -715,7 +781,7 @@ def simhash64_udf():
     (same md5 60-bit token values, integer bit votes, strict votes>0), but
     vectorized: the Column flavor builds SIXTY ``F.aggregate`` HOFs per doc,
     which fall out of whole-stage codegen and evaluate interpreted (the
-    same trap minhash_sig_udf documents — 10-30× penalty; at corpus scale
+    same trap minhash_band_udf documents — 10-30× penalty; at corpus scale
     this was the slowest per-doc signature in the repo).  Exact integer
     math throughout, so the SQL oracle replay of simhash64 stays green."""
     import hashlib as _hl

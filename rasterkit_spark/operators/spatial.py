@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
@@ -583,8 +583,9 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
 
     ``on_unplaceable``: rasters whose CRS is neither WebMercator (any
     alias) nor 4326 cannot be compared against the 4326 zone polygons —
-    ``"error"`` (default) raises up front naming offenders (one tiny
-    catalog-only action); ``"skip"`` silently excludes them.  Before this
+    ``"error"`` (default) raises naming offenders, counted by an
+    Observation on the candidate-pair checkpoint's job (no job of its
+    own); ``"skip"`` silently excludes them.  Before this
     screen they were conservatively paired with every zone and the PIP
     stage compared meter coordinates against degree polygons — all-outside,
     silently-empty stats.
@@ -628,18 +629,21 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
                                  "zsum": 0, "zcount": 0})
     """
     from ..session import ensure_parallelism
-    bad = (catalog.filter(F.col("media_kind") == "raster")
-           .filter(~F.col("epsg").isin(*_ZONAL_PLACEABLE)))
+    screen, pairs_catalog = None, catalog
     if on_unplaceable == "error":
-        offenders = [r.media_ref
-                     for r in bad.select("media_ref").limit(3).collect()]
-        if offenders:
-            raise ValueError(
-                "zonal_stats: catalog contains rasters whose CRS the "
-                f"4326-polygon PIP stage cannot place (e.g. {offenders}); "
-                "reproject them or pass on_unplaceable='skip'")
+        # counted on the pairs checkpoint's own job: the observed node sits
+        # on the catalog input, upstream of the placeable filter and the
+        # joins, so it counts every bad raster, paired or not
+        bad = (F.col("media_kind") == "raster") \
+            & ~F.col("epsg").isin(*_ZONAL_PLACEABLE)
+        ref = F.when(bad, F.col("media_ref"))
+        screen = [F.count_if(bad).alias("n"), F.min(ref).alias("lo"),
+                  F.any_value(ref, ignoreNulls=True).alias("any"),
+                  F.max(ref).alias("hi")]
+        obs = Observation()
+        pairs_catalog = catalog.observe(obs, *screen)
     elif on_unplaceable == "skip":
-        catalog = catalog.filter(
+        catalog = pairs_catalog = catalog.filter(
             (F.col("media_kind") != "raster")
             | F.col("epsg").isin(*_ZONAL_PLACEABLE))
     else:
@@ -664,7 +668,21 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
     # while the zonal wall is 7-12 s — the wall is this plan/stage
     # latency, not pixel work).  The table is one id pair per candidate,
     # the same cardinality class as the output itself.
-    pairs = zonal_footprint_pairs(zq, catalog).localCheckpoint(eager=True)
+    pairs = zonal_footprint_pairs(zq, pairs_catalog) \
+        .localCheckpoint(eager=True)
+    if screen is not None:
+        # an empty metrics row means no job ran the catalog subtree (the
+        # optimizer prunes it when there are no zones): screen the catalog
+        # with its own aggregate then
+        m = (obs.get if obs._jo.getRow().size()
+             else catalog.agg(*screen).first().asDict())
+        if m["n"]:
+            offenders = sorted({m["lo"], m["any"], m["hi"]} - {None})
+            raise ValueError(
+                f"zonal_stats: catalog contains {m['n']} raster(s) whose "
+                "CRS the 4326-polygon PIP stage cannot place (e.g. "
+                f"{offenders}); reproject them or pass "
+                "on_unplaceable='skip'")
     zr = zq.join(pairs, "query_id")
     keys = EX.expand_tile_keys(EX.resolve_regions(zr, catalog)) \
         .withColumnRenamed("query_id", "zone_id")

@@ -1,10 +1,12 @@
 """Forced-arm parity and job budgets for the size-driven dedup switches:
 connected components (star rounds vs the driver finish), shared spans
-(broadcast vs sort-merge gram join), plus exact verification's handling of
-zero-overlap candidates."""
+(broadcast vs sort-merge gram join), MinHash (one pass vs candidate-reduced
+verify), plus exact verification's handling of zero-overlap candidates and
+MinHash band-key parity with the SQL spec."""
 
 import contextlib
 import itertools
+import re
 
 import numpy as np
 import pandas as pd
@@ -244,3 +246,179 @@ def test_verify_candidates_drops_zero_overlap_pairs(spark):
                                 id_col="doc_id").collect()
     # docs 1 and 3 share one of 5 distinct word 3-grams
     assert [tuple(r) for r in got] == [(1, 3, 200_000)]
+
+
+# ---------------------------------------------------------------------------
+# MinHash: band-key parity, the one-pass/two-pass arms, plan and job budget
+# ---------------------------------------------------------------------------
+
+MH_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "the quick brown fox jumps over the lazy cat",
+    "ab",                                # shorter than shingle_n
+    None,
+    "",
+    "  padded  by spaces and  doubled gaps  ",
+    "\ttab first, newline last\n",
+    "zürich café naïve – ünïcödé shingles ✓",
+    "aaaaaaaaaaaa aaaaaaaaaaaa",         # one distinct char shingle
+]
+
+
+def _spec_band_rows(docs, n_hashes, bands, shingle_n, use_words):
+    """(id, band, bsig) from the SQL-spec Columns the oracle replays:
+    shingle_hashes → minhash_sigs_from_hashes → concat_ws per band."""
+    from pyspark.sql import functions as F
+    rows = n_hashes // bands
+    sig = docs.select(
+        F.col("doc_id").alias("id"),
+        DD.shingle_hashes(F.col("text"), shingle_n, use_words).alias("h")) \
+        .select("id", DD.minhash_sigs_from_hashes(F.col("h"), n_hashes)
+                .alias("sig"))
+    b = sig.select("id", F.explode(F.array(*[
+        F.struct(F.lit(bnd).alias("band"), F.concat_ws("_", *[
+            F.element_at("sig", bnd * rows + r + 1) for r in range(rows)])
+            .alias("bsig")) for bnd in range(bands)])).alias("b"))
+    return b.select("id", "b.band", "b.bsig")
+
+
+@pytest.mark.parametrize("use_words", [False, True], ids=["chars", "words"])
+def test_minhash_index_band_keys_match_sql_spec(spark, use_words):
+    """build_minhash_index's keys are byte-identical to the SQL spec's, so
+    stored indexes keep probing: NULL text gives empty keys, a text shorter
+    than shingle_n one partial shingle, and word splitting trims spaces
+    only."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(MH_TEXTS)], "doc_id long, text string")
+    n_hashes, bands, shingle_n = 32, 16, 3
+    got = _rows(DD.build_minhash_index(docs, n_hashes, bands, shingle_n,
+                                       use_words=use_words))
+    want = _rows(_spec_band_rows(docs, n_hashes, bands, shingle_n,
+                                 use_words))
+    assert len(got) == len(MH_TEXTS) * bands
+    assert got == want
+    null_id = MH_TEXTS.index(None)
+    assert {r[2] for r in got if r[0] == null_id} == {""}
+
+
+def _mh_corpus():
+    """60 docs of 40-60 words from a 200-word vocabulary, 12 planted
+    near-dups (one word replaced), a NULL text and a two-word text."""
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(200)]
+    texts = [" ".join(rng.choice(vocab, int(rng.integers(40, 60))))
+             for _ in range(60)]
+    for i in range(12):
+        words = texts[i].split(" ")
+        words[int(rng.integers(len(words)))] = "planted"
+        texts.append(" ".join(words))
+    texts += [None, "w1 w2"]
+    return texts
+
+
+def _mh_docs(spark, texts):
+    return spark.createDataFrame(pd.DataFrame(
+        {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}))
+
+
+def _jaccard_e6(a, b, n=3):
+    def sh(t):
+        w = t.strip(" ").split(" ")
+        return {" ".join(w[i:i + n]) for i in range(max(len(w) - n + 1, 1))}
+    sa, sb = sh(a), sh(b)
+    inter = len(sa & sb)
+    return inter * 1_000_000 // (len(sa) + len(sb) - inter)
+
+
+PY_UDF_NODES = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
+    r"FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b")
+
+
+@contextlib.contextmanager
+def _checkpoint_plans(spark, monkeypatch):
+    """Record the physical plan of every DataFrame localCheckpoint-ed
+    inside the block: plans an operator runs during its call."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    plans = []
+    orig = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "localCheckpoint", recording)
+        yield plans
+
+
+MH_ARGS = dict(threshold=0.7, n_hashes=32, bands=8, shingle_n=3,
+               use_words=True)
+
+
+def test_minhash_arms_match_exact_jaccard(spark, monkeypatch):
+    """Both arms of minhash_lsh_pairs — one pass (every doc's shingles
+    kept) and the candidate-reduced second pass above
+    MINHASH_ONE_PASS_BYTES — return the same rows, each an exact Jaccard.
+    By default a small corpus takes the one pass, and docs whose plan has
+    no size statistics (built from an RDD) take the two passes."""
+    texts = _mh_corpus()
+    docs = _mh_docs(spark, texts)
+    rdd_docs = spark.createDataFrame(list(enumerate(texts)),
+                                     "doc_id long, text string")
+    got, udfs = {}, {}
+    for arm, cap, d in (("default", None, docs),
+                        ("default_no_stats", None, rdd_docs),
+                        ("one_pass", 2 ** 63, rdd_docs),
+                        ("two_pass", -1, docs)):
+        with monkeypatch.context() as m, \
+                _checkpoint_plans(spark, monkeypatch) as plans:
+            if cap is not None:
+                m.setattr(DD, "MINHASH_ONE_PASS_BYTES", cap)
+            df = DD.minhash_lsh_pairs(d, **MH_ARGS)
+        got[arm] = _rows(df)
+        udfs[arm] = sum(len(PY_UDF_NODES.findall(p)) for p in plans)
+    assert udfs == {"default": 1, "default_no_stats": 2, "one_pass": 1,
+                    "two_pass": 2}, udfs
+    assert len(set(map(tuple, got.values()))) == 1, got
+    # 10 of the 12 planted pairs (Jaccard 0.87-0.95) collide: h_k =
+    # (2k+1)h + b never wraps mod M61 for 48-bit h, so every permutation
+    # keeps the same min shingle and a pair collides with probability J,
+    # in all bands or in none
+    planted = {(i, 60 + i) for i in range(12)}
+    found = {r[:2] for r in got["default"]}
+    assert found <= planted and len(found) >= 10, found
+    for a, b, j in got["default"]:
+        assert a < b and j == _jaccard_e6(texts[a], texts[b]) >= 700_000
+
+
+# call and collect jobs of minhash_lsh_pairs on the budget test's corpus:
+# the call is the one eager checkpoint; the collect runs the band join,
+# the distinct, the verify repartition and the two verify joins' shuffles
+MH_JOBS = (1, 5)
+
+
+def test_minhash_plan_and_job_budget(spark, monkeypatch):
+    """One Python-UDF node across the whole call, one eager checkpoint, the
+    verify fed by a REPARTITION_BY_NUM exchange on id_a alone, and the
+    call's and collect's job counts."""
+    docs = _mh_docs(spark, _mh_corpus()).cache()
+    docs.count()
+    with _checkpoint_plans(spark, monkeypatch) as plans:
+        df, call_jobs = _jobs(spark, "minhash-budget-call",
+                              lambda: DD.minhash_lsh_pairs(docs, **MH_ARGS))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    rows, collect_jobs = _jobs(spark, "minhash-budget-collect",
+                               lambda: _rows(df))
+    docs.unpersist()
+    assert len(rows) >= 10
+    udf_nodes = sum(len(PY_UDF_NODES.findall(p)) for p in plans + [plan])
+    assert udf_nodes == 1, plans
+    assert len(plans) == 1, plans
+    n = 2 * spark.sparkContext.defaultParallelism
+    by_id_a = re.findall(
+        rf"Exchange hashpartitioning\(id_a#\d+L?, {n}\), REPARTITION_BY_NUM",
+        plan)
+    assert len(by_id_a) == 1 and plan.count("REPARTITION_BY_NUM") == 1, plan
+    assert (call_jobs, collect_jobs) == MH_JOBS, \
+        (call_jobs, collect_jobs)

@@ -199,10 +199,10 @@ def test_tile_map_lookup_and_miss():
 # plan and job budget, both arms
 # ---------------------------------------------------------------------------
 
-# measured on the code before the partials became a per-tile-run pass,
-# with the fixture below: jobs the zonal_stats call runs (pairs checkpoint,
-# unplaceable screen, tile-map sizing and collect) and jobs its collect runs
-PARENT_JOBS = {"default": (8, 9), "broadcast_tiles": (11, 9)}
+# measured with the fixture below: jobs the zonal_stats call runs (pairs
+# checkpoint, which also counts unplaceable rasters through an
+# Observation; tile-map sizing and collect) and jobs its collect runs
+PARENT_JOBS = {"default": (6, 9), "broadcast_tiles": (9, 9)}
 # default arm plan census on the same code: shuffle Exchanges,
 # BroadcastExchanges and MapInPandas nodes
 DEFAULT_ARM_CENSUS = (4, 2, 1)
@@ -242,3 +242,28 @@ def test_zonal_plan_and_job_budget(spark, arm):
                      r"(?:level#\d+L? ASC NULLS FIRST, )?tile_x#\d+L? ASC "
                      r"NULLS FIRST, tile_y#\d+L? ASC NULLS FIRST\], false",
                      plan), plan
+
+
+@pytest.mark.parametrize("case", ["off_every_zone", "no_zones"])
+def test_unplaceable_raster_outside_every_zone_still_raises(spark, case):
+    """The default screen counts unplaceable rasters on the catalog input
+    of the pairs checkpoint, so it raises for a raster no zone overlaps
+    and, when there are no zones to pair with, for a catalog the pairs
+    job never reads."""
+    from pyspark.sql import functions as F
+    c = CP.build_corpus(n_media=4, n_docs=10, n_queries=6)
+    sd = c.to_spark(spark, ["zones", "media_catalog", "tiles"])
+    bad_ref = c.media_catalog[c.media_catalog.media_kind == "raster"] \
+        .media_ref.iloc[0]
+    is_bad = F.col("media_ref") == bad_ref
+    bad_cat = sd["media_catalog"] \
+        .withColumn("epsg", F.when(is_bad, F.lit(32633))
+                    .otherwise(F.col("epsg"))) \
+        .withColumn("origin_x", F.when(is_bad, F.lit(5.0e6))
+                    .otherwise(F.col("origin_x")))
+    zones = sd["zones"] if case == "off_every_zone" \
+        else sd["zones"].limit(0)
+    with pytest.raises(ValueError, match=rf"1 raster.*\['{bad_ref}'\]"):
+        SP.zonal_stats(zones, bad_cat, sd["tiles"])
+    # a placeable catalog passes in both cases
+    SP.zonal_stats(zones, sd["media_catalog"], sd["tiles"]).collect()
