@@ -15,9 +15,8 @@ Scale notes (10¹²-doc design point):
 - MinHash crosses the Python boundary once per doc: one Arrow UDF emits
   the band keys and the distinct shingle set, and one eager checkpoint of
   that table feeds banding and both verify joins.  The price is a shingle
-  array stored and shuffled for every doc, not only for candidate docs;
-  above ``MINHASH_ONE_PASS_BYTES`` of input the verify shingles only the
-  candidate docs, in a second pass;
+  array stored and shuffled for every doc, not only for candidate docs
+  (see :func:`minhash_lsh_pairs` for what that costs on a large corpus);
 - all joins are equi-joins on hashed keys → well-distributed by default,
   with AQE skew handling on; pair generation uses id< id ordering to halve
   the shuffle volume;
@@ -42,19 +41,6 @@ MERSENNE_61 = (1 << 61) - 1
 #: gram self-join (~24 B/row → ≈200 MB built relation, the guide's
 #: "few hundred MB is fine" band); above it the join sort-merges
 SPANS_BROADCAST_ANCHOR_CAP = 8_000_000
-
-#: docs-plan bytes (Spark's size estimate of the (id, text) columns) up
-#: to which minhash_lsh_pairs keeps every doc's shingle set in its one
-#: Python pass; above it only candidate docs are shingled, in a second
-#: pass (_verify_candidates).  Both arms forced, interleaved, on bench.py's
-#: big-dedup texts (5.4 KB docs, word 3-grams, 32 hashes / 8 bands), 4-core
-#: host, median walls one pass vs two: 5.4 MB 4.8 vs 5.6 s and 16.5 MB
-#: 5.3 vs 5.9 s (one pass faster in 5/5 pairs each), 33 MB 9.9 vs 9.5 s
-#: (one pass faster in 4/5), 55 MB 9.9 vs 9.0 s (two passes faster in
-#: 4/4); 170 MB within noise (3 pairs).  The saved jobs are a fixed cost,
-#: while the all-docs shingle table the verify joins twice grows with the
-#: corpus.
-MINHASH_ONE_PASS_BYTES = 32 * 1024 * 1024
 
 #: live-edge ceiling under which connected_components stops the star
 #: rounds and finishes on the driver.  Measured on a 4-core host: a
@@ -544,7 +530,11 @@ def minhash_band_udf(n_hashes: int, bands: int, shingle_n: int,
     ``concat_ws("_", element_at(sig, …))`` over the SQL spec's signature
     (:func:`shingle_hashes` → :func:`minhash_sigs_from_hashes`; md5[:12
     hex] base, h_k = ((2k+1)h + 104729(k+1)) mod M61), so stored
-    :func:`build_minhash_index` tables keep probing.  NULL text gives
+    :func:`build_minhash_index` tables keep probing.  One exception: word
+    mode trims spaces only, as the spec does, where earlier versions'
+    ``str.strip()`` also trimmed tabs and newlines — an index built by
+    those holds different keys for texts with a tab or newline at either
+    end, and needs a rebuild to find them.  NULL text gives
     ``bands`` empty keys, as ``concat_ws`` of NULLs does.  ``sh`` is the
     doc's distinct shingle set, unordered (``array_intersect`` needs no
     order), or NULL when ``with_shingles`` is off or the text is NULL.
@@ -641,34 +631,22 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float,
     :func:`_jaccard_verify`).  The trade-off: shingle arrays are stored,
     and shuffled into the verify joins, for every doc, not only for the
     docs in some candidate pair — on a corpus with a small dup fraction
-    most of them are never read.  That costs more than the saved jobs
-    once the docs plan is estimated above ``MINHASH_ONE_PASS_BYTES``
-    (read off Spark's plan statistics, no job); there the UDF emits band
-    keys only and :func:`_verify_candidates` shingles just the candidate
-    docs in a second pass, as ``minhash_pairs_against_index`` does."""
-    one_pass = _plan_bytes(docs.select(id_col, text_col)) \
-        <= MINHASH_ONE_PASS_BYTES
+    most of them are never read.  On small corpora the saved jobs and
+    Python stage are most of the wall.  On bench.py's big-dedup corpus
+    (30k docs, 170 MB, 4 cores) the call ran ~20% slower (median of 5
+    interleaved pairs) than shingling only the candidate docs in a second
+    Python pass (:func:`_verify_candidates`, which
+    ``minhash_pairs_against_index`` still uses): the UDF pass itself was
+    no slower, but the verify shuffles the all-docs shingle table."""
     table = _minhash_table(docs, n_hashes, bands, shingle_n, text_col,
-                           id_col, use_words, with_shingles=one_pass)
+                           id_col, use_words, with_shingles=True)
     bnd = _bands(table)
     a = bnd.select(F.col("id").alias("id_a"), "band", "bsig")
     b = bnd.select(F.col("id").alias("id_b"), "band", "bsig")
     cand = (a.join(b, ["band", "bsig"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").dropDuplicates())
-    if one_pass:
-        return _jaccard_verify(cand, table.select("id", "sh"), threshold)
-    return _verify_candidates(cand, docs, threshold, shingle_n, use_words,
-                              text_col, id_col)
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Spark's size estimate of ``df``'s optimized plan, at no job: the
-    in-memory bytes of a materialized cache or checkpoint, the file bytes
-    of a scan, and Long.MaxValue where the plan has no statistics (a
-    DataFrame built from an RDD)."""
-    return int(str(df._jdf.queryExecution().optimizedPlan().stats()
-                   .sizeInBytes()))
+    return _jaccard_verify(cand, table.select("id", "sh"), threshold)
 
 
 def _band_signatures(docs: DataFrame, n_hashes: int, bands: int,

@@ -629,26 +629,27 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
                                  "zsum": 0, "zcount": 0})
     """
     from ..session import ensure_parallelism
+    if on_unplaceable not in ("error", "skip"):
+        raise ValueError(
+            f"on_unplaceable must be 'error' or 'skip', got {on_unplaceable!r}")
+    placeable = (F.col("media_kind") != "raster") \
+        | F.col("epsg").isin(*_ZONAL_PLACEABLE)
     screen, pairs_catalog = None, catalog
     if on_unplaceable == "error":
         # counted on the pairs checkpoint's own job: the observed node sits
         # on the catalog input, upstream of the placeable filter and the
-        # joins, so it counts every bad raster, paired or not
-        bad = (F.col("media_kind") == "raster") \
-            & ~F.col("epsg").isin(*_ZONAL_PLACEABLE)
+        # joins, so it counts every bad raster, paired or not.  The filter
+        # keeps bad rasters out of the pairs job, whose every-zone fallback
+        # would otherwise cross them with all zones before the raise
+        bad = ~placeable
         ref = F.when(bad, F.col("media_ref"))
         screen = [F.count_if(bad).alias("n"), F.min(ref).alias("lo"),
                   F.any_value(ref, ignoreNulls=True).alias("any"),
                   F.max(ref).alias("hi")]
         obs = Observation()
-        pairs_catalog = catalog.observe(obs, *screen)
-    elif on_unplaceable == "skip":
-        catalog = pairs_catalog = catalog.filter(
-            (F.col("media_kind") != "raster")
-            | F.col("epsg").isin(*_ZONAL_PLACEABLE))
+        pairs_catalog = catalog.observe(obs, *screen).filter(placeable)
     else:
-        raise ValueError(
-            f"on_unplaceable must be 'error' or 'skip', got {on_unplaceable!r}")
+        catalog = pairs_catalog = catalog.filter(placeable)
     z = zones.withColumn("_coords", wkt_coords_udf(F.col("polygon_wkt")))
     zq = z.select(
         F.col("zone_id").alias("query_id"),
@@ -673,7 +674,9 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
     if screen is not None:
         # an empty metrics row means no job ran the catalog subtree (the
         # optimizer prunes it when there are no zones): screen the catalog
-        # with its own aggregate then
+        # with its own aggregate then.  The JVM row is read directly
+        # because Observation.get fails on an empty row (PySpark 4.1's
+        # toPyRow asserts a schema) instead of returning {}
         m = (obs.get if obs._jo.getRow().size()
              else catalog.agg(*screen).first().asDict())
         if m["n"]:

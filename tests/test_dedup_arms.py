@@ -1,8 +1,8 @@
 """Forced-arm parity and job budgets for the size-driven dedup switches:
-connected components (star rounds vs the driver finish), shared spans
-(broadcast vs sort-merge gram join), MinHash (one pass vs candidate-reduced
-verify), plus exact verification's handling of zero-overlap candidates and
-MinHash band-key parity with the SQL spec."""
+connected components (star rounds vs the driver finish) and shared spans
+(broadcast vs sort-merge gram join), plus exact verification's handling
+of zero-overlap candidates and MinHash's band-key parity with the SQL
+spec, exact verify, plan and job budget."""
 
 import contextlib
 import itertools
@@ -249,7 +249,7 @@ def test_verify_candidates_drops_zero_overlap_pairs(spark):
 
 
 # ---------------------------------------------------------------------------
-# MinHash: band-key parity, the one-pass/two-pass arms, plan and job budget
+# MinHash: band-key parity, exact verify, plan and job budget
 # ---------------------------------------------------------------------------
 
 MH_TEXTS = [
@@ -356,39 +356,19 @@ MH_ARGS = dict(threshold=0.7, n_hashes=32, bands=8, shingle_n=3,
                use_words=True)
 
 
-def test_minhash_arms_match_exact_jaccard(spark, monkeypatch):
-    """Both arms of minhash_lsh_pairs — one pass (every doc's shingles
-    kept) and the candidate-reduced second pass above
-    MINHASH_ONE_PASS_BYTES — return the same rows, each an exact Jaccard.
-    By default a small corpus takes the one pass, and docs whose plan has
-    no size statistics (built from an RDD) take the two passes."""
+def test_minhash_pairs_are_exact_jaccard(spark):
+    """minhash_lsh_pairs emits the planted near-dups, each pair once with
+    id_a < id_b and its exact word 3-gram Jaccard."""
     texts = _mh_corpus()
-    docs = _mh_docs(spark, texts)
-    rdd_docs = spark.createDataFrame(list(enumerate(texts)),
-                                     "doc_id long, text string")
-    got, udfs = {}, {}
-    for arm, cap, d in (("default", None, docs),
-                        ("default_no_stats", None, rdd_docs),
-                        ("one_pass", 2 ** 63, rdd_docs),
-                        ("two_pass", -1, docs)):
-        with monkeypatch.context() as m, \
-                _checkpoint_plans(spark, monkeypatch) as plans:
-            if cap is not None:
-                m.setattr(DD, "MINHASH_ONE_PASS_BYTES", cap)
-            df = DD.minhash_lsh_pairs(d, **MH_ARGS)
-        got[arm] = _rows(df)
-        udfs[arm] = sum(len(PY_UDF_NODES.findall(p)) for p in plans)
-    assert udfs == {"default": 1, "default_no_stats": 2, "one_pass": 1,
-                    "two_pass": 2}, udfs
-    assert len(set(map(tuple, got.values()))) == 1, got
+    got = _rows(DD.minhash_lsh_pairs(_mh_docs(spark, texts), **MH_ARGS))
     # 10 of the 12 planted pairs (Jaccard 0.87-0.95) collide: h_k =
     # (2k+1)h + b never wraps mod M61 for 48-bit h, so every permutation
     # keeps the same min shingle and a pair collides with probability J,
     # in all bands or in none
     planted = {(i, 60 + i) for i in range(12)}
-    found = {r[:2] for r in got["default"]}
-    assert found <= planted and len(found) >= 10, found
-    for a, b, j in got["default"]:
+    found = {r[:2] for r in got}
+    assert found <= planted and len(found) == len(got) >= 10, got
+    for a, b, j in got:
         assert a < b and j == _jaccard_e6(texts[a], texts[b]) >= 700_000
 
 

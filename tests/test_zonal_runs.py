@@ -245,11 +245,13 @@ def test_zonal_plan_and_job_budget(spark, arm):
 
 
 @pytest.mark.parametrize("case", ["off_every_zone", "no_zones"])
-def test_unplaceable_raster_outside_every_zone_still_raises(spark, case):
+def test_unplaceable_raster_outside_every_zone_still_raises(spark, case,
+                                                           monkeypatch):
     """The default screen counts unplaceable rasters on the catalog input
     of the pairs checkpoint, so it raises for a raster no zone overlaps
     and, when there are no zones to pair with, for a catalog the pairs
-    job never reads."""
+    job never reads.  The pairs job itself never pairs the bad raster
+    with the zones it is about to reject."""
     from pyspark.sql import functions as F
     c = CP.build_corpus(n_media=4, n_docs=10, n_queries=6)
     sd = c.to_spark(spark, ["zones", "media_catalog", "tiles"])
@@ -263,7 +265,20 @@ def test_unplaceable_raster_outside_every_zone_still_raises(spark, case):
                     .otherwise(F.col("origin_x")))
     zones = sd["zones"] if case == "off_every_zone" \
         else sd["zones"].limit(0)
-    with pytest.raises(ValueError, match=rf"1 raster.*\['{bad_ref}'\]"):
+    DataFrame = type(zones)
+    checkpointed, orig = [], DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(orig(self, *args, **kwargs))
+        return checkpointed[-1]
+
+    with monkeypatch.context() as m, \
+            pytest.raises(ValueError, match=rf"1 raster.*\['{bad_ref}'\]"):
+        m.setattr(DataFrame, "localCheckpoint", recording)
         SP.zonal_stats(zones, bad_cat, sd["tiles"])
+    assert len(checkpointed) == 1
+    pairs = checkpointed[0]
+    assert (pairs.count() > 0) == (case == "off_every_zone")
+    assert pairs.filter(F.col("media_ref") == bad_ref).count() == 0
     # a placeable catalog passes in both cases
     SP.zonal_stats(zones, sd["media_catalog"], sd["tiles"]).collect()
