@@ -605,6 +605,16 @@ def _minhash_table(docs: DataFrame, n_hashes: int, bands: int,
         .localCheckpoint(eager=True)
 
 
+def _pairable(bands: DataFrame) -> DataFrame:
+    """Band rows that can pair.  A NULL text's keys are all "" (the spec's
+    concat_ws of NULLs; any other text has ≥ 1 shingle and a non-empty
+    key), so joined as-is every NULL doc pairs with every other in every
+    band — quadratic in their count — for a verify that drops them all.
+    Stored :func:`build_minhash_index` tables keep the "" rows, as the spec
+    does; the band joins skip them."""
+    return bands.filter(F.col("bsig") != "")
+
+
 def _bands(table: DataFrame) -> DataFrame:
     """(id, band, bsig) rows of a :func:`_minhash_table`."""
     return table.select("id", F.posexplode("bkeys").alias("band", "bsig"))
@@ -640,7 +650,7 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float,
     no slower, but the verify shuffles the all-docs shingle table."""
     table = _minhash_table(docs, n_hashes, bands, shingle_n, text_col,
                            id_col, use_words, with_shingles=True)
-    bnd = _bands(table)
+    bnd = _pairable(_bands(table))
     a = bnd.select(F.col("id").alias("id_a"), "band", "bsig")
     b = bnd.select(F.col("id").alias("id_b"), "band", "bsig")
     cand = (a.join(b, ["band", "bsig"])
@@ -1070,8 +1080,10 @@ def minhash_pairs_against_index(new_docs: DataFrame, index: DataFrame,
     dropped as self-matches)."""
     new_bands = _band_signatures(new_docs, n_hashes, bands, shingle_n,
                                  text_col, id_col, use_words)
-    cand = (new_bands.select(F.col("id").alias("id_a"), "band", "bsig")
-            .join(index.select(F.col("id").alias("id_b"), "band", "bsig"),
+    cand = (_pairable(new_bands)
+            .select(F.col("id").alias("id_a"), "band", "bsig")
+            .join(_pairable(index)
+                  .select(F.col("id").alias("id_b"), "band", "bsig"),
                   ["band", "bsig"])
             .filter(F.col("id_a") != F.col("id_b"))
             .select("id_a", "id_b").dropDuplicates())

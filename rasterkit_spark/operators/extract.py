@@ -161,13 +161,15 @@ def join_tiles(keys: DataFrame, tiles: DataFrame) -> DataFrame:
 
 
 #: per-python-worker decode memo: many queries over the same raster hit
-#: the same tiles, and partitioning by query_id places those hits in the
-#: same tasks — without a cache each (query, tile) match re-inflates the
-#: blob (measured: the dominant cost of the COG-regime extract when
-#: |queries| ≫ |tiles|).  Keyed by chunk identity INCLUDING a blob crc
-#: (tile coords alone could collide across overview levels/corpora);
-#: bounded LRU (~cap × chunk bytes, 256×256 u8 → ≤ 32 MB/worker); cached
-#: arrays are frozen read-only — clip_chunk_into only reads its source.
+#: the same tiles, and the rows are partitioned by (query_id, media_ref),
+#: so one raster's hits land in every task (and, workers being reused, in
+#: later tasks and calls on the same worker) — without a cache each
+#: (query, tile) match re-inflates the blob (measured: the dominant cost
+#: of the COG-regime extract when |queries| ≫ |tiles|).  Keyed by chunk
+#: identity INCLUDING a blob crc (tile coords alone could collide across
+#: overview levels/corpora); bounded LRU (~cap × chunk bytes, 256×256 u8
+#: → ≤ 32 MB/worker); cached arrays are frozen read-only —
+#: clip_chunk_into only reads its source.
 _DECODE_CACHE: "OrderedDict[tuple, np.ndarray]" = None  # set below
 _DECODE_CACHE_CAP = 512
 
@@ -242,12 +244,13 @@ def sorted_by_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     the rows are small in BYTES (compressed blobs, or key rows) but costly
     downstream, and AQE's byte-sized coalescing squeezed whole assembly
     stages onto ONE task.  One per core, not more: every Python task pays a
-    fixed set-up (Spark 4.1's worker runs ``importlib.invalidate_caches()``
-    per task, which re-reads pyspark.zip's directory once per zip
-    importer), so each extra wave of tasks adds that cost to the wall.  On
-    a 4-core host an identity ``mapInPandas`` over 4,000 tiny rows took
-    0.33 s as 4 tasks and 1.03 s as 12; the former ``3 × cores`` count
-    paid it in three waves.  Measure before raising the count."""
+    fixed set-up (dispatch, the worker's per-task protocol and UDF
+    unpickling, the Arrow stream), so each extra wave of tasks adds it to
+    the wall.  On a 4-core host an identity ``mapInPandas`` over 4,000 tiny
+    rows takes 0.14–0.19 s as 4 tasks and 0.26–0.27 s as 12 (min of 9
+    collects, with Spark's archives pinned by ``rasterkit_spark._archives``;
+    unpinned, Spark's per-task ``importlib.invalidate_caches()`` made it
+    0.33 s and 0.91 s).  Measure before raising the count."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys).sortWithinPartitions(*keys)
 

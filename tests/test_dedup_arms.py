@@ -2,7 +2,8 @@
 connected components (star rounds vs the driver finish) and shared spans
 (broadcast vs sort-merge gram join), plus exact verification's handling
 of zero-overlap candidates and MinHash's band-key parity with the SQL
-spec, exact verify, plan and job budget."""
+spec, exact verify, plan and job budget, and NULL-text docs kept out of
+its band joins."""
 
 import contextlib
 import itertools
@@ -316,9 +317,10 @@ def _mh_corpus():
     return texts
 
 
-def _mh_docs(spark, texts):
+def _mh_docs(spark, texts, first_id=0):
     return spark.createDataFrame(pd.DataFrame(
-        {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}))
+        {"doc_id": np.arange(first_id, first_id + len(texts), dtype=np.int64),
+         "text": texts}))
 
 
 def _jaccard_e6(a, b, n=3):
@@ -402,3 +404,47 @@ def test_minhash_plan_and_job_budget(spark, monkeypatch):
     assert len(by_id_a) == 1 and plan.count("REPARTITION_BY_NUM") == 1, plan
     assert (call_jobs, collect_jobs) == MH_JOBS, \
         (call_jobs, collect_jobs)
+
+
+def _recording(monkeypatch, name):
+    """Candidate frames passed to dedup's verify function ``name``."""
+    cands, orig = [], getattr(DD, name)
+
+    def recording(cand, *args, **kwargs):
+        cands.append(cand)
+        return orig(cand, *args, **kwargs)
+
+    monkeypatch.setattr(DD, name, recording)
+    return cands
+
+
+N_NULL = 300
+
+
+def test_null_text_docs_add_no_minhash_candidates(spark, monkeypatch):
+    """NULL text's band keys are all "" (the spec's); 300 more NULL-text
+    docs leave the pairs unchanged and add no candidate row, in the
+    self-join and against a stored index, instead of pairing every NULL
+    doc with every other."""
+    texts = _mh_corpus()
+    nulls = [None] * N_NULL
+    cands = _recording(monkeypatch, "_jaccard_verify")
+    base = _rows(DD.minhash_lsh_pairs(_mh_docs(spark, texts), **MH_ARGS))
+    more = _rows(DD.minhash_lsh_pairs(_mh_docs(spark, texts + nulls),
+                                      **MH_ARGS))
+    assert more == base and len(base) >= 10
+    assert [c.count() for c in cands] == [cands[0].count()] * 2
+
+    # against an index: corpus = the 60 originals, batch = the 12 planted
+    # near-dups; NULL docs on both sides
+    cands = _recording(monkeypatch, "_verify_candidates")
+    runs = []
+    for n in (0, N_NULL):
+        corpus = _mh_docs(spark, texts[:60] + nulls[:n])
+        batch = _mh_docs(spark, texts[60:72] + nulls[:n], first_id=1000)
+        index = DD.build_minhash_index(
+            corpus, **{k: v for k, v in MH_ARGS.items() if k != "threshold"})
+        runs.append(_rows(DD.minhash_pairs_against_index(
+            batch, index, corpus, **MH_ARGS)))
+    assert runs[1] == runs[0] and len(runs[0]) >= 10
+    assert [c.count() for c in cands] == [cands[0].count()] * 2

@@ -1,0 +1,66 @@
+"""Job and plan budgets of the two raster_cold operators, extract and
+build_pyramid: jobs per call and per collect (counted under a job group),
+and the plan's shuffle Exchange, BroadcastExchange and MapInPandas nodes.
+The inputs mirror the perfbench workload's shapes on a small fixture:
+cached catalog and tile tables, a query frame built on the driver, and a
+pyramid over the level-0 tiles of a few rasters."""
+
+import re
+
+import pytest
+from pyspark.sql import functions as F
+from test_dedup_arms import _jobs
+
+from rasterkit_spark import api
+from rasterkit_spark.fixtures import corpus as CP
+
+# measured on this fixture before the worker archive pin (which must not
+# move them): (call jobs, collect jobs) and (shuffle Exchanges,
+# BroadcastExchanges, MapInPandas nodes) of the executed plan
+BUDGETS = {
+    "extract": {"jobs": (0, 4), "census": (1, 2, 1)},
+    "pyramid": {"jobs": (0, 3), "census": (1, 1, 1)},
+}
+
+
+def _census(plan: str):
+    return (len(re.findall(r"(?<!Broadcast)Exchange ", plan)),
+            plan.count("BroadcastExchange"), plan.count("MapInPandas"))
+
+
+@pytest.fixture(scope="module")
+def raster_inputs(spark):
+    c = CP.build_corpus(n_media=6, n_docs=20, n_queries=8)
+    sd = c.to_spark(spark, ["queries_bbox", "media_catalog", "tiles"])
+    for name in ("media_catalog", "tiles"):
+        sd[name] = sd[name].cache()
+        sd[name].count()
+    refs = sorted(c.media_catalog[c.media_catalog.media_kind == "raster"]
+                  .media_ref)[:3]
+    sd["pyramid_tiles"] = sd["tiles"].filter(F.col("media_ref").isin(refs))
+    yield sd
+    for name in ("media_catalog", "tiles"):
+        sd[name].unpersist()
+
+
+CALLS = {
+    "extract": lambda sd: api.extract(sd["queries_bbox"], sd["media_catalog"],
+                                      sd["tiles"]),
+    "pyramid": lambda sd: api.build_pyramid(sd["pyramid_tiles"],
+                                            sd["media_catalog"], levels=1),
+}
+
+
+@pytest.mark.parametrize("op", sorted(CALLS))
+def test_raster_op_plan_and_job_budget(spark, raster_inputs, op):
+    df, call_jobs = _jobs(spark, f"{op}-budget-call",
+                          lambda: CALLS[op](raster_inputs))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    rows, collect_jobs = _jobs(spark, f"{op}-budget-collect", df.collect)
+    assert rows, op
+    budget = BUDGETS[op]
+    assert (call_jobs, collect_jobs) == budget["jobs"], \
+        f"{op}: (call, collect) jobs {(call_jobs, collect_jobs)}"
+    assert _census(plan) == budget["census"], \
+        f"{op}: (Exchange, BroadcastExchange, MapInPandas) " \
+        f"{_census(plan)}\n{plan}"
