@@ -45,7 +45,6 @@ COMPRESSION_DEFLATE = 8
 COMPRESSION_ZSTD = 14
 SUPPORTED_COMPRESSIONS = (COMPRESSION_NONE, COMPRESSION_DEFLATE, COMPRESSION_ZSTD)
 
-PREDICTOR_NONE = 1
 PREDICTOR_HORIZONTAL = 2
 
 try:  # preferred backend when the wheel is present

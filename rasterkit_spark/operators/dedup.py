@@ -31,16 +31,20 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, IntegralType,
                                StringType, StructField, StructType)
 
+from ..plans.materialize import materialize
+
 MERSENNE_61 = (1 << 61) - 1
 
-#: anchor-row ceiling for broadcasting one side of shared_span_pairs'
-#: gram self-join (~24 B/row → ≈200 MB built relation, the guide's
-#: "few hundred MB is fine" band); above it the join sort-merges
-SPANS_BROADCAST_ANCHOR_CAP = 8_000_000
+#: byte ceiling for broadcasting one side of shared_span_pairs' gram
+#: self-join, counted as the anchors' id bytes plus 16 B/row for (pos, g):
+#: 8M long-id anchors (24 B/row, ≈200 MB built relation, the guide's "few
+#: hundred MB is fine" band).  String ids count their UTF-8 bytes, so
+#: long ones reach it at fewer rows; above it the join sort-merges
+SPANS_BROADCAST_BYTES = 192_000_000
 
 #: live-edge ceiling under which connected_components stops the star
 #: rounds and finishes on the driver.  Measured on a 4-core host: a
@@ -49,16 +53,6 @@ SPANS_BROADCAST_ANCHOR_CAP = 8_000_000
 #: (Arrow toPandas) plus 0.2 s against 3.0 s.  1M (long, long) edges are
 #: ~16 MB of Arrow on the driver.
 CC_DRIVER_EDGE_CAP = 1_000_000
-
-
-def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
-    """Eager localCheckpoint plus its row count.  The count is an
-    Observation riding the checkpoint's own job, so it costs no job of its
-    own (a separate ``count()`` is one more job over the block)."""
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n")) \
-        .localCheckpoint(eager=True)
-    return df, obs.get["n"]
 
 
 def md5_int(c: Column) -> Column:
@@ -177,7 +171,7 @@ def _is_min_star_forest(e: DataFrame) -> bool:
            .agg(F.sum("m").alias("m"), F.sum("r").alias("r"))
            .filter((F.col("m") > 1)
                    | ((F.col("m") > 0) & (F.col("r") > 0))))
-    return bad.isEmpty()
+    return bad.isEmpty()  # eager: the rounds' convergence decision
 
 
 def _driver_components(e: DataFrame) -> DataFrame:
@@ -185,7 +179,7 @@ def _driver_components(e: DataFrame) -> DataFrame:
     Arrow-collect the edges, then union-find over the sorted distinct ids
     where the smaller root always wins, so every root is its component's
     min id.  Callers guarantee the ids' Python order is Spark's order."""
-    pdf = e.toPandas()
+    pdf = e.toPandas()  # eager: the driver finish reads the edges
     ends = np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()])
     nodes, idx = np.unique(ends, return_inverse=True)
     parent = list(range(len(nodes)))
@@ -218,9 +212,9 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     """Connected components of an undirected dup-pair graph →
     (node, component) with component = min node id of the component.
 
-    Two arms, picked from the live edge count, which
-    :func:`_counted_checkpoint` observes on every eager checkpoint at no
-    extra job:
+    Two arms, picked from the live edge count, which every eager
+    checkpoint observes at no extra job
+    (:func:`~rasterkit_spark.plans.materialize.materialize`):
 
     - *star rounds*, while the edge set is larger than
       ``CC_DRIVER_EDGE_CAP``: alternating large-star/small-star (Kiveris
@@ -261,21 +255,21 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     t = e.schema["u"].dataType
     driver_ok = t == e.schema["v"].dataType and (
         isinstance(t, (IntegralType, BinaryType)) or t == StringType())
-    e, n = _counted_checkpoint(e)
+    e, m = materialize(e, n=F.count(F.lit(1)))
     # exactly ONE alternation round per checkpoint: each star references
     # its input ~3× (the union's two sides + the min join-back), so an
     # un-materialized previous round would re-execute several times
     # inside the next one — batching two rounds per checkpoint was tried
     # round 6 and measured SLOWER for exactly that reason
     for rnd in range(max_iter + 1):
-        if driver_ok and n <= CC_DRIVER_EDGE_CAP:
+        if driver_ok and m["n"] <= CC_DRIVER_EDGE_CAP:
             return _driver_components(e)
         if rnd and _is_min_star_forest(e):
             break
         if rnd == max_iter:
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} rounds")
-        e, n = _counted_checkpoint(_small_star(_large_star(e)))
+        e, m = materialize(_small_star(_large_star(e)), n=F.count(F.lit(1)))
     # converged star forest: every edge is (member, component-min)
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node"),
@@ -358,18 +352,18 @@ def shared_span_pairs(docs: DataFrame, min_len: int = 40,
                 md5_int(F.col("t").substr(F.col("pos"),
                                           F.lit(L))).alias("g")))
     # materialize the anchor table once: the self-join's two sides are
-    # separate subtrees (the same trap _minhash_table documents), and
-    # the planner additionally mis-estimates the post-explode cardinality
-    # from the doc-count stats and JVM-BROADCASTS one fully-exploded gram
-    # side (measured round 6: the |text|-anchor explode + per-position
-    # md5 ran FOUR times per call — 2 sides × the spans/anchors branches —
-    # with one copy shipped as a broadcast that dies at the 8 GB cap at
-    # corpus scale).  After the checkpoint both sides read the same
-    # ~24 B/row (id, pos, g) blocks; the block is freed by the
-    # ContextCleaner on GC.  The exact anchor count (pre-df-cap upper
-    # bound), which drives the join strategy below, is observed on the
-    # checkpoint's own job.
-    grams, n_anchors_total = _counted_checkpoint(grams)
+    # separate subtrees, and the planner mis-estimates the post-explode
+    # cardinality and JVM-broadcasts one exploded side (round 6 measured
+    # the explode + md5 running four times per call, one copy a broadcast
+    # that dies at the 8 GB cap at corpus scale).  The anchors' exact
+    # bytes (pre-df-cap upper bound) are observed in the same job; string
+    # ids can be several times the 8 B of a long
+    id_bytes = (F.octet_length("id")
+                if isinstance(grams.schema["id"].dataType,
+                              (StringType, BinaryType))
+                else F.lit(8))  # a fixed-width id fills one 8-byte slot
+    grams, size = materialize(
+        grams, bytes=F.sum(F.coalesce(id_bytes, F.lit(0)) + 16))
     if max_gram_docs is not None:
         keep = (grams.groupBy("g")
                 .agg(F.countDistinct("id").alias("df"))
@@ -379,14 +373,11 @@ def shared_span_pairs(docs: DataFrame, min_len: int = 40,
                      "g")
     b = grams.select(F.col("id").alias("id_b"), F.col("pos").alias("pb"),
                      "g")
-    # size-driven join strategy from the EXACT anchor count: the
-    # checkpointed scan inherits the pre-explode cardinality ESTIMATE, so
-    # left to itself the planner JVM-broadcasts one whole anchor side —
-    # fine at test scale, dead at the 8 GB broadcast cap at corpus scale.
-    # Small anchor tables broadcast explicitly (no shuffle, no sort);
-    # big ones sort-merge on the 8-byte gram key, which spills gracefully
-    # on hot grams.
-    if n_anchors_total <= SPANS_BROADCAST_ANCHOR_CAP:
+    # size-driven join strategy from the EXACT anchor bytes (the
+    # checkpointed scan inherits the pre-explode ESTIMATE): small tables
+    # broadcast explicitly, big ones sort-merge on the 8-byte gram key,
+    # which spills gracefully on hot grams.  No anchor sums to NULL
+    if (size["bytes"] or 0) <= SPANS_BROADCAST_BYTES:
         m = a.join(F.broadcast(b), "g")
     else:
         m = a.hint("merge").join(b.hint("merge"), "g")
@@ -585,8 +576,7 @@ def _minhash_table(docs: DataFrame, n_hashes: int, bands: int,
     """(id, bkeys, sh) from :func:`minhash_band_udf`, materialized by one
     eager localCheckpoint: every consumer (both sides of the banding
     self-join, both verify joins) reads the block instead of re-running
-    the UDF, the dominant per-doc cost.  The block is freed by the
-    ContextCleaner on GC."""
+    the UDF, the dominant per-doc cost."""
     from ..session import ensure_parallelism
     if bands < 1 or n_hashes % bands != 0:
         # rows=0 would make every band signature the empty string and the
@@ -599,10 +589,9 @@ def _minhash_table(docs: DataFrame, n_hashes: int, bands: int,
     docs = ensure_parallelism(docs)
     udf = minhash_band_udf(n_hashes, bands, shingle_n, use_words,
                            with_shingles)
-    return docs.select(F.col(id_col).alias("id"),
-                       udf(F.col(text_col)).alias("m")) \
-        .select("id", "m.bkeys", "m.sh") \
-        .localCheckpoint(eager=True)
+    return materialize(docs.select(F.col(id_col).alias("id"),
+                                   udf(F.col(text_col)).alias("m"))
+                       .select("id", "m.bkeys", "m.sh"))[0]
 
 
 def _pairable(bands: DataFrame) -> DataFrame:
@@ -717,10 +706,8 @@ def _verify_candidates(cand: DataFrame, docs: DataFrame, threshold: float,
     fraction the verify cost is ∝ |candidates|, not ∝ |corpus|."""
     # materialize the (small) candidate set once: it feeds BOTH the
     # verify joins and the semi-join below — left lazy, every branch
-    # would re-run the whole signature pipeline; the checkpoint block is
-    # freed by the ContextCleaner when the result is GC'd (no pinned
-    # cache, same pattern as knn_join)
-    cand = cand.localCheckpoint(eager=True)
+    # would re-run the whole signature pipeline
+    cand, _ = materialize(cand)
     cand_ids = (cand.select(F.col("id_a").alias("id"))
                 .unionByName(cand.select(F.col("id_b").alias("id")))
                 .distinct())
@@ -732,7 +719,7 @@ def _verify_candidates(cand: DataFrame, docs: DataFrame, threshold: float,
     # materialize tok once: the a- and b-side joins are two separate
     # subtrees that would each re-shingle (and re-read) the candidate
     # docs; tok is candidate-bound (|cand docs| rows of one array each)
-    tok = tok.localCheckpoint(eager=True)
+    tok, _ = materialize(tok)
     return _jaccard_verify(cand, tok, threshold)
 
 
@@ -815,7 +802,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3,
                     simhash64_udf()(F.col(text_col)).alias("sig"))
     # one signature pass, not two: see minhash_lsh_pairs — the chunk
     # self-join would otherwise re-run the UDF per side (8 B/doc sketch)
-    s = s.localCheckpoint(eager=True)
+    s, _ = materialize(s)
     chunks = s.select("id", "sig", F.explode(F.array(*[
         F.struct(F.lit(c).alias("chunk"),
                  F.shiftright("sig", c * 15).bitwiseAND(F.lit((1 << 15) - 1))
@@ -949,8 +936,8 @@ def _embedding_band_table(embeddings: DataFrame, id_col: str, vec_col: str,
     # one signature pass, not two: see minhash_lsh_pairs — the banded
     # self-join would otherwise re-run band_sigs per side (n_bands × 8 B
     # per vector sketch)
-    sig_tbl = e.select("id", band_sigs(F.col("v")).alias("bsigs")) \
-        .localCheckpoint(eager=True)
+    sig_tbl, _ = materialize(
+        e.select("id", band_sigs(F.col("v")).alias("bsigs")))
     return sig_tbl.select("id", F.posexplode("bsigs")
                           .alias("band", "bsig"))
 
@@ -1248,6 +1235,7 @@ def bloom_bits_from_hashes(hashes: DataFrame, m_bits: int,
                                  (1 << (idx & 7)).astype(np.uint8))
         yield _pd.DataFrame({"bits": [bits.tobytes()]})
 
+    # eager: the bitmap is built on the driver
     parts = hashes.select("h").mapInPandas(build, "bits binary").collect()
     out = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
     for r in parts:

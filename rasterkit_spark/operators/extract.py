@@ -386,9 +386,10 @@ def tile_map_broadcast(tiles: DataFrame):
     hard-caps any broadcast relation at 8 GB / 512M rows."""
     total = tiles.agg(
         F.coalesce(F.sum(F.length("blob")), F.lit(0)).alias("b")
-    ).collect()[0]["b"]
+    ).collect()[0]["b"]  # eager: sizes the collect before it runs
     if total > MAX_PY_TILE_BROADCAST:
         return None
+    # eager: the tile map is broadcast from the driver
     t_rows = tiles.select(*TILE_KEY, "blob").collect()
     return tiles.sparkSession.sparkContext.broadcast(
         {(r["media_ref"], int(r["level"]), int(r["tile_x"]),
@@ -537,9 +538,10 @@ def extract_pixel_region(queries: DataFrame, catalog: DataFrame,
            (F.col("region_x") + F.col("region_w") > F.col("width")) |
            (F.col("region_y") + F.col("region_h") > F.col("height")))
     if strict:
-        offenders = q.filter(bad).select(
+        first_bad = q.filter(bad).select(
             "query_id", "media_ref", "region_x", "region_y", "region_w",
-            "region_h", "width", "height").limit(5).collect()
+            "region_h", "width", "height").limit(5)
+        offenders = first_bad.collect()  # eager: raises before any read
         if offenders:
             r = offenders[0]
             raise ValueError(

@@ -215,7 +215,7 @@ def apply_colormap_op(windows: DataFrame, colormaps: DataFrame,
     closed over (the broadcast-dict flavor of a broadcast join); entries are
     pre-trimmed/deduped (A3/A4) and sorted, as the reference's loader does
     (src/tiff/colormap.rs:185-189,293-322)."""
-    cm_pdf = colormaps.toPandas()
+    cm_pdf = colormaps.toPandas()  # eager: the colormaps are closed over
     cmaps = {}
     for cid, grp in cm_pdf.groupby("cmap_id"):
         grp = grp.sort_values("value")

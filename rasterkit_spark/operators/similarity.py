@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType
 
+from ..plans.materialize import materialize
 from .dedup import cos_e6_seq_udf, cosine_sim
 
 
@@ -52,6 +53,7 @@ def _collect_queries(queries: DataFrame, qid_col: str, qvec_col: str,
     action (limit N+1 → count) enforces the contract and redirects the
     caller to :func:`ivf_topk`, whose probe side is fully distributed."""
     if max_query_rows is not None:
+        # eager: bounds the query collect below
         n = queries.limit(max_query_rows + 1).count()
         if n > max_query_rows:
             raise ValueError(
@@ -60,6 +62,7 @@ def _collect_queries(queries: DataFrame, qid_col: str, qvec_col: str,
                 "driver by contract). For a corpus-scale query side use "
                 "ivf_topk, whose probe side is fully distributed, or "
                 "raise max_query_rows explicitly.")
+    # eager: the query side is broadcast from the driver
     return queries.select(qid_col, qvec_col).collect()
 
 
@@ -266,7 +269,7 @@ def fit_centroids(embeddings: DataFrame, n_lists: int,
     partitioning-dependent), k-means in float64.  Any process reading the
     same table gets bit-identical centroids (the oracle relies on this)."""
     rows = (embeddings.select(id_col, vec_col).orderBy(id_col)
-            .limit(sample_rows).collect())
+            .limit(sample_rows).collect())  # eager: k-means on the driver
     sample = np.array([r[1] for r in rows], dtype=np.float64)
     return _kmeans_fit(sample, n_lists, seed=seed)
 
@@ -433,9 +436,10 @@ def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> float:
     not |corpus|/k."""
     ex = exact.filter(F.col("rank") <= k).select("qid", "nbr_id")
     ap = approx.filter(F.col("rank") <= k).select("qid", "nbr_id")
-    n_exact = ex.count()
+    n_exact = ex.count()  # eager: the metric is a driver number
     if n_exact == 0:
         return 1.0
+    # eager: the metric is a driver number
     total_hits = ex.join(ap, ["qid", "nbr_id"]).count()
     return float(total_hits) / n_exact
 
@@ -475,16 +479,12 @@ def ivf_topk_against_index(queries: DataFrame, index: DataFrame,
 
     The index side is pruned to the probed lists BEFORE the cogroup —
     a bare cogroup would exchange the FULL index per batch.  The probed
-    set (≤ n_lists ints) is collected to the driver in one tiny action
-    (same bounded-collect contract as fit_centroids) and applied as a
-    STATIC ``isin`` predicate, so a list_id-partitioned index table
-    skips unprobed partitions at planning time and the index scans
-    exactly once; batch cost is ∝ the probed lists' rows, not the
-    corpus.  The probe pass itself runs twice (once for the collect,
-    once inside the cogroup) — ∝ |batch|, negligible next to a corpus
-    scan, and cheaper than persisting the probe table.  Pruning only
-    drops lists with zero probes, whose cogroups emit nothing — the
-    result set is bit-identical."""
+    set (≤ n_lists ints) is observed on the probe table's checkpoint and
+    applied as a STATIC ``isin`` predicate, so a list_id-partitioned
+    index table skips unprobed partitions at planning time; batch cost is
+    ∝ the probed lists' rows, not the corpus.  Pruning only drops lists
+    with zero probes, whose cogroups emit nothing — the result set is
+    bit-identical."""
     from ..session import ensure_parallelism
 
     queries = ensure_parallelism(queries)
@@ -493,16 +493,12 @@ def ivf_topk_against_index(queries: DataFrame, index: DataFrame,
         F.col(qvec_col).alias("qv"),
         F.explode(_probe_udf(cents, nprobe)(F.col(qvec_col)))
         .alias("list_id"))
-    # materialize the probe table once (∝ |batch| × nprobe, small by
-    # construction): the probed-list collect below and the cogroup are
-    # two separate subtrees, so left lazy the probe UDF pass ran TWICE —
-    # and a non-deterministic queries DataFrame (sample(), re-read
-    # mutable source) could then prune lists the cogroup pass actually
-    # probes, silently dropping neighbors (ADVICE r5).  The checkpoint
-    # pins one probe evaluation for both consumers.
-    probes = probes.localCheckpoint(eager=True)
-    probed = [r["list_id"] for r in
-              probes.select("list_id").distinct().collect()]
+    # materialize the probe table once (∝ |batch| × nprobe): left lazy,
+    # a non-deterministic queries DataFrame (sample(), re-read mutable
+    # source) could prune lists the cogroup pass actually probes,
+    # silently dropping neighbors (ADVICE r5)
+    probes, m = materialize(probes, lists=F.collect_set("list_id"))
+    probed = m["lists"]
     pruned = index.filter(F.col("list_id").isin(probed)) if probed \
         else index.filter(F.lit(False))
     return _score_lists_cogrouped(

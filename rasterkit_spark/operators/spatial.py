@@ -6,10 +6,9 @@ Operators:
 - :func:`index_points` — grid-cell indexing (G13) via pure Column math.
 - :func:`pip_join` — point-in-polygon: cell-cover semi-join (coarse) +
   exact vectorized ray-cast refinement (J5).
-- :func:`knn_join` — exact kNN via cell-ring expansion with a per-query
-  correctness certificate: after a ring-r pass, a query's result is final
-  only if its Kth candidate distance ≤ the minimum possible distance to any
-  unexplored cell; others retry with a wider ring (J6).
+- :func:`knn_join` — exact kNN in at most two rounds: a density-sized
+  cell ring with a per-query certificate, then, for uncertified queries,
+  a ring sized by each one's round-1 Kth distance (J6).
 - :func:`zonal_stats` — polygon × raster: extract's read path (region →
   tile keys → tile join or broadcast tile map → one chunk decode per run
   of equal tile keys) with a PIP mask in place of the window clip, then
@@ -29,12 +28,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from .. import kernels as K
 from ..functions import cells as C
+from ..plans.materialize import materialize, observe
 from . import extract as EX
 
 #: every published WebMercator code (functions/geo.classify_epsg agrees)
@@ -241,25 +241,66 @@ def _eq_cell(x: F.Column, y: F.Column, res: int, lo_x: float, span_x: float,
     return ix.cast("long"), iy.cast("long")
 
 
+def _ring_cells(ring: F.Column, n: int) -> F.Column:
+    """Cell ids (ix·n + iy) within Chebyshev distance ``ring`` of the
+    query cell (qix, qiy), clamped to the n×n frame: the clamped
+    rectangle is enumerated directly, so an edge query lists each cell
+    once."""
+    x0 = F.greatest(F.col("qix") - ring, F.lit(0))
+    y0 = F.greatest(F.col("qiy") - ring, F.lit(0))
+    wx = F.least(F.col("qix") + ring, F.lit(n - 1)) - x0 + 1
+    wy = F.least(F.col("qiy") + ring, F.lit(n - 1)) - y0 + 1
+    return F.transform(
+        F.sequence(F.lit(0).cast("long"), wx * wy - 1),
+        lambda o: (x0 + (o / wy).cast("long")) * n + y0 + o % wy)
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """The k nearest candidates per query by (dist, nbr_id), ranked 1..k."""
+    # dist via plain multiplication (not pow): bitwise-identical to the
+    # SQL oracle's (dx*dx + dy*dy) so distance ties break identically
+    dx = F.col("px") - F.col("qx")
+    dy = F.col("py") - F.col("qy")
+    w = Window.partitionBy("qid_").orderBy("dist", "nbr_id")
+    return (cand.withColumn("dist", F.sqrt(dx * dx + dy * dy))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _second_round_arms(left: DataFrame,
+                       n: int) -> tuple[DataFrame, DataFrame]:
+    """Round-2 queries split by arm: (those searching their own ring,
+    those cross-joined with every point, whose ring covers the frame)."""
+    qix, qiy = F.col("qix"), F.col("qiy")
+    spans = F.col("ring") >= F.greatest(qix, qiy, n - 1 - qix, n - 1 - qiy)
+    return left.filter(~spans), left.filter(spans)
+
+
 def knn_join(points: DataFrame, queries: DataFrame, k: int,
              point_id: str = "id", query_id: str = "qid",
              x_col: str = "x", y_col: str = "y",
-             res: int = 6, max_rounds: int = 8,
-             frame=None) -> DataFrame:
-    """Exact k-nearest-neighbor join (euclidean in the given coordinates).
+             res: int = 6, frame=None) -> DataFrame:
+    """Exact k-nearest-neighbor join (euclidean in the given coordinates),
+    in at most two rounds.
 
-    One-shot-biased ring search: ring₀ is sized from global density so the
-    expected candidate disk already holds ≥k points within the *certified*
-    radius — ≥95% of queries finish in round 1; each later round only
-    reprocesses the failures with a 3× ring.  A round is ONE wide job
-    (cell-block equi-join + window top-K + per-query certificate, cached
-    and materialized together); the done/pending bookkeeping then runs on
-    the cached result, so the join is never re-executed per action.
+    Round 1 searches a ring sized from global density, so ≥95% of queries
+    hold ≥k points within the *certified* radius.  Certificate: a query
+    is final iff its Kth distance is strictly inside ring·min_cell_extent
+    (any unexplored point is at least that far, Chebyshev ≤ Euclidean;
+    strict < so an on-boundary unexplored point can't tie the Kth
+    candidate and win the id tie-break).  The round is one eager
+    checkpoint, which also counts the certified queries.
 
-    Certificate: a query is final iff its Kth distance is strictly inside
-    ring·min_cell_extent (any unexplored point is at least that far,
-    Chebyshev ≤ Euclidean; strict < so an on-boundary unexplored point
-    can't tie the Kth candidate and win the id tie-break).
+    Round 2 runs, lazily, only for the uncertified queries.  One with k
+    round-1 candidates searches its own ring ⌊d_k / min_extent⌋ + 1, d_k
+    its round-1 Kth distance: the true Kth distance is at most d_k, and
+    every point within d_k, ties included, lies inside that ring, so no
+    certificate is needed.  One with fewer candidates, or whose ring
+    covers the frame, is cross-joined with every point.
+
+    Every qid must be non-NULL and unique (``ValueError`` otherwise): a
+    duplicate would merge two queries' candidates under one id.  A point
+    or query with a NULL coordinate takes no part.
 
     ``frame=None`` (default) derives (lo_x, span_x, lo_y, span_y) from the
     min/max of both sides in the same action that counts points — an
@@ -270,169 +311,97 @@ def knn_join(points: DataFrame, queries: DataFrame, k: int,
     """
     import math as _math
 
-    from pyspark.sql import Window
-
     from ..session import ensure_parallelism
-    points = ensure_parallelism(points)
+    # a NULL coordinate has no distance, so its row takes no part (a cross
+    # join would rank it first, with dist NULL)
+    points = ensure_parallelism(points).dropna(subset=[x_col, y_col])
+    queries = queries.dropna(subset=[x_col, y_col])
     n = 1 << res
 
     p_xy = points.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"),
                          F.lit(1).alias("is_pt"))
     q_xy = queries.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"),
-                          F.lit(0).alias("is_pt"))
-    # ONE bounds/count action carries everything the bookkeeping needs:
-    # point count (ring sizing), query count (the per-round remaining
-    # arithmetic below — so no per-round anti-join count job), bbox
-    row = p_xy.unionByName(q_xy).agg(
+                          F.lit(0).alias("is_pt"), F.col(query_id).alias("q"))
+    # ONE bounds action carries everything the rounds need: point count
+    # (ring sizing), query count and its qid census, bbox
+    bounds = p_xy.unionByName(q_xy, allowMissingColumns=True).agg(
         F.sum("is_pt"), F.count("*"), F.min("x"), F.max("x"),
-        F.min("y"), F.max("y")
-    ).first()
+        F.min("y"), F.max("y"), F.count("q"), F.countDistinct("q"))
+    row = bounds.first()  # eager: the frame and ring₀ are plan constants
     n_points = int(row[0] or 0)
     n_queries = int(row[1] or 0) - n_points
+    if not n_queries == row[6] == row[7]:
+        raise ValueError(
+            f"knn_join: {query_id!r} must be non-NULL and unique "
+            f"({n_queries} queries, {row[6]} non-NULL, {row[7]} distinct)")
     if frame is None:
-        eps = 1e-9
-        lo_x = float(row[2])
-        span_x = max(float(row[3]) - lo_x, eps)
-        lo_y = float(row[4])
-        span_y = max(float(row[5]) - lo_y, eps)
+        lo_x, lo_y = float(row[2]), float(row[4])
+        span_x = max(float(row[3]) - lo_x, 1e-9)
+        span_y = max(float(row[5]) - lo_y, 1e-9)
     else:
         lo_x, span_x, lo_y, span_y = frame
         # an out-of-frame coordinate clamps into an edge cell and silently
-        # breaks the certificate's points-lie-inside-their-cells premise —
-        # hard-error instead (the same agg that counts points already
-        # carries both sides' min/max, so this costs nothing extra)
-        if row[2] is not None:
-            mnx, mxx = float(row[2]), float(row[3])
-            mny, mxy = float(row[4]), float(row[5])
-            if (mnx < lo_x or mxx > lo_x + span_x or
-                    mny < lo_y or mxy > lo_y + span_y):
-                raise ValueError(
-                    f"knn_join: explicit frame {frame} does not contain all "
-                    f"coordinates (data bbox x=[{mnx}, {mxx}], "
-                    f"y=[{mny}, {mxy}]); pass frame=None to derive it")
-    cell_w = span_x / n
-    cell_h = span_y / n
-    min_extent = min(cell_w, cell_h)
+        # breaks the certificate's points-lie-inside-their-cells premise
+        if row[2] is not None and (
+                row[2] < lo_x or row[3] > lo_x + span_x
+                or row[4] < lo_y or row[5] > lo_y + span_y):
+            raise ValueError(
+                f"knn_join: explicit frame {frame} does not contain all "
+                f"coordinates (data bbox x=[{row[2]}, {row[3]}], "
+                f"y=[{row[4]}, {row[5]}]); pass frame=None to derive it")
+    min_extent = min(span_x / n, span_y / n)
 
     ix, iy = _eq_cell(F.col(x_col), F.col(y_col), res, lo_x, span_x, lo_y, span_y)
     pts = points.select(
         F.col(point_id).alias("nbr_id"),
         F.col(x_col).alias("px"), F.col(y_col).alias("py"),
-        ix.alias("pix"), iy.alias("piy"))
-    # NOT cached up front: ≥95% of queries certify in round 1 by
-    # construction, and in the common single-round call both sides are
-    # read exactly once — an eager cache is then a pure storage-write
-    # tax on the wide join's input (measured as part of the knn_big
-    # fixed tail, VERDICT r5 item #5).  A second round caches pts then.
-    pts = pts.withColumn("pcell", F.col("pix") * n + F.col("piy"))
-    pts_cached = False
-
-    qix, qiy = _eq_cell(F.col(x_col), F.col(y_col), res, lo_x, span_x, lo_y, span_y)
+        (ix * n + iy).alias("pcell"))
     pending = queries.select(
         F.col(query_id).alias("qid_"),
         F.col(x_col).alias("qx"), F.col(y_col).alias("qy"),
-        qix.alias("qix"), qiy.alias("qiy"))
-    pending_cached = False
+        ix.alias("qix"), iy.alias("qiy"))
+    result = ["qid_", "nbr_id", "rank", "dist"]
 
-    results = []
-    round_caches = []
-    # ring₀ for one-round certification: k expected points inside the
-    # certified DISK of radius ring·min_extent (π r² · per-cell density ≥ k),
-    # doubled as a skew margin
+    # round 1: ring₀ puts k expected points inside the certified DISK of
+    # radius ring·min_extent (π r² · per-cell density ≥ k), doubled as a
+    # skew margin; a ring that spans the frame is a cross join
     density = max(n_points / float(n * n), 1e-12)
     ring = max(1, min(n, int(_math.ceil(
         2.0 * _math.sqrt(k / (_math.pi * density))))))
-    remaining = n_queries
-    for round_i in range(max_rounds):
-        # exactness guarantee: the last budgeted round always scans the
-        # full frame — exhausting max_rounds used to silently DROP every
-        # still-uncertified query from an "exact" join result
-        if round_i == max_rounds - 1:
-            ring = n
-        if round_i == 1:
-            # a second round exists: pin the point side now — every later
-            # round re-joins it (round 1 already paid its one scan)
-            pts = pts.cache()
-            pts_cached = True
-        if ring >= n:
-            # exhaustive round: the pending set is small (certification
-            # failures only) — cross-join it against pts directly instead
-            # of synthesizing the (2n+1)² ≈ 16k-element cell-cover array
-            # per query (which dominates the round's cost when only a
-            # handful of queries remain)
-            cand = pending.crossJoin(pts)
-        else:
-            side = 2 * ring + 1
-            offs = F.sequence(F.lit(0), F.lit(side * side - 1))
-            cand_cells = F.transform(
-                offs,
-                lambda o: (F.greatest(F.lit(0), F.least(
-                    F.col("qix") + (o / side).cast("long") - ring,
-                    F.lit(n - 1))) * n
-                    + F.greatest(F.lit(0), F.least(
-                        F.col("qiy") + o % side - ring, F.lit(n - 1)))))
-            q_cells = pending.withColumn(
-                "pcell", F.explode(F.array_distinct(cand_cells)))
-            cand = q_cells.join(pts, "pcell", "inner")
-        # dist via plain multiplication (not pow): bitwise-identical to the
-        # SQL oracle's (dx*dx + dy*dy) so distance ties break identically
-        dx = F.col("px") - F.col("qx")
-        dy = F.col("py") - F.col("qy")
-        cand = cand.withColumn("dist", F.sqrt(dx * dx + dy * dy))
-        w = Window.partitionBy("qid_").orderBy("dist", "nbr_id")
-        wq = Window.partitionBy("qid_")
-        full_frame = ring >= n
-        certified_radius = ring * min_extent
-        kth = F.max(F.when(F.col("rank") == k, F.col("dist"))).over(wq)
-        certified = (F.lit(full_frame) |
-                     (kth.isNotNull() & (kth < F.lit(certified_radius))))
-        # ONE materialization per round: topk + certificate flag together —
-        # done/pending bookkeeping below reads this cache, never re-runs
-        # the join (the old stats→broadcast→semi-join shape re-executed the
-        # wide plan 2-3× per round).  The rank filter runs FIRST so the
-        # kth/certified window scans k rows per query instead of every
-        # candidate (same exchange — Window+Filter preserve the qid_
-        # partitioning), and the cache keeps only result columns, not the
-        # join's coordinate/cell scaffolding.
-        scored = (cand.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("qid_", "nbr_id", "rank", "dist")
-                  .withColumn("certified", certified)
-                  .cache())
-        round_caches.append(scored)
-        scored.count()
-        results.append(scored.filter("certified").select(
-            F.col("qid_").alias(query_id), "nbr_id", "rank", "dist"))
-        done_ids = scored.filter("certified").select("qid_").distinct()
-        # remaining bookkeeping from the CACHED round result alone:
-        # certified qids ⊆ this round's pending, so one cheap distinct
-        # count replaces the old per-round anti-join count job — and the
-        # next pending set is only built at all when a next round runs
-        remaining -= done_ids.count()
-        if full_frame or remaining == 0:
-            break
-        nxt = pending.join(F.broadcast(done_ids), "qid_", "left_anti").cache()
-        if pending_cached:
-            pending.unpersist()
-        pending, pending_cached = nxt, True
-        ring = min(n, ring * 3)
-    if pts_cached:
-        pts.unpersist()
-    if pending_cached:
-        pending.unpersist()  # result unions reference `scored`, not pending
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    # materialize the union (one eager localCheckpoint, reading straight
-    # from the round caches) and RELEASE every per-round `scored` cache —
-    # the old shape left them pinned for the session's lifetime, so a
-    # long-lived session accumulated k·|queries| rows of executor storage
-    # per kNN call.  The checkpoint block itself is freed by the
-    # ContextCleaner when the returned DataFrame is GC'd.
-    out = out.localCheckpoint(eager=True)
-    for c in round_caches:
-        c.unpersist()
-    return out
+    if ring >= n:
+        cand, certified = pending.crossJoin(pts), F.lit(True)
+    else:
+        cand = pending.withColumn(
+            "pcell", F.explode(_ring_cells(F.lit(ring), n))).join(pts, "pcell")
+        kth = F.max(F.when(F.col("rank") == k, F.col("dist"))) \
+            .over(Window.partitionBy("qid_"))
+        certified = kth.isNotNull() & (kth < F.lit(ring * min_extent))
+    # the rank filter runs before the certificate, so its window scans k
+    # rows per query (same exchange)
+    scored, m = materialize(
+        _top_k(cand, k).select(*result).withColumn("certified", certified),
+        certified=F.count_if(F.col("certified") & (F.col("rank") == 1)))
+    out = scored.filter("certified").select(*result)
+    if m["certified"] < n_queries:
+        # round 2: each uncertified query's ring from its round-1 Kth
+        # distance; none (fewer than k candidates) means the whole frame
+        kth_rows = scored.filter(F.col("rank") == k) \
+            .select("qid_", F.col("dist").alias("dk"), "certified")
+        ring2 = F.coalesce(
+            F.floor(F.col("dk") / F.lit(min_extent)).cast("long") + 1,
+            F.lit(n))
+        by_ring, whole = _second_round_arms(
+            pending.join(kth_rows, "qid_", "left")
+            .filter(~F.coalesce(F.col("certified"), F.lit(False)))
+            .withColumn("ring", ring2), n)
+        cols = ["qid_", "qx", "qy", "nbr_id", "px", "py"]
+        by_ring = by_ring.withColumn(
+            "pcell", F.explode(_ring_cells(F.col("ring"), n))) \
+            .join(pts, "pcell").select(*cols)
+        whole = whole.crossJoin(pts).select(*cols)
+        out = out.unionByName(
+            _top_k(by_ring.unionByName(whole), k).select(*result))
+    return out.withColumnRenamed("qid_", query_id)
 
 
 # ---------------------------------------------------------------------------
@@ -583,9 +552,10 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
 
     ``on_unplaceable``: rasters whose CRS is neither WebMercator (any
     alias) nor 4326 cannot be compared against the 4326 zone polygons —
-    ``"error"`` (default) raises naming offenders, counted by an
-    Observation on the candidate-pair checkpoint's job (no job of its
-    own); ``"skip"`` silently excludes them.  Before this
+    ``"error"`` (default) raises naming offenders, counted by aggregates
+    that the candidate-pair checkpoint's job evaluates
+    (:func:`~rasterkit_spark.plans.materialize.materialize`), at no job
+    of their own; ``"skip"`` silently excludes them.  Before this
     screen they were conservatively paired with every zone and the PIP
     stage compared meter coordinates against degree polygons — all-outside,
     silently-empty stats.
@@ -634,7 +604,7 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
             f"on_unplaceable must be 'error' or 'skip', got {on_unplaceable!r}")
     placeable = (F.col("media_kind") != "raster") \
         | F.col("epsg").isin(*_ZONAL_PLACEABLE)
-    screen, pairs_catalog = None, catalog
+    screen, probes, pairs_catalog = {}, (), catalog
     if on_unplaceable == "error":
         # counted on the pairs checkpoint's own job: the observed node sits
         # on the catalog input, upstream of the placeable filter and the
@@ -643,11 +613,11 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
         # would otherwise cross them with all zones before the raise
         bad = ~placeable
         ref = F.when(bad, F.col("media_ref"))
-        screen = [F.count_if(bad).alias("n"), F.min(ref).alias("lo"),
-                  F.any_value(ref, ignoreNulls=True).alias("any"),
-                  F.max(ref).alias("hi")]
-        obs = Observation()
-        pairs_catalog = catalog.observe(obs, *screen).filter(placeable)
+        screen = {"n": F.count_if(bad), "lo": F.min(ref),
+                  "any": F.any_value(ref, ignoreNulls=True),
+                  "hi": F.max(ref)}
+        pairs_catalog, probe = observe(catalog, **screen)
+        pairs_catalog, probes = pairs_catalog.filter(placeable), (probe,)
     else:
         catalog = pairs_catalog = catalog.filter(placeable)
     z = zones.withColumn("_coords", wkt_coords_udf(F.col("polygon_wkt")))
@@ -662,23 +632,16 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
         F.coalesce(F.col("epsg"), F.lit(4326)).alias("crs"),
         F.lit(None).cast("double").alias("radius_m"))
     # materialize the (query_id, media_ref) candidate-pair table once:
-    # it is consumed TWICE — feeding the region/key chain AND restoring
-    # no-pixel pairs in _zonal_finish — and left lazy each consumer
-    # re-ran the whole WKT-parse + double-explode footprint join +
-    # distinct subtree (measured round 6: the partials UDF is ~9 core-s
-    # while the zonal wall is 7-12 s — the wall is this plan/stage
-    # latency, not pixel work).  The table is one id pair per candidate,
-    # the same cardinality class as the output itself.
-    pairs = zonal_footprint_pairs(zq, pairs_catalog) \
-        .localCheckpoint(eager=True)
-    if screen is not None:
-        # an empty metrics row means no job ran the catalog subtree (the
-        # optimizer prunes it when there are no zones): screen the catalog
-        # with its own aggregate then.  The JVM row is read directly
-        # because Observation.get fails on an empty row (PySpark 4.1's
-        # toPyRow asserts a schema) instead of returning {}
-        m = (obs.get if obs._jo.getRow().size()
-             else catalog.agg(*screen).first().asDict())
+    # the region/key chain and _zonal_finish both read it, and left lazy
+    # each re-ran the WKT parse and the footprint join (round 6: the wall
+    # was this stage latency, not pixel work)
+    pairs, m = materialize(zonal_footprint_pairs(zq, pairs_catalog), *probes)
+    if screen:
+        if m["n"] is None:
+            # no job ran the catalog subtree (the optimizer prunes it when
+            # there are no zones), so the screen needs a job of its own
+            own = catalog.agg(*[c.alias(k) for k, c in screen.items()])
+            m = own.first().asDict()  # eager: the screen's own job
         if m["n"]:
             offenders = sorted({m["lo"], m["any"], m["hi"]} - {None})
             raise ValueError(

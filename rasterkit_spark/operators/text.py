@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..plans.materialize import materialize
+
 # tiny marker lexicons per language (stopword-style voting)
 LANG_MARKERS = {
     "en": ["the", "and", "of", "a"],
@@ -378,7 +380,7 @@ def tfidf_keywords(docs: DataFrame, k: int = 3, text_col: str = "text",
     AQE will still turn into a broadcast when df is measured small.
     N comes from a count() action — one cheap job, no collect of data
     rows."""
-    n_docs = docs.count()
+    n_docs = docs.count()  # eager: N is a literal in the idf expression
     words = docs.select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("term")) \
@@ -435,9 +437,9 @@ def pack_sequences(docs: DataFrame, seq_len: int = 1024,
                     nt.alias("n_tokens"),
                     *[F.col(c) for c in passthrough])
     if shard_buckets is not None and int(shard_buckets) > 1:
-        d = d.repartitionByRange(int(shard_buckets), "shard", id_col) \
-             .withColumn("_b", F.spark_partition_id()) \
-             .localCheckpoint(eager=True)
+        d, _ = materialize(
+            d.repartitionByRange(int(shard_buckets), "shard", id_col)
+            .withColumn("_b", F.spark_partition_id()))
         wl = (Window.partitionBy("shard", "_b").orderBy(id_col)
               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         d = d.withColumn("_le", F.sum(F.col("n_tokens") + 1).over(wl))

@@ -1,0 +1,34 @@
+"""Counters shared by the job and plan budget tests: the Spark jobs a
+call runs, counted under a job group, and the plan nodes that cost a
+shuffle, a broadcast or a Python boundary."""
+
+import re
+
+#: Python-UDF evaluation nodes of a physical plan
+PY_UDF_NODES = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
+    r"FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b")
+
+
+def count_jobs(spark, group, fn):
+    """(fn's result, number of Spark jobs it ran), counted under a job
+    group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def census(plan: str):
+    """(shuffle Exchanges, BroadcastExchanges, MapInPandas nodes)."""
+    return (len(re.findall(r"(?<!Broadcast)Exchange ", plan)),
+            plan.count("BroadcastExchange"), plan.count("MapInPandas"))
+
+
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()

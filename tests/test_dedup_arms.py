@@ -12,6 +12,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
+from budget import PY_UDF_NODES, count_jobs
 
 from rasterkit_spark.operators import dedup as DD
 
@@ -153,20 +154,6 @@ def test_cc_float_ids_take_the_star_rounds(spark, monkeypatch):
                    (8.0, 7.0)]
 
 
-def _jobs(spark, group, fn):
-    """(fn's result, number of Spark jobs it ran), counted under a job
-    group once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # call jobs of the star-round loop on the budget test's graph as measured
 # before the edge count was observed and the driver finish existed: the
 # forced rounds arm must run exactly as many (the observe adds no job)
@@ -188,10 +175,10 @@ def test_dup_clusters_job_budget(spark, monkeypatch):
     jobs = {}
     for arm in ("driver", "rounds"):
         with _arm(monkeypatch, CC_ARMS[arm]):
-            df, jobs[arm, "call"] = _jobs(
+            df, jobs[arm, "call"] = count_jobs(
                 spark, f"cc-budget-{arm}-call",
                 lambda: DD.dup_clusters(docs, pairs))
-            rows, jobs[arm, "collect"] = _jobs(
+            rows, jobs[arm, "collect"] = count_jobs(
                 spark, f"cc-budget-{arm}-collect", lambda: _rows(df))
         assert rows == want, arm
     pairs.unpersist()
@@ -204,7 +191,7 @@ SPAN = "the quick brown fox jumps over the lazy dog near a river"
 
 
 def test_shared_spans_sort_merge_arm_matches_broadcast(spark, monkeypatch):
-    """SPANS_BROADCAST_ANCHOR_CAP = 0 forces the sort-merge gram join;
+    """SPANS_BROADCAST_BYTES = 0 forces the sort-merge gram join;
     its rows must equal the default broadcast arm's."""
     docs = spark.createDataFrame(pd.DataFrame([
         {"doc_id": 1, "text": "A" * 40 + SPAN + "B" * 40},
@@ -223,7 +210,7 @@ def test_shared_spans_sort_merge_arm_matches_broadcast(spark, monkeypatch):
 
     broadcast_rows, broadcast_plan = run()
     with monkeypatch.context() as m:
-        m.setattr(DD, "SPANS_BROADCAST_ANCHOR_CAP", 0)
+        m.setattr(DD, "SPANS_BROADCAST_BYTES", 0)
         merge_rows, merge_plan = run()
     assert "BroadcastHashJoin" in broadcast_plan
     assert "SortMergeJoin" in merge_plan
@@ -231,6 +218,33 @@ def test_shared_spans_sort_merge_arm_matches_broadcast(spark, monkeypatch):
     assert merge_rows == broadcast_rows
     assert [r[:2] for r in broadcast_rows] == [(1, 2), (1, 4), (2, 4),
                                                (5, 6)]
+
+
+def test_shared_spans_long_string_ids_sort_merge(spark, monkeypatch):
+    """The gram join is sized in bytes, ids included: at a cap of 24 B per
+    anchor (the old row cap's estimate), long-id anchors broadcast and the
+    same anchors under 64-char string ids sort-merge, with equal rows."""
+    texts = ["A" * 40 + SPAN + "B" * 40, "C" * 28 + SPAN + "D" * 48,
+             SPAN + " " + SPAN[::-1]]
+    n_anchors = sum(len(t) - 39 for t in texts)
+    prefix = "doc-" + "x" * 59
+
+    def run(ids):
+        docs = spark.createDataFrame(pd.DataFrame(
+            {"doc_id": ids, "text": texts}))
+        df = DD.shared_span_pairs(docs, min_len=40)
+        return _rows(df), df._jdf.queryExecution().executedPlan().toString()
+
+    with monkeypatch.context() as m:
+        m.setattr(DD, "SPANS_BROADCAST_BYTES", 24 * n_anchors)
+        long_rows, long_plan = run([1, 2, 3])
+        str_rows, str_plan = run([f"{prefix}{i}" for i in (1, 2, 3)])
+    assert "BroadcastHashJoin" in long_plan
+    assert "SortMergeJoin" in str_plan
+    assert "BroadcastHashJoin" not in str_plan
+    assert [(int(a[-1]), int(b[-1]), *rest) for a, b, *rest in str_rows] \
+        == long_rows
+    assert [r[:2] for r in long_rows] == [(1, 2), (1, 3), (2, 3)]
 
 
 def test_verify_candidates_drops_zero_overlap_pairs(spark):
@@ -332,11 +346,6 @@ def _jaccard_e6(a, b, n=3):
     return inter * 1_000_000 // (len(sa) + len(sb) - inter)
 
 
-PY_UDF_NODES = re.compile(
-    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
-    r"FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b")
-
-
 @contextlib.contextmanager
 def _checkpoint_plans(spark, monkeypatch):
     """Record the physical plan of every DataFrame localCheckpoint-ed
@@ -387,10 +396,10 @@ def test_minhash_plan_and_job_budget(spark, monkeypatch):
     docs = _mh_docs(spark, _mh_corpus()).cache()
     docs.count()
     with _checkpoint_plans(spark, monkeypatch) as plans:
-        df, call_jobs = _jobs(spark, "minhash-budget-call",
+        df, call_jobs = count_jobs(spark, "minhash-budget-call",
                               lambda: DD.minhash_lsh_pairs(docs, **MH_ARGS))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    rows, collect_jobs = _jobs(spark, "minhash-budget-collect",
+    rows, collect_jobs = count_jobs(spark, "minhash-budget-collect",
                                lambda: _rows(df))
     docs.unpersist()
     assert len(rows) >= 10

@@ -5,11 +5,9 @@ The inputs mirror the perfbench workload's shapes on a small fixture:
 cached catalog and tile tables, a query frame built on the driver, and a
 pyramid over the level-0 tiles of a few rasters."""
 
-import re
-
 import pytest
 from pyspark.sql import functions as F
-from test_dedup_arms import _jobs
+from budget import census, count_jobs
 
 from rasterkit_spark import api
 from rasterkit_spark.fixtures import corpus as CP
@@ -21,11 +19,6 @@ BUDGETS = {
     "extract": {"jobs": (0, 4), "census": (1, 2, 1)},
     "pyramid": {"jobs": (0, 3), "census": (1, 1, 1)},
 }
-
-
-def _census(plan: str):
-    return (len(re.findall(r"(?<!Broadcast)Exchange ", plan)),
-            plan.count("BroadcastExchange"), plan.count("MapInPandas"))
 
 
 @pytest.fixture(scope="module")
@@ -53,14 +46,14 @@ CALLS = {
 
 @pytest.mark.parametrize("op", sorted(CALLS))
 def test_raster_op_plan_and_job_budget(spark, raster_inputs, op):
-    df, call_jobs = _jobs(spark, f"{op}-budget-call",
+    df, call_jobs = count_jobs(spark, f"{op}-budget-call",
                           lambda: CALLS[op](raster_inputs))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    rows, collect_jobs = _jobs(spark, f"{op}-budget-collect", df.collect)
+    rows, collect_jobs = count_jobs(spark, f"{op}-budget-collect", df.collect)
     assert rows, op
     budget = BUDGETS[op]
     assert (call_jobs, collect_jobs) == budget["jobs"], \
         f"{op}: (call, collect) jobs {(call_jobs, collect_jobs)}"
-    assert _census(plan) == budget["census"], \
+    assert census(plan) == budget["census"], \
         f"{op}: (Exchange, BroadcastExchange, MapInPandas) " \
-        f"{_census(plan)}\n{plan}"
+        f"{census(plan)}\n{plan}"

@@ -92,7 +92,7 @@ def test_knn_every_query_answered(spark, points_pdf):
                       spark.createDataFrame(queries), 3,
                       point_id="id", query_id="qid",
                       x_col="lon", y_col="lat", res=6).toPandas()
-    assert len(got) == 3  # corner query still resolves via ring growth
+    assert len(got) == 3  # corner query resolves in the full-frame arm
 
 
 def test_zonal_stats_matches_oracle(spark, corpus):
@@ -208,20 +208,28 @@ def test_zonal_stats_rgb_rasters_match_oracle(spark):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_knn_max_rounds_exhaustion_still_exact(spark, points_pdf):
-    """max_rounds=1 forces the single budgeted round to scan the full
-    frame: every query must come back exact — uncertified queries used to
-    be silently DROPPED when the round budget ran out."""
+def test_knn_corner_queries_take_the_full_frame(spark, points_pdf,
+                                                monkeypatch):
+    """Corner queries, whose density-sized ring holds fewer than k points,
+    are cross-joined with every point in round 2 and come back exact."""
     queries = pd.DataFrame({
         "qid": [f"q{i}" for i in range(8)],
         "lon": np.r_[RNG.uniform(-170, 170, 4), [179.9, -179.9, 0.0, 10.0]],
         "lat": np.r_[RNG.uniform(-80, 80, 4), [-89.9, 89.9, 0.0, 20.0]],
     })
+    whole, split = set(), SP._second_round_arms
+
+    def recording(left, n):
+        by_ring, rest = split(left, n)
+        whole.update(r.qid_ for r in rest.select("qid_").collect())
+        return by_ring, rest
+
+    monkeypatch.setattr(SP, "_second_round_arms", recording)
     got = SP.knn_join(spark.createDataFrame(points_pdf),
                       spark.createDataFrame(queries), 3,
                       point_id="id", query_id="qid",
-                      x_col="lon", y_col="lat", res=6,
-                      max_rounds=1).toPandas()
+                      x_col="lon", y_col="lat", res=6).toPandas()
+    assert {"q4", "q5"} <= whole, whole
     assert set(got.qid) == set(queries.qid)
     px, py = points_pdf.lon.values, points_pdf.lat.values
     ids = np.array(points_pdf.id.values)

@@ -12,7 +12,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
-from test_dedup_arms import _jobs
+from budget import census, count_jobs
 
 from rasterkit_spark import kernels as K
 from rasterkit_spark.fixtures import corpus as CP
@@ -208,25 +208,21 @@ PARENT_JOBS = {"default": (6, 9), "broadcast_tiles": (9, 9)}
 DEFAULT_ARM_CENSUS = (4, 2, 1)
 
 
-def _census(plan: str):
-    return (len(re.findall(r"(?<!Broadcast)Exchange ", plan)),
-            plan.count("BroadcastExchange"), plan.count("MapInPandas"))
-
-
 @pytest.mark.parametrize("arm", ["default", "broadcast_tiles"])
 def test_zonal_plan_and_job_budget(spark, arm):
     c = CP.build_corpus(n_media=6, n_docs=20, n_queries=6)
     sd = c.to_spark(spark, ["zones", "media_catalog", "tiles"])
-    df, call_jobs = _jobs(spark, f"zonal-{arm}-call", lambda: SP.zonal_stats(
-        sd["zones"], sd["media_catalog"], sd["tiles"],
-        broadcast_tiles=arm == "broadcast_tiles"))
+    df, call_jobs = count_jobs(
+        spark, f"zonal-{arm}-call", lambda: SP.zonal_stats(
+            sd["zones"], sd["media_catalog"], sd["tiles"],
+            broadcast_tiles=arm == "broadcast_tiles"))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    _, collect_jobs = _jobs(spark, f"zonal-{arm}-collect", df.collect)
+    _, collect_jobs = count_jobs(spark, f"zonal-{arm}-collect", df.collect)
     parent_call, parent_collect = PARENT_JOBS[arm]
     assert call_jobs <= parent_call, (arm, call_jobs)
     assert collect_jobs <= parent_collect, (arm, collect_jobs)
     if arm == "default":
-        assert _census(plan) == DEFAULT_ARM_CENSUS, plan
+        assert census(plan) == DEFAULT_ARM_CENSUS, plan
         assert "REPARTITION_BY_NUM" not in plan, plan
         return
     n = spark.sparkContext.defaultParallelism
