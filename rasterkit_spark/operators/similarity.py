@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType
 
 from ..plans.materialize import materialize
-from .dedup import cos_e6_seq_udf, cosine_sim
+from .dedup import cosine_sim
 
 
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int,
@@ -278,8 +278,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
              n_lists: int = 16, nprobe: int = 4,
              id_col: str = "vec_id", vec_col: str = "embedding",
              qid_col: str = "qid", qvec_col: str = "embedding",
-             sample_rows: int = 2000, seed: int = 42,
-             broadcast_queries: bool = True) -> DataFrame:
+             sample_rows: int = 2000, seed: int = 42) -> DataFrame:
     """Approximate top-k: centroid-bucketed search probing ``nprobe`` lists.
 
     Physical plan: assignment AND probing are narrow Arrow-batched passes
@@ -292,8 +291,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     scan).  Inside each list: one matmul for all (query, vector) dots,
     per-query partial top-k, then a global window merge.  Size ``n_lists``
     ~ √N so one list's vectors fit an executor comfortably; hot lists are
-    AQE's shuffle-skew case.  ``broadcast_queries`` is accepted for
-    back-compat but unused (the cogroup shuffles both sides by list).
+    AQE's shuffle-skew case.
 
     Determinism: vectors and centroids are quantized to an integer grid
     (×2^16) and assignment/probing argmins run in exact int64 arithmetic
@@ -305,7 +303,6 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     drift at dim≲10³) is re-scored with the exact cumsum expression, so
     the floored value always equals the oracle's (e.g. exact self-matches
     floor to the same side)."""
-    del broadcast_queries  # superseded by the cogroup plan (see docstring)
     # (build_ivf_index / ivf_topk_against_index widen narrow inputs via
     # ensure_parallelism themselves)
     cents = fit_centroids(embeddings, n_lists, id_col, vec_col,

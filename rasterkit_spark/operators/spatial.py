@@ -4,6 +4,8 @@ src/coordinate/bbox.rs:85-88 and src/utils/mask_utils.rs:42-57).
 
 Operators:
 - :func:`index_points` — grid-cell indexing (G13) via pure Column math.
+- :func:`polygons` / :func:`polygon_cover` — J5's and J7's polygon front
+  end: each WKT parsed once per call, then exploded over its cell cover.
 - :func:`pip_join` — point-in-polygon: cell-cover semi-join (coarse) +
   exact vectorized ray-cast refinement (J5).
 - :func:`knn_join` — exact kNN in at most two rounds: a density-sized
@@ -11,9 +13,9 @@ Operators:
   a ring sized by each one's round-1 Kth distance (J6).
 - :func:`zonal_stats` — polygon × raster: extract's read path (region →
   tile keys → tile join or broadcast tile map → one chunk decode per run
-  of equal tile keys) with a PIP mask in place of the window clip, then
-  min/max/sum/count per zone (J7; aggregate semantics follow A1/A2,
-  src/utils/tiff_extraction_utils.rs:40-94).
+  of equal tile keys) over zone × raster pairs that carry the polygon,
+  with a PIP mask in place of the window clip, then min/max/sum/count per
+  zone (J7; aggregates follow A1/A2, src/utils/tiff_extraction_utils.rs).
 - :func:`add_salt` / hot-cell salting for skewed cells (north_rule).
 
 Scale notes: the polygon side is exploded per covering cell and joined on
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
@@ -39,8 +41,6 @@ from . import extract as EX
 
 #: every published WebMercator code (functions/geo.classify_epsg agrees)
 MERC_EPSGS = (3857, 3785, 900913)
-#: CRSs the zonal PIP stage can place against 4326 polygons
-_ZONAL_PLACEABLE = MERC_EPSGS + (4326,)
 
 
 # ---------------------------------------------------------------------------
@@ -48,10 +48,14 @@ _ZONAL_PLACEABLE = MERC_EPSGS + (4326,)
 # ---------------------------------------------------------------------------
 
 def parse_wkt_polygon(wkt: str):
-    """Minimal 'POLYGON((x y, …))' outer-ring parser (fixture WKT dialect)."""
-    inner = wkt.strip()[len("POLYGON(("):].split(")")[0]
+    """Minimal 'POLYGON((x y, …))' parser (fixture WKT dialect).  Only a
+    single outer ring is supported: a polygon with interior rings raises
+    ``ValueError``, since dropping a hole would count its points inside."""
+    outer, _, rest = wkt.strip()[len("POLYGON(("):].partition(")")
+    if "(" in rest:
+        raise ValueError(f"interior rings (holes) are unsupported: {wkt!r}")
     xs, ys = [], []
-    for pair in inner.split(","):
+    for pair in outer.split(","):
         x, y = pair.split()
         xs.append(float(x))
         ys.append(float(y))
@@ -71,19 +75,33 @@ def wkt_coords_udf(wkt: pd.Series) -> pd.DataFrame:
                          "ys": [p[1] for p in parsed]})
 
 
-def polygons_with_cover(polys: DataFrame, wkt_col: str, res: int) -> DataFrame:
-    """Parse WKT once, attach bbox + covering grid cells (in Mercator),
-    explode to one row per (polygon, cell)."""
+# nondeterministic so the optimizer cannot duplicate it: pip_join's bbox
+# filter infers isnotnull(minx…), which Catalyst would push below the
+# UDF's projection, evaluating the UDF a second time there
+wkt_coords_udf = wkt_coords_udf.asNondeterministic()
+
+
+def polygons(df: DataFrame, id_col: Column, wkt_col: str,
+             *keep: Column) -> DataFrame:
+    """One row per polygon: ``id_col``, the ring as ``poly_xs``/``poly_ys``,
+    its bbox ``minx``/``maxx``/``miny``/``maxy`` and the ``keep`` columns.
+    The only WKT parse of the polygon operators, evaluated once per row."""
+    p = df.select(id_col, *keep, wkt_coords_udf(F.col(wkt_col)).alias("_c"))
+    xs, ys = F.col("_c.xs"), F.col("_c.ys")
+    return p.withColumns({
+        "poly_xs": xs, "poly_ys": ys,
+        "minx": F.array_min(xs), "maxx": F.array_max(xs),
+        "miny": F.array_min(ys), "maxy": F.array_max(ys)}).drop("_c")
+
+
+def polygon_cover(polys: DataFrame, res: int) -> DataFrame:
+    """``polys`` exploded to one row per grid cell (``cell``, in Mercator)
+    covering its bbox: a rectangle superset of the polygon, so a join on
+    the cell has no false negatives."""
     from ..functions import geo
-    p = polys.withColumn("_coords", wkt_coords_udf(F.col(wkt_col)))
-    p = p.withColumn("_minx", F.array_min("_coords.xs")) \
-         .withColumn("_maxx", F.array_max("_coords.xs")) \
-         .withColumn("_miny", F.array_min("_coords.ys")) \
-         .withColumn("_maxy", F.array_max("_coords.ys"))
-    cover = C.grid_cells_for_bbox(
-        geo.merc_x(F.col("_minx")), geo.merc_y(F.col("_miny")),
-        geo.merc_x(F.col("_maxx")), geo.merc_y(F.col("_maxy")), res)
-    return p.withColumn("cell", F.explode(cover))
+    return polys.withColumn("cell", F.explode(C.grid_cells_for_bbox(
+        geo.merc_x(F.col("minx")), geo.merc_y(F.col("miny")),
+        geo.merc_x(F.col("maxx")), geo.merc_y(F.col("maxy")), res)))
 
 
 def index_points(points: DataFrame, lon_col: str, lat_col: str,
@@ -193,11 +211,8 @@ def pip_join(points: DataFrame, polys: DataFrame,
         .select(
         F.col(point_id).cast("string").alias("point_id"),
         F.col(lon_col).alias("px"), F.col(lat_col).alias("py"), "cell")
-    pol = polygons_with_cover(polys, wkt_col, res).select(
-        F.col(poly_id).cast("string").alias("poly_id"),
-        F.col("_coords.xs").alias("poly_xs"),
-        F.col("_coords.ys").alias("poly_ys"),
-        "_minx", "_maxx", "_miny", "_maxy", "cell")
+    pol = polygon_cover(polygons(
+        polys, F.col(poly_id).cast("string").alias("poly_id"), wkt_col), res)
     if broadcast_polys:
         cand = pts.join(F.broadcast(pol), "cell", "inner")
     elif salt_threshold is not None:
@@ -214,10 +229,8 @@ def pip_join(points: DataFrame, polys: DataFrame,
     else:
         cand = pts.join(pol, "cell", "inner")
     # cheap bbox pre-filter before the exact kernel (P7 semantics)
-    cand = cand.filter((F.col("px") >= F.col("_minx")) &
-                       (F.col("px") <= F.col("_maxx")) &
-                       (F.col("py") >= F.col("_miny")) &
-                       (F.col("py") <= F.col("_maxy")))
+    cand = cand.filter(F.col("px").between(F.col("minx"), F.col("maxx")) &
+                       F.col("py").between(F.col("miny"), F.col("maxy")))
     refined = cand.select("point_id", "poly_id", "px", "py",
                           "poly_xs", "poly_ys").mapInPandas(
         _refine_pip, PIP_SCHEMA)
@@ -511,38 +524,28 @@ def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame) -> DataFrame:
     grid cell in Mercator — the footprint-overlap pre-join that replaces a
     zone × raster cartesian (with millions of rasters the cartesian is the
     scale-killer; the cell cover is a rectangle superset, so no false
-    negatives).  Rasters in a CRS the cell grid can't place (neither 3857
-    nor 4326) are conservatively paired with every zone."""
+    negatives) over :func:`polygons` rows ``zq`` and WebMercator or 4326
+    rasters.  Each pair carries the min and max of its zone rows' columns
+    as structs ``zone`` and ``_zone_max``, unequal if one id names two
+    polygons."""
     from ..functions import geo
-    zc = zq.select(
-        "query_id",
-        F.explode(C.grid_cells_for_bbox(
-            geo.merc_x(F.col("minx")), geo.merc_y(F.col("miny")),
-            geo.merc_x(F.col("maxx")), geo.merc_y(F.col("maxy")),
-            _ZONAL_COVER_RES)).alias("cell"))
-    rasters = catalog.filter(F.col("media_kind") == "raster")
-    rb = rasters.select(
+    rb = catalog.filter(F.col("media_kind") == "raster").select(
         "media_ref", "epsg",
         *geo.bounds_cols(F.col("origin_x"), F.col("origin_y"),
                          F.col("width"), F.col("height"),
                          F.col("pixel_sx"), F.col("pixel_sy")))
     is_merc = F.col("epsg").isin(*MERC_EPSGS)
-    placeable = rb.filter(F.col("epsg").isin(*_ZONAL_PLACEABLE))
-    mx0 = F.when(is_merc, F.col("minx")).otherwise(geo.merc_x(F.col("minx")))
-    mx1 = F.when(is_merc, F.col("maxx")).otherwise(geo.merc_x(F.col("maxx")))
-    my0 = F.when(is_merc, F.col("miny")).otherwise(geo.merc_y(F.col("miny")))
-    my1 = F.when(is_merc, F.col("maxy")).otherwise(geo.merc_y(F.col("maxy")))
-    rc = placeable.select(
-        "media_ref",
-        F.explode(C.grid_cells_for_bbox(mx0, my0, mx1, my1,
-                                        _ZONAL_COVER_RES))
-        .alias("cell"))
-    pairs = (zc.join(rc, "cell")
-             .select("query_id", "media_ref").distinct())
-    unplaceable = rb.filter(~F.col("epsg").isin(*_ZONAL_PLACEABLE)) \
-        .select("media_ref")
-    fallback = zq.select("query_id").crossJoin(F.broadcast(unplaceable))
-    return pairs.unionByName(fallback)
+
+    def merc(c, to_merc):
+        return F.when(is_merc, F.col(c)).otherwise(to_merc(F.col(c)))
+    rc = rb.select("media_ref", F.explode(C.grid_cells_for_bbox(
+        merc("minx", geo.merc_x), merc("miny", geo.merc_y),
+        merc("maxx", geo.merc_x), merc("maxy", geo.merc_y),
+        _ZONAL_COVER_RES)).alias("cell"))
+    zone = F.struct(*[c for c in zq.columns if c != "query_id"])
+    return polygon_cover(zq, _ZONAL_COVER_RES).join(rc, "cell") \
+        .groupBy("query_id", "media_ref") \
+        .agg(F.min(zone).alias("zone"), F.max(zone).alias("_zone_max"))
 
 
 def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
@@ -555,20 +558,23 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
     ``"error"`` (default) raises naming offenders, counted by aggregates
     that the candidate-pair checkpoint's job evaluates
     (:func:`~rasterkit_spark.plans.materialize.materialize`), at no job
-    of their own; ``"skip"`` silently excludes them.  Before this
-    screen they were conservatively paired with every zone and the PIP
-    stage compared meter coordinates against degree polygons — all-outside,
-    silently-empty stats.
+    of their own; ``"skip"`` silently excludes them.  Either way no such
+    raster reaches the PIP stage, which would compare meter coordinates
+    against degree polygons — all-outside, silently-empty stats.
 
-    Pipeline: zone bbox (from WKT) → footprint-overlap pre-join (cell
-    cover equi-join — never zone × raster cartesian) → region on each
-    candidate raster (G5/G6 dispatch) → tile-key expansion → one
-    ``mapInPandas`` pass over runs of equal tile keys (each tile's chunk
-    is decoded and projected once per run, then every zone row in the run
-    takes its PIP-masked partial) → groupBy reduce.  This is extract's
-    read path (:func:`extract.fetch_chunk`, :func:`extract.key_runs`)
-    with a PIP mask in place of the window clip.  The two arms differ only
-    in where the blob meets the key rows:
+    Each paired ``zone_id`` must be non-NULL and name one polygon, or
+    ``ValueError`` (counted on the same job); duplicate rows count once.
+
+    Pipeline: zone polygon and bbox (:func:`polygons`, the one WKT parse)
+    → footprint-overlap pre-join (cell cover equi-join — never zone ×
+    raster cartesian), checkpointed as (zone, raster) pairs carrying the
+    polygon → region on each pair (G5/G6 dispatch) → tile-key expansion →
+    one ``mapInPandas`` pass over runs of equal tile keys (each tile's
+    chunk is decoded and projected once per run, then every zone row in
+    the run takes its PIP-masked partial) → groupBy reduce.  This is
+    extract's read path (:func:`extract.fetch_chunk`,
+    :func:`extract.key_runs`) with a PIP mask in place of the window clip.
+    The two arms differ only in where the blob meets the key rows:
 
     - default: the blob-free key rows broadcast and the tile table
       streams, so the join already emits each tile's zone rows together —
@@ -602,46 +608,39 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
     if on_unplaceable not in ("error", "skip"):
         raise ValueError(
             f"on_unplaceable must be 'error' or 'skip', got {on_unplaceable!r}")
+    # the CRSs the PIP stage can place against 4326 polygons
     placeable = (F.col("media_kind") != "raster") \
-        | F.col("epsg").isin(*_ZONAL_PLACEABLE)
-    screen, probes, pairs_catalog = {}, (), catalog
+        | F.col("epsg").isin(*MERC_EPSGS, 4326)
+    screen, probes, observed = {}, (), catalog
     if on_unplaceable == "error":
         # counted on the pairs checkpoint's own job: the observed node sits
         # on the catalog input, upstream of the placeable filter and the
-        # joins, so it counts every bad raster, paired or not.  The filter
-        # keeps bad rasters out of the pairs job, whose every-zone fallback
-        # would otherwise cross them with all zones before the raise
+        # joins, so it counts every bad raster, paired or not
         bad = ~placeable
         ref = F.when(bad, F.col("media_ref"))
         screen = {"n": F.count_if(bad), "lo": F.min(ref),
                   "any": F.any_value(ref, ignoreNulls=True),
                   "hi": F.max(ref)}
-        pairs_catalog, probe = observe(catalog, **screen)
-        pairs_catalog, probes = pairs_catalog.filter(placeable), (probe,)
-    else:
-        catalog = pairs_catalog = catalog.filter(placeable)
-    z = zones.withColumn("_coords", wkt_coords_udf(F.col("polygon_wkt")))
-    zq = z.select(
-        F.col("zone_id").alias("query_id"),
-        F.col("_coords.xs").alias("poly_xs"),
-        F.col("_coords.ys").alias("poly_ys"),
-        F.array_min("_coords.xs").alias("minx"),
-        F.array_max("_coords.xs").alias("maxx"),
-        F.array_min("_coords.ys").alias("miny"),
-        F.array_max("_coords.ys").alias("maxy"),
-        F.coalesce(F.col("epsg"), F.lit(4326)).alias("crs"),
-        F.lit(None).cast("double").alias("radius_m"))
-    # materialize the (query_id, media_ref) candidate-pair table once:
-    # the region/key chain and _zonal_finish both read it, and left lazy
-    # each re-ran the WKT parse and the footprint join (round 6: the wall
-    # was this stage latency, not pixel work)
-    pairs, m = materialize(zonal_footprint_pairs(zq, pairs_catalog), *probes)
+        observed, probe = observe(catalog, **screen)
+        probes = (probe,)
+    zq = polygons(zones, F.col("zone_id").alias("query_id"), "polygon_wkt",
+                  F.coalesce(F.col("epsg"), F.lit(4326)).alias("crs"))
+    # materialize the candidate pairs once, each carrying its polygon: the
+    # region/key chain and _zonal_finish both read them, and nothing after
+    # the checkpoint parses WKT.  The same job counts bad zone_ids.  No
+    # unplaceable raster reaches the pairs, so resolve_regions never meets one
+    pairs, ids = observe(
+        zonal_footprint_pairs(zq, observed.filter(placeable)),
+        null_ids=F.count_if(F.col("query_id").isNull()),
+        split_ids=F.count_if(F.col("zone") != F.col("_zone_max")))
+    pairs, m = materialize(pairs.select("query_id", "media_ref", "zone.*"),
+                           ids, *probes)
     if screen:
         if m["n"] is None:
             # no job ran the catalog subtree (the optimizer prunes it when
             # there are no zones), so the screen needs a job of its own
             own = catalog.agg(*[c.alias(k) for k, c in screen.items()])
-            m = own.first().asDict()  # eager: the screen's own job
+            m |= own.first().asDict()  # eager: the screen's own job
         if m["n"]:
             offenders = sorted({m["lo"], m["any"], m["hi"]} - {None})
             raise ValueError(
@@ -649,8 +648,12 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
                 "CRS the 4326-polygon PIP stage cannot place (e.g. "
                 f"{offenders}); reproject them or pass "
                 "on_unplaceable='skip'")
-    zr = zq.join(pairs, "query_id")
-    keys = EX.expand_tile_keys(EX.resolve_regions(zr, catalog)) \
+    if m["null_ids"] or m["split_ids"]:
+        raise ValueError(
+            f"zonal_stats: zone_id must be non-NULL and name one polygon "
+            f"(pairs with a NULL id: {m['null_ids']}, with two polygons: "
+            f"{m['split_ids']})")
+    keys = EX.expand_tile_keys(EX.resolve_regions(pairs, catalog)) \
         .withColumnRenamed("query_id", "zone_id")
     cols = ["zone_id", "media_ref", "level", "region_x", "region_y",
             "region_w", "region_h", "chunk_w", "chunk_h", "compression",
@@ -682,12 +685,8 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
 def _zonal_finish(partials: DataFrame, pairs: DataFrame) -> DataFrame:
     """groupBy reduce of per-tile partials + the left join that restores
     candidate pairs whose polygons touched no pixel (zmin/zmax=-1).
-
-    ``pairs`` is the checkpointed footprint-pair table (query_id,
-    media_ref) — already distinct, and exactly the region chain's pair
-    set (resolve_regions only inner-joins the catalog rows every pair
-    came from), so reusing it here skips a full recompute of the WKT +
-    footprint-join subtree per call."""
+    ``pairs``, the checkpointed pair table, holds one row per pair: the
+    region chain's pair set, since resolve_regions only inner-joins it."""
     agg = partials.groupBy("zone_id", "media_ref").agg(
         F.min("pmin").alias("zmin"), F.max("pmax").alias("zmax"),
         F.sum("psum").alias("zsum"), F.sum("pcount").alias("zcount"))

@@ -30,5 +30,12 @@ def census(plan: str):
             plan.count("BroadcastExchange"), plan.count("MapInPandas"))
 
 
+def arrow_udf_names(plan: str) -> list[str]:
+    """Names of the Python UDFs the plan's ArrowEvalPython nodes evaluate,
+    one entry per node and UDF, so a UDF listed twice runs twice."""
+    return [name for node in re.findall(r"ArrowEvalPython \[(.*)\], \[", plan)
+            for name in re.findall(r"(\w+)\([^\[\]]*?\)#\d+", node)]
+
+
 def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()

@@ -7,7 +7,8 @@ BroadcastExchanges, MapInPandas nodes and Python-UDF nodes."""
 import numpy as np
 import pandas as pd
 import pytest
-from budget import PY_UDF_NODES, census, count_jobs, executed_plan
+from budget import (PY_UDF_NODES, arrow_udf_names, census, count_jobs,
+                    executed_plan)
 
 from rasterkit_spark.fixtures import corpus as CP
 from rasterkit_spark.operators import dedup as DD
@@ -37,12 +38,13 @@ def _knn_inputs():
 
 def _budget(spark, name, call):
     """((call jobs, collect jobs), (Exchange, BroadcastExchange,
-    MapInPandas), Python-UDF nodes, rows)."""
+    MapInPandas), Python-UDF nodes, rows, the UDFs of the plan's
+    ArrowEvalPython nodes)."""
     df, call_jobs = count_jobs(spark, f"{name}-call", call)
     plan = executed_plan(df)
     rows, collect_jobs = count_jobs(spark, f"{name}-collect", df.collect)
     return ((call_jobs, collect_jobs), census(plan),
-            len(PY_UDF_NODES.findall(plan)), rows)
+            len(PY_UDF_NODES.findall(plan)), rows, arrow_udf_names(plan))
 
 
 # (call jobs, collect jobs), plan census, Python-UDF nodes.  The parent
@@ -59,7 +61,7 @@ def test_knn_join_plan_and_job_budget(spark, fixture):
     points, queries = _knn_inputs()
     q, k = queries[fixture]
     pdf, qdf = spark.createDataFrame(points), spark.createDataFrame(q)
-    jobs, plan_census, udf_nodes, rows = _budget(
+    jobs, plan_census, udf_nodes, rows, _ = _budget(
         spark, f"knn-{fixture}", lambda: SP.knn_join(
             pdf, qdf, k, point_id="id", query_id="qid", x_col="lon",
             y_col="lat", res=6))
@@ -70,9 +72,9 @@ def test_knn_join_plan_and_job_budget(spark, fixture):
 
 # measured on the fixture below: the call is lazy; the collect runs the
 # polygon-side broadcast and the dedup's shuffle.  Python-UDF nodes: the
-# refinement MapInPandas and the WKT-parse Arrow UDF, which the plan
-# evaluates twice (two ArrowEvalPython nodes over the polygon side)
-PIP_BUDGET = ((0, 2), (1, 1, 1), 3)
+# refinement MapInPandas and the WKT-parse Arrow UDF, evaluated once (the
+# parent evaluated it twice: 3 nodes)
+PIP_BUDGET = ((0, 2), (1, 1, 1), 2)
 
 
 def test_pip_join_plan_and_job_budget(spark):
@@ -83,10 +85,11 @@ def test_pip_join_plan_and_job_budget(spark):
         "id": [f"p{i}" for i in range(len(pts))],
         "lon": pts[:, 0], "lat": pts[:, 1]}))
     zones = spark.createDataFrame(c.zones)
-    jobs, plan_census, udf_nodes, _ = _budget(
+    jobs, plan_census, udf_nodes, _, arrow_udfs = _budget(
         spark, "pip", lambda: SP.pip_join(
             points, zones, "id", "lon", "lat", "zone_id", "polygon_wkt",
             res=8))
+    assert arrow_udfs == ["wkt_coords_udf"], arrow_udfs
     assert (jobs, plan_census, udf_nodes) == PIP_BUDGET, \
         f"pip_join: {jobs}, {plan_census}, {udf_nodes}"
 
@@ -106,7 +109,7 @@ def test_shared_spans_plan_and_job_budget(spark):
         {"doc_id": 3, "text": "unrelated content without any overlap " * 4},
         {"doc_id": 4, "text": span + " " + span[::-1]},
     ]))
-    jobs, plan_census, udf_nodes, rows = _budget(
+    jobs, plan_census, udf_nodes, rows, _ = _budget(
         spark, "spans", lambda: DD.shared_span_pairs(docs, min_len=40))
     assert len(rows) == 3
     assert (jobs, plan_census, udf_nodes) == SPANS_BUDGET, \

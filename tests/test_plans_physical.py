@@ -45,13 +45,9 @@ def test_zonal_plan_no_cartesian_on_placeable_rasters(spark, sdfs):
     df = SP.zonal_stats(sdfs["zones"], sdfs["media_catalog"], sdfs["tiles"])
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
-    # the only nested-loop flavor Spark prints for a non-broadcast plan is
-    # CartesianProduct (asserted absent above); bound the broadcast
-    # nested-loop occurrences to the documented unplaceable-CRS fallback
-    # subtree (can appear twice: regions feed partials AND the all-pairs
-    # left join) — a plain count equality against "NestedLoopJoin" was a
-    # tautology, every BroadcastNestedLoopJoin contains that substring
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
+    # every raster reaching the footprint join is placeable, so no zone is
+    # crossed with a raster: no nested-loop join of either flavor
+    assert "NestedLoopJoin" not in plan
 
 
 def test_pip_join_plan_broadcasts_polygons(spark):

@@ -58,6 +58,17 @@ def test_pip_join_matches_bruteforce(spark, corpus, points_pdf):
     assert len(want_pairs) > 0
 
 
+def test_wkt_with_interior_ring_raises():
+    """A hole cannot be dropped silently: PIP and zonal would count the
+    hole's points as inside the polygon."""
+    outer = "(0 0, 10 0, 10 10, 0 10, 0 0)"
+    assert SP.parse_wkt_polygon(f"POLYGON({outer})") == (
+        [0.0, 10.0, 10.0, 0.0], [0.0, 0.0, 10.0, 10.0])
+    with pytest.raises(ValueError, match="interior rings"):
+        SP.parse_wkt_polygon(
+            f"POLYGON({outer}, (4 4, 6 4, 6 6, 4 6, 4 4))")
+
+
 @pytest.mark.parametrize("k", [1, 5])
 def test_knn_join_exact(spark, points_pdf, k):
     queries = pd.DataFrame({

@@ -12,7 +12,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
-from budget import census, count_jobs
+from budget import arrow_udf_names, census, count_jobs
 
 from rasterkit_spark import kernels as K
 from rasterkit_spark.fixtures import corpus as CP
@@ -200,12 +200,14 @@ def test_tile_map_lookup_and_miss():
 # ---------------------------------------------------------------------------
 
 # measured with the fixture below: jobs the zonal_stats call runs (pairs
-# checkpoint, which also counts unplaceable rasters through an
-# Observation; tile-map sizing and collect) and jobs its collect runs
-PARENT_JOBS = {"default": (6, 9), "broadcast_tiles": (9, 9)}
+# checkpoint, which also counts unplaceable rasters and bad zone ids
+# through Observations; tile-map sizing and collect) and jobs its collect
+# runs.  The parent ran (6, 9) and (9, 9): it re-parsed and re-joined the
+# zones after the checkpoint
+JOBS = {"default": (5, 6), "broadcast_tiles": (8, 6)}
 # default arm plan census on the same code: shuffle Exchanges,
-# BroadcastExchanges and MapInPandas nodes
-DEFAULT_ARM_CENSUS = (4, 2, 1)
+# BroadcastExchanges and MapInPandas nodes (the parent's was (4, 2, 1))
+DEFAULT_ARM_CENSUS = (2, 2, 1)
 
 
 @pytest.mark.parametrize("arm", ["default", "broadcast_tiles"])
@@ -218,9 +220,10 @@ def test_zonal_plan_and_job_budget(spark, arm):
             broadcast_tiles=arm == "broadcast_tiles"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     _, collect_jobs = count_jobs(spark, f"zonal-{arm}-collect", df.collect)
-    parent_call, parent_collect = PARENT_JOBS[arm]
-    assert call_jobs <= parent_call, (arm, call_jobs)
-    assert collect_jobs <= parent_collect, (arm, collect_jobs)
+    assert (call_jobs, collect_jobs) == JOBS[arm], \
+        (arm, call_jobs, collect_jobs)
+    # the checkpointed pairs carry the polygons: nothing after them parses
+    assert arrow_udf_names(plan) == [], plan
     if arm == "default":
         assert census(plan) == DEFAULT_ARM_CENSUS, plan
         assert "REPARTITION_BY_NUM" not in plan, plan
@@ -278,3 +281,52 @@ def test_unplaceable_raster_outside_every_zone_still_raises(spark, case,
     assert pairs.filter(F.col("media_ref") == bad_ref).count() == 0
     # a placeable catalog passes in both cases
     SP.zonal_stats(zones, sd["media_catalog"], sd["tiles"]).collect()
+
+
+# ---------------------------------------------------------------------------
+# zone_id screen
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def screen_inputs(spark):
+    """The zones, catalog and tiles of a small corpus whose every zone
+    overlaps a raster."""
+    c = CP.build_corpus(n_media=4, n_docs=10, n_queries=6)
+    sd = c.to_spark(spark, ["media_catalog", "tiles"])
+    return c.zones, sd["media_catalog"], sd["tiles"]
+
+
+def _zonal(spark, zones, catalog, tiles):
+    return SP.zonal_stats(spark.createDataFrame(zones), catalog, tiles)
+
+
+def test_null_zone_id_raises(spark, screen_inputs):
+    zones, cat, tiles = screen_inputs
+    zones = zones.astype({"zone_id": object})
+    zones.loc[0, "zone_id"] = None
+    with pytest.raises(ValueError, match=r"with a NULL id: [1-9]"):
+        _zonal(spark, zones, cat, tiles)
+
+
+def test_two_polygons_under_one_zone_id_raise(spark, screen_inputs):
+    zones, cat, tiles = screen_inputs
+    z0 = zones.iloc[0].to_dict()
+    xs, ys = SP.parse_wkt_polygon(z0["polygon_wkt"])
+    # over the same raster: a smaller ring around the same centroid
+    cx, cy = np.mean(xs), np.mean(ys)
+    shrunk = ", ".join(f"{cx + (x - cx) / 2} {cy + (y - cy) / 2}"
+                       for x, y in zip(xs + xs[:1], ys + ys[:1]))
+    twin = pd.DataFrame([dict(z0, polygon_wkt=f"POLYGON(({shrunk}))")])
+    with pytest.raises(ValueError, match=r"with two polygons: [1-9]"):
+        _zonal(spark, pd.concat([zones, twin]), cat, tiles)
+
+
+def test_identical_duplicate_zone_rows_count_once(spark, screen_inputs):
+    zones, cat, tiles = screen_inputs
+    key = ["zone_id", "media_ref"]
+    once = _zonal(spark, zones, cat, tiles).toPandas() \
+        .sort_values(key).reset_index(drop=True)
+    assert (once.zcount > 0).any()
+    twice = _zonal(spark, pd.concat([zones, zones.iloc[:2]]), cat, tiles) \
+        .toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(once, twice)
