@@ -21,11 +21,14 @@ except the tiny colormap table.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 from . import kernels as K
 from .functions import geo
 from .operators import colormap_io, extract as _ex, raster_ops, sinks, spatial
+from .plans.materialize import materialize
 
 
 def analyze(catalog: DataFrame) -> DataFrame:
@@ -132,11 +135,14 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame,
 def build_pyramid(tiles: DataFrame, catalog: DataFrame,
                   levels: int = 2) -> DataFrame:
     """Generate overview levels 1..levels (A5); returns the union of all
-    generated levels."""
-    out = None
+    generated levels.  Each level is reduced from the one before it only;
+    every level but the last is materialized, so no level's plan
+    recomputes the levels under it."""
+    out = []
     current = tiles.filter(F.col("level") == 0)
     for lvl in range(levels):
-        gen = raster_ops.build_pyramid(current, catalog, source_level=lvl)
-        out = gen if out is None else out.unionByName(gen)
-        current = current.unionByName(gen, allowMissingColumns=True)
-    return out
+        current = raster_ops.build_pyramid(current, catalog, source_level=lvl)
+        if lvl < levels - 1:
+            current, _ = materialize(current)
+        out.append(current)
+    return functools.reduce(DataFrame.unionByName, out)

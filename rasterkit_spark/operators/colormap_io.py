@@ -1,5 +1,5 @@
 """Colormap sources and sinks (SURVEY.md §2.1 S11-S14 / K7) plus
-metadata-only reprojection (G11) and overview/LOD selection (§4).
+metadata-only reprojection (G11).
 
 Sources parse into the engine's colormap DataFrame shape
 ``(cmap_id, map_type, value, r, g, b, label)``; sinks render back out.
@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.strings import hex_to_rgb, rgb_to_hex, xml_escape, xml_attr
 
@@ -168,19 +168,3 @@ def reproject_metadata(catalog: DataFrame, target_epsg: int) -> DataFrame:
     of parity scope)."""
     return catalog.withColumn("source_epsg", F.col("epsg")) \
                   .withColumn("epsg", F.lit(target_epsg))
-
-
-# ---------------------------------------------------------------------------
-# §4 — overview / LOD selection: pick the level whose effective pixel size
-# best reaches the target resolution (plain filter on the level column)
-# ---------------------------------------------------------------------------
-
-def select_level(catalog: DataFrame, target_resolution: F.Column,
-                 max_level: int = 2) -> F.Column:
-    """level = clamp(floor(log2(target_res / pixel_s)), 0, max_level):
-    each overview level doubles the pixel size."""
-    # vector rows carry pixel_sx=0 → guard the division (ANSI mode aborts)
-    ratio = F.when(F.col("pixel_sx") > 0,
-                   target_resolution / F.col("pixel_sx")).otherwise(F.lit(1.0))
-    lvl = F.floor(F.log2(F.greatest(ratio, F.lit(1.0))))
-    return F.least(F.greatest(lvl, F.lit(0)), F.lit(max_level)).cast("int")

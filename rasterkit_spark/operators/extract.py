@@ -35,7 +35,7 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark import SparkContext
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
@@ -57,28 +57,54 @@ WINDOW_SCHEMA = StructType([
 ])
 
 
-def normalized_chunk_cols() -> list:
-    """Strips-as-tiles normalization (src/extractor/strip_reader.rs:61-71):
-    chunk_w = tile_w or image width; chunk_h = tile_h or rows_per_strip,
-    with the NULL-rows_per_strip quirk defaulting to image **width**.
-    0 encodes NULL in the catalog fixtures."""
-    tile_w = F.col("tile_w")
-    tile_h = F.col("tile_h")
-    rps = F.col("rows_per_strip")
-    width = F.col("width")
-    chunk_w = F.when(tile_w > 0, tile_w).otherwise(width)
-    chunk_h = F.when(tile_h > 0, tile_h).otherwise(
-        F.when(rps > 0, rps).otherwise(width))  # ← quirk: default = width
-    return [chunk_w.alias("chunk_w"), chunk_h.alias("chunk_h")]
+def level_geometry(level: str) -> dict[str, Column]:
+    """The one chunk-geometry definition: ``{width, height, pixel_sx,
+    pixel_sy, chunk_w, chunk_h}`` Columns of a catalog row at overview
+    ``level``, a SQL expression (a column name or an integer literal),
+    for ``withColumns``.
+
+    Dims floor-halve per level (floor halving composes, so dims_ℓ =
+    dims >> ℓ, matching A5 pyramid generation) and the pixel scale
+    doubles.  Strips are tiles of image width (src/extractor/
+    strip_reader.rs:61-71): chunk_w = tile_w or the level width; chunk_h =
+    tile_h or rows_per_strip, with the NULL-rows_per_strip quirk
+    defaulting to the level **width**.  0 encodes NULL in the catalog
+    fixtures.  Every reader of chunk geometry (extract, the pyramid,
+    min/max) takes it from here.
+
+    Written as SQL text: built with the Column API, the six Columns and
+    their ``withColumns`` cost ~450 py4j round trips per call, ~39 as
+    ``F.expr`` (counted on PySpark 4.1.2), and every raster op call
+    builds them on the driver."""
+    # 2^level as DOUBLE is exact (small powers of two); floor-div keeps the
+    # dims integer-exact
+    two_l = f"pow(2, {level})"
+    width = f"CAST(floor(width / {two_l}) AS INT)"
+    return {name: F.expr(sql) for name, sql in {
+        "width": width,
+        "height": f"CAST(floor(height / {two_l}) AS INT)",
+        "pixel_sx": f"pixel_sx * {two_l}",
+        "pixel_sy": f"pixel_sy * {two_l}",
+        "chunk_w": f"CASE WHEN tile_w > 0 THEN tile_w ELSE {width} END",
+        "chunk_h": f"CASE WHEN tile_h > 0 THEN tile_h "  # ← quirk: = width
+                   f"WHEN rows_per_strip > 0 THEN rows_per_strip "
+                   f"ELSE {width} END",
+    }.items()}
 
 
-def _catalog_select(catalog: DataFrame) -> DataFrame:
+def raster_catalog(catalog: DataFrame) -> DataFrame:
+    """The raster rows of ``catalog`` with the columns chunk reads need,
+    at level 0 (``samples_per_pixel`` defaults to 1)."""
     spp = (F.col("samples_per_pixel") if "samples_per_pixel"
            in catalog.columns else F.lit(1)).alias("samples_per_pixel")
     return catalog.filter(F.col("media_kind") == "raster").select(
         "media_ref", "width", "height", "tile_w", "tile_h", "rows_per_strip",
         "epsg", "pixel_sx", "pixel_sy", "origin_x", "origin_y",
-        "compression", "predictor", spp, *normalized_chunk_cols())
+        "compression", "predictor", spp)
+
+
+def _catalog_select(catalog: DataFrame) -> DataFrame:
+    return raster_catalog(catalog).withColumns(level_geometry("0"))
 
 
 #: (SparkContext, {has_radius: stages}) — the region Column lists are
@@ -444,28 +470,25 @@ def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
 
 
 def catalog_at_levels(catalog: DataFrame, max_level: int) -> DataFrame:
-    """Raster catalog × overview levels 0..max_level with the level-scaled
-    geotransform: dims floor-halve per level (matching A5 pyramid
-    generation — floor halving composes, so dims_ℓ = dims >> ℓ) and pixel
-    scale doubles; tile dims / rows_per_strip are level-invariant (the
-    NULL-rps quirk resolves against the LEVEL width via the normalized
-    chunk columns).  Adds ``level`` and keeps ``pixel_s0`` (the base
-    resolution LOD selection compares against)."""
-    c = _catalog_select(catalog).withColumn(
-        "level", F.explode(F.sequence(F.lit(0), F.lit(max_level))))
-    # 2^level as DOUBLE is exact (small powers of two); floor-div keeps the
-    # dims integer-exact — shiftleft/shiftright need literal bit counts
-    two_l = F.pow(F.lit(2.0), F.col("level").cast("double"))
-    scaled = (c.withColumn("pixel_s0", F.col("pixel_sx"))
-              .withColumn("width",
-                          F.floor(F.col("width") / two_l).cast("int"))
-              .withColumn("height",
-                          F.floor(F.col("height") / two_l).cast("int"))
-              .withColumn("pixel_sx", F.col("pixel_sx") * two_l)
-              .withColumn("pixel_sy", F.col("pixel_sy") * two_l))
-    # re-derive chunk geometry against the level dims (strips: cw = width)
-    return scaled.drop("chunk_w", "chunk_h").select(
-        "*", *normalized_chunk_cols())
+    """Raster catalog × overview levels 0..max_level, each row at its
+    level's :func:`level_geometry`.  Adds ``level`` and keeps ``pixel_s0``
+    (the base resolution :func:`select_level` compares against)."""
+    c = raster_catalog(catalog).selectExpr(
+        "*", "pixel_sx AS pixel_s0",
+        f"explode(sequence(0, {int(max_level)})) AS level")
+    return c.withColumns(level_geometry("level"))
+
+
+def select_level(pixel_s: Column, target_resolution: Column,
+                 max_level: int = 2) -> Column:
+    """§4 overview/LOD selection, the level whose effective pixel size best
+    reaches ``target_resolution``: clamp(floor(log2(target / pixel_s)),
+    0, max_level), since each overview level doubles the pixel size."""
+    # vector rows carry pixel_sx=0 → guard the division (ANSI mode aborts)
+    ratio = F.when(pixel_s > 0,
+                   target_resolution / pixel_s).otherwise(F.lit(1.0))
+    lvl = F.floor(F.log2(F.greatest(ratio, F.lit(1.0))))
+    return F.least(F.greatest(lvl, F.lit(0)), F.lit(max_level)).cast("int")
 
 
 def extract_auto_level(queries: DataFrame, catalog: DataFrame,
@@ -495,12 +518,9 @@ def extract_auto_level(queries: DataFrame, catalog: DataFrame,
         F.max("level").alias("_max_tile_level"))
     q = (queries.join(F.broadcast(cat), "media_ref", "inner")
          .join(F.broadcast(max_lvl), "media_ref", "inner"))
-    ratio = F.when(F.col("pixel_s0") > 0,
-                   F.col(target_col) / F.col("pixel_s0")).otherwise(F.lit(1.0))
     want = F.least(
-        F.greatest(F.floor(F.log2(F.greatest(ratio, F.lit(1.0)))), F.lit(0)),
-        F.lit(max_level),
-        F.col("_max_tile_level")).cast("int")
+        select_level(F.col("pixel_s0"), F.col(target_col), max_level),
+        F.col("_max_tile_level"))
     q = q.filter(F.col("level") == want).drop("_max_tile_level")
     regions = _resolve_regions_joined(q, "radius_m" in queries.columns)
     keys = expand_tile_keys(regions)

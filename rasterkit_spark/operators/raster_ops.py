@@ -15,8 +15,12 @@
   (src/utils/tiff_code_translators.rs:10-73).
 
 All pixel work runs through the shared kernels inside Arrow-batched
-``mapInPandas`` — never per-row Python.
-"""
+``mapInPandas`` — never per-row Python.  The per-window post-ops (P3, P5,
+P6, J3) share one loop, :func:`_map_windows`, and read pixels through
+:func:`window_2d`, so RGB windows luma-collapse first.  The per-chunk ops
+(min/max, pyramid) take chunk geometry from
+:func:`extract.level_geometry` and decode with the raster's
+``samples_per_pixel``."""
 
 from __future__ import annotations
 
@@ -36,44 +40,51 @@ from . import extract as EX
 def window_2d(row) -> np.ndarray:
     """Window bytes → 2-D grayscale array, samples_per_pixel-aware.
 
-    RGB (spp=3) windows collapse to luma8 — the reference grayscales
-    before every single-band post-op (api.rs:322 ``to_luma``); a plain
-    reshape(h, w) on a 3·h·w buffer would just crash.  Other spp raise."""
+    RGB (spp=3) windows collapse to luma8, and RGBA (spp=4) to the luma8
+    of their RGB — the reference grayscales before every single-band
+    post-op (api.rs:322 ``to_luma``); a plain reshape(h, w) on a 3·h·w
+    buffer would just crash.  Other spp raise."""
     h, w = int(row.region_h), int(row.region_w)
     spp = int(getattr(row, "samples_per_pixel", 1) or 1)
     buf = np.frombuffer(bytes(row.window), dtype=np.uint8)
     if spp == 1:
         return buf.reshape(h, w)
-    if spp == 3:
-        return K.rgb_to_luma8(buf.reshape(h, w, 3))
+    if spp in (3, 4):
+        return K.rgb_to_luma8(buf.reshape(h, w, spp)[..., :3])
     raise ValueError(
-        f"unsupported samples_per_pixel={spp} (expected 1 or 3)")
+        f"unsupported samples_per_pixel={spp} (expected 1, 3 or 4)")
 
 
-def _map_windows(df: DataFrame, fn, extra_fields=()) -> DataFrame:
-    """mapInPandas over window rows: fn(np2d, row) → (np2d_out, extras)."""
-    fields = [f for f in df.schema.fields]
-    out_schema = StructType(fields + list(extra_fields))
-    has_spp = "samples_per_pixel" in df.columns
+def _map_windows(df: DataFrame, fn, fields: list) -> DataFrame:
+    """The one per-window ``mapInPandas`` body: ``fn(row)`` gives a tuple
+    of values for ``fields``; a field ``df`` already has is replaced in
+    place, any other is appended."""
+    given = {f.name: f for f in fields}
+    kept = [given.get(f.name, f) for f in df.schema.fields]
+    out_schema = StructType(
+        kept + [f for f in fields if f.name not in df.columns])
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            new_windows, extras = [], []
-            for row in pdf.itertuples():
-                out, ex = fn(window_2d(row), row)
-                new_windows.append(bytearray(out.tobytes()))
-                extras.append(ex)
-            pdf = pdf.copy()
-            pdf["window"] = new_windows
-            if has_spp:  # RGB inputs were luma-collapsed above
-                pdf["samples_per_pixel"] = 1
-            for i, f_ in enumerate(extra_fields):
-                pdf[f_.name] = [e[i] for e in extras]
+            values = zip(*[fn(row) for row in pdf.itertuples()])
+            for f, col in zip(fields, values):
+                pdf[f.name] = list(col)
             yield pdf
 
     return df.mapInPandas(gen, out_schema)
+
+
+def _sha_bytes(arr: np.ndarray) -> tuple:
+    """(bytes for a BinaryType column, their sha256 hex)."""
+    buf = arr.tobytes()
+    return bytearray(buf), hashlib.sha256(buf).hexdigest()
+
+
+#: the fields a single-band post-op rewrites: its luma8 window is one band
+_GRAY_WINDOW = [StructField("window", BinaryType()),
+                StructField("samples_per_pixel", LongType())]
 
 
 def to_luma_op(windows: DataFrame) -> DataFrame:
@@ -83,35 +94,14 @@ def to_luma_op(windows: DataFrame) -> DataFrame:
     first).  Grayscale windows pass through byte-identical; the
     ``samples_per_pixel`` column collapses to 1 and ``window_sha256``
     is recomputed."""
-    out_schema = windows.schema
+    def fn(row):
+        if int(getattr(row, "samples_per_pixel", 1) or 1) == 1:
+            return row.window, 1, row.window_sha256
+        buf, sha = _sha_bytes(window_2d(row))
+        return buf, 1, sha
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            new_w, new_sha, new_spp = [], [], []
-            for row in pdf.itertuples():
-                spp = int(getattr(row, "samples_per_pixel", 1) or 1)
-                if spp == 1:
-                    new_w.append(row.window)
-                    new_sha.append(row.window_sha256)
-                    new_spp.append(1)
-                    continue
-                arr = np.frombuffer(bytes(row.window), dtype=np.uint8) \
-                    .reshape(int(row.region_h), int(row.region_w), spp)
-                luma = K.rgb_to_luma8(arr[..., :3])
-                buf = luma.tobytes()
-                new_w.append(bytearray(buf))
-                new_sha.append(hashlib.sha256(buf).hexdigest())
-                new_spp.append(1)
-            pdf = pdf.copy()
-            pdf["window"] = new_w
-            pdf["window_sha256"] = new_sha
-            if "samples_per_pixel" in pdf.columns:
-                pdf["samples_per_pixel"] = new_spp
-            yield pdf
-
-    return windows.mapInPandas(gen, out_schema)
+    return _map_windows(windows, fn, _GRAY_WINDOW + [
+        StructField("window_sha256", StringType())])
 
 
 RGB_STATS_SCHEMA = StructType([
@@ -149,64 +139,33 @@ def rgb_minmax(windows: DataFrame) -> DataFrame:
 def apply_filter(windows: DataFrame, lo: int, hi: int,
                  background: int = 0) -> DataFrame:
     """P3: keep v∈[lo,hi] else background (filter_utils.rs:24-54)."""
-    sha = StructField("filtered_sha256", StringType())
+    def fn(row):
+        buf, sha = _sha_bytes(
+            K.filter_values(window_2d(row), lo, hi, background))
+        return buf, 1, sha
 
-    def fn(arr, row):
-        out = K.filter_values(arr, lo, hi, background)
-        return out, (hashlib.sha256(out.tobytes()).hexdigest(),)
+    return _map_windows(windows, fn, _GRAY_WINDOW + [
+        StructField("filtered_sha256", StringType())])
 
-    return _map_windows(windows, fn, [sha])
+
+#: the RGBA output of the transparency filter and the circle mask
+_RGBA = [StructField("window_rgba", BinaryType()),
+         StructField("rgba_sha256", StringType())]
 
 
 def apply_filter_transparency(windows: DataFrame, lo: int, hi: int) -> DataFrame:
     """P3 transparency variant (filter_utils.rs:70-111): out-of-range pixels
     become fully transparent RGBA instead of a background value; output
     column ``window_rgba`` (pairs with the K3 PNG-extension rule)."""
-    schema = StructType(windows.schema.fields + [
-        StructField("window_rgba", BinaryType()),
-        StructField("rgba_sha256", StringType())])
-
-    def gen(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rgba_col, sha_col = [], []
-            for row in pdf.itertuples():
-                rgba = K.filter_values_transparency(window_2d(row), lo, hi)
-                buf = rgba.tobytes()
-                rgba_col.append(bytearray(buf))
-                sha_col.append(hashlib.sha256(buf).hexdigest())
-            pdf = pdf.copy()
-            pdf["window_rgba"] = rgba_col
-            pdf["rgba_sha256"] = sha_col
-            yield pdf
-
-    return windows.mapInPandas(gen, schema)
+    return _map_windows(windows, lambda row: _sha_bytes(
+        K.filter_values_transparency(window_2d(row), lo, hi)), _RGBA)
 
 
 def apply_circle_mask(windows: DataFrame) -> DataFrame:
     """P5: RGBA window with transparent pixels outside the inscribed circle
     (mask_utils.rs:22-60); output column ``window_rgba``."""
-    schema = StructType(windows.schema.fields + [
-        StructField("window_rgba", BinaryType()),
-        StructField("rgba_sha256", StringType())])
-
-    def gen(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rgba_col, sha_col = [], []
-            for row in pdf.itertuples():
-                rgba = K.apply_circle_mask_rgba(window_2d(row))
-                buf = rgba.tobytes()
-                rgba_col.append(bytearray(buf))
-                sha_col.append(hashlib.sha256(buf).hexdigest())
-            pdf = pdf.copy()
-            pdf["window_rgba"] = rgba_col
-            pdf["rgba_sha256"] = sha_col
-            yield pdf
-
-    return windows.mapInPandas(gen, schema)
+    return _map_windows(windows, lambda row: _sha_bytes(
+        K.apply_circle_mask_rgba(window_2d(row))), _RGBA)
 
 
 def apply_colormap_op(windows: DataFrame, colormaps: DataFrame,
@@ -214,7 +173,8 @@ def apply_colormap_op(windows: DataFrame, colormaps: DataFrame,
     """J3/W2: colormap render.  The colormap table is tiny → collected and
     closed over (the broadcast-dict flavor of a broadcast join); entries are
     pre-trimmed/deduped (A3/A4) and sorted, as the reference's loader does
-    (src/tiff/colormap.rs:185-189,293-322)."""
+    (src/tiff/colormap.rs:185-189,293-322).  RGB windows render from their
+    luma8, like every single-band post-op."""
     cm_pdf = colormaps.toPandas()  # eager: the colormaps are closed over
     cmaps = {}
     for cid, grp in cm_pdf.groupby("cmap_id"):
@@ -223,35 +183,18 @@ def apply_colormap_op(windows: DataFrame, colormaps: DataFrame,
             grp.value.to_numpy(), grp[["r", "g", "b"]].to_numpy())
         cmaps[cid] = (vals, rgb.astype(np.uint8), grp.map_type.iloc[0])
 
-    schema = StructType(windows.schema.fields + [
+    def fn(row):
+        arr = window_2d(row)
+        cmap = cmaps.get(getattr(row, cmap_col))  # NULL/NaN/unknown: gray
+        if cmap is None:
+            return _sha_bytes(np.repeat(arr[..., None], 3, axis=2))
+        vals, ergb, mtype = cmap
+        return _sha_bytes(
+            K.apply_colormap(arr.astype(np.uint16), vals, ergb, mtype))
+
+    return _map_windows(windows, fn, [
         StructField("window_rgb", BinaryType()),
         StructField("rgb_sha256", StringType())])
-
-    def gen(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rgb_col, sha_col = [], []
-            for row in pdf.itertuples():
-                cid = getattr(row, cmap_col)
-                arr = np.frombuffer(bytes(row.window), dtype=np.uint8) \
-                    .reshape(int(row.region_h), int(row.region_w))
-                if cid is None or (isinstance(cid, float) and pd.isna(cid)) \
-                        or cid not in cmaps:
-                    rgb = np.repeat(arr[..., None], 3, axis=2)  # gray→RGB
-                else:
-                    vals, ergb, mtype = cmaps[cid]
-                    rgb = K.apply_colormap(arr.astype(np.uint16), vals, ergb,
-                                           mtype)
-                buf = rgb.tobytes()
-                rgb_col.append(bytearray(buf))
-                sha_col.append(hashlib.sha256(buf).hexdigest())
-            pdf = pdf.copy()
-            pdf["window_rgb"] = rgb_col
-            pdf["rgb_sha256"] = sha_col
-            yield pdf
-
-    return windows.mapInPandas(gen, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -311,12 +254,16 @@ CHUNK_STATS_SCHEMA = StructType([
 def grayscale_minmax(tiles: DataFrame, catalog: DataFrame) -> DataFrame:
     """Full-image min/max (tiff_extraction_utils.rs:40-58) as a distributed
     partial+final aggregation: per-chunk numpy min/max (map side), then
-    F.min/F.max per raster (reduce side).  Valid-pixel subtlety: edge tiles
-    are zero-padded in storage, so per-chunk partials crop padding using the
-    image dims before reducing."""
-    meta = catalog.select("media_ref", "width", "height", "compression",
-                          "predictor", "tile_w", "tile_h", "rows_per_strip")
-    t = tiles.join(F.broadcast(meta), "media_ref")
+    F.min/F.max per raster (reduce side).  Each tile row reads its chunk
+    geometry at its own level (:func:`extract.level_geometry`).  Valid-pixel
+    subtlety: edge tiles are zero-padded in storage, so per-chunk partials
+    crop padding using the level's image dims before reducing.  RGB rasters
+    give the byte min/max over all samples (A2, as :func:`rgb_minmax`)."""
+    t = (tiles.join(F.broadcast(EX.raster_catalog(catalog)), "media_ref")
+         .withColumns(EX.level_geometry("level"))
+         .select("media_ref", "level", "tile_x", "tile_y", "blob",
+                 "compression", "predictor", "samples_per_pixel", "width",
+                 "height", "chunk_w", "chunk_h"))
 
     def gen(it):
         for pdf in it:
@@ -324,25 +271,21 @@ def grayscale_minmax(tiles: DataFrame, catalog: DataFrame) -> DataFrame:
                 continue
             rows = []
             for row in pdf.itertuples():
-                lvl = int(row.level)
-                w = int(row.width) >> lvl
-                h = int(row.height) >> lvl
-                cw = int(row.tile_w) or w
-                # NULL rps quirk defaults to the *level* image width
-                ch = int(row.tile_h) or (int(row.rows_per_strip) or w)
+                cw, ch = int(row.chunk_w), int(row.chunk_h)
+                spp = int(row.samples_per_pixel)
                 chunk = K.decode_chunk(bytes(row.blob), int(row.compression),
-                                       int(row.predictor), cw, ch)
-                avail = min(ch, len(chunk) // cw)
-                arr = chunk[: avail * cw].reshape(avail, cw)
+                                       int(row.predictor), cw, ch, spp)
+                avail = min(ch, len(chunk) // (cw * spp))
+                arr = chunk[: avail * cw * spp].reshape(avail, cw, spp)
                 # crop storage padding beyond image bounds
                 x0 = int(row.tile_x) * cw
                 y0 = int(row.tile_y) * ch
-                arr = arr[: max(0, min(h - y0, avail)),
-                          : max(0, min(w - x0, cw))]
+                arr = arr[: max(0, int(row.height) - y0),
+                          : max(0, int(row.width) - x0)]
                 if arr.size == 0:
                     continue
                 mn, mx = K.grayscale_stats(arr)
-                rows.append((row.media_ref, lvl, mn, mx))
+                rows.append((row.media_ref, int(row.level), mn, mx))
             if rows:
                 yield pd.DataFrame(rows, columns=["media_ref", "level",
                                                   "cmin", "cmax"])
@@ -357,6 +300,10 @@ def grayscale_minmax(tiles: DataFrame, catalog: DataFrame) -> DataFrame:
 # A5 — pyramid generation
 # ---------------------------------------------------------------------------
 
+#: the chunk geometry build_pyramid reads at its source and target levels
+_PYRAMID_GEOMETRY = ("width", "height", "chunk_w", "chunk_h")
+
+
 def build_pyramid(tiles: DataFrame, catalog: DataFrame,
                   source_level: int = 0) -> DataFrame:
     """Generate level ``source_level+1`` chunk rows by 2×2 box-reduction.
@@ -365,36 +312,36 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
     shuffle per level, :func:`extract.sorted_by_keys` on the parent key,
     then one streaming pass over its key runs), crops storage padding to
     the true image bounds, box-reduces (kernels.box_reduce_2x2 — floor
-    average, trailing odd row/col dropped), then re-encodes with the
-    raster's own predictor + compression so the output rows are
-    indistinguishable from stored overview tiles."""
-    meta = catalog.select("media_ref", "width", "height", "compression",
-                          "predictor", "tile_w", "tile_h", "rows_per_strip")
-    # chunk dims at source/target level (columns, so the parent-key mapping
-    # is correct even for the NULL-rps quirk where chunk height = level
-    # width and therefore differs between levels)
-    w_src_c = F.floor(F.col("width") / (1 << source_level)).cast("int")
-    cw_s_c = F.when(F.col("tile_w") > 0, F.col("tile_w")).otherwise(w_src_c)
-    ch_s_c = F.when(F.col("tile_h") > 0, F.col("tile_h")).otherwise(
-        F.when(F.col("rows_per_strip") > 0, F.col("rows_per_strip"))
-         .otherwise(w_src_c))
-    cw_t_c = F.when(F.col("tile_w") > 0, F.col("tile_w")).otherwise(
-        F.floor(w_src_c / 2).cast("int"))
-    ch_t_c = F.when(F.col("tile_h") > 0, F.col("tile_h")).otherwise(
-        F.when(F.col("rows_per_strip") > 0, F.col("rows_per_strip"))
-         .otherwise(F.floor(w_src_c / 2).cast("int")))
+    average per sample, trailing odd row/col dropped), then re-encodes
+    with the raster's own predictor + compression so the output rows are
+    indistinguishable from stored overview tiles.  Chunk geometry at both
+    levels is :func:`extract.level_geometry`'s; RGB rasters reduce per
+    sample."""
+    src_g = EX.level_geometry(str(source_level))
+    tgt_g = EX.level_geometry(str(source_level + 1))
+    geometry = {**{k + "_s": src_g[k] for k in _PYRAMID_GEOMETRY},
+                **{k + "_t": tgt_g[k] for k in _PYRAMID_GEOMETRY}}
+    # a raster with no pixels at the target level (the pyramid stops once a
+    # dim is < 2) has no parents; its 0-wide strips would divide by zero
+    meta = (EX.raster_catalog(catalog).withColumns(geometry)
+            .filter("width_t > 0 AND height_t > 0")
+            .select("media_ref", "compression", "predictor",
+                    "samples_per_pixel", "tile_w", *geometry))
+
     # a source chunk can straddle parent windows (e.g. NULL-rps strips of an
     # odd-width raster: ch_s=17 vs parent row window 2·ch_t=16) → explode it
     # over every parent it overlaps; the assemble-side clip intersects
-    # correctly regardless.
-    ptx0 = F.floor(F.col("tile_x") * cw_s_c / (cw_t_c * 2)).cast("int")
-    ptx1 = F.floor(((F.col("tile_x") + 1) * cw_s_c - 1) / (cw_t_c * 2)).cast("int")
-    pty0 = F.floor(F.col("tile_y") * ch_s_c / (ch_t_c * 2)).cast("int")
-    pty1 = F.floor(((F.col("tile_y") + 1) * ch_s_c - 1) / (ch_t_c * 2)).cast("int")
+    # correctly regardless.  SQL text, as extract.level_geometry explains
+    def parents_of(axis: str, dim: str) -> str:
+        cs, ct, t = f"chunk_{dim}_s", f"chunk_{dim}_t", f"tile_{axis}"
+        first = f"CAST(floor({t} * {cs} / ({ct} * 2)) AS INT)"
+        last = f"CAST(floor((({t} + 1) * {cs} - 1) / ({ct} * 2)) AS INT)"
+        return f"explode(sequence({first}, {last})) AS pt{axis}"
+
     src = (tiles.filter(F.col("level") == source_level)
            .join(F.broadcast(meta), "media_ref")
-           .withColumn("ptx", F.explode(F.sequence(ptx0, ptx1)))
-           .withColumn("pty", F.explode(F.sequence(pty0, pty1))))
+           .selectExpr("*", parents_of("x", "w"))
+           .selectExpr("*", parents_of("y", "h")))
 
     out_schema = StructType([
         StructField("media_ref", StringType()),
@@ -409,44 +356,37 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
 
     def assemble(rows: list) -> dict | None:
         first = rows[0]
-        lvl = source_level
-        w_src = int(first.width) >> lvl
-        h_src = int(first.height) >> lvl
-        # chunk layout at source and target levels (strips re-derive from
-        # the level width — reference quirk default rps = image width)
-        tiled = int(first.tile_w) > 0
-        if tiled:
-            cw_s = int(first.tile_w)
-            ch_s = int(first.tile_h)
-            cw_t, ch_t = cw_s, ch_s
-        else:
-            cw_s = w_src
-            ch_s = int(first.rows_per_strip) or w_src   # NULL rps quirk
-            cw_t = w_src // 2
-            ch_t = int(first.rows_per_strip) or (w_src // 2)
-        w_tgt, h_tgt = w_src // 2, h_src // 2
+        spp = int(first.samples_per_pixel)
+        cw_s, ch_s = int(first.chunk_w_s), int(first.chunk_h_s)
+        cw_t, ch_t = int(first.chunk_w_t), int(first.chunk_h_t)
         ptx, pty = int(first.ptx), int(first.pty)
+
+        def pixels(h: int, w: int) -> np.ndarray:
+            return np.zeros((h, w) if spp == 1 else (h, w, spp),
+                            dtype=np.uint8)
+
         # canvas over the source pixels feeding this parent chunk
-        canvas = np.zeros((2 * ch_t, 2 * cw_t), dtype=np.uint8)
+        canvas = pixels(2 * ch_t, 2 * cw_t)
         base_x, base_y = ptx * 2 * cw_t, pty * 2 * ch_t
         for row in rows:
             chunk = K.decode_chunk(bytes(row.blob), int(first.compression),
-                                   int(first.predictor), cw_s, ch_s)
+                                   int(first.predictor), cw_s, ch_s, spp)
             K.clip_chunk_into(canvas, chunk, cw_s, ch_s,
                               int(row.tile_x) * cw_s, int(row.tile_y) * ch_s,
-                              base_x, base_y, 2 * cw_t, 2 * ch_t)
+                              base_x, base_y, 2 * cw_t, 2 * ch_t, spp)
         # crop to true source extent (kills zero padding), then reduce
-        valid_w = max(0, min(2 * cw_t, w_src - base_x))
-        valid_h = max(0, min(2 * ch_t, h_src - base_y))
+        valid_w = max(0, min(2 * cw_t, int(first.width_s) - base_x))
+        valid_h = max(0, min(2 * ch_t, int(first.height_s) - base_y))
         reduced = K.box_reduce_2x2(canvas[:valid_h, :valid_w])
         # clip to target image dims
+        w_tgt = int(first.width_t)
         out_w = max(0, min(cw_t, w_tgt - ptx * cw_t))
-        out_h = max(0, min(ch_t, h_tgt - pty * ch_t))
+        out_h = max(0, min(ch_t, int(first.height_t) - pty * ch_t))
         if out_w == 0 or out_h == 0:
             return None
         reduced = reduced[:out_h, :out_w]
-        if tiled:  # tiles are stored full-size, zero-padded
-            store = np.zeros((ch_t, cw_t), dtype=np.uint8)
+        if int(first.tile_w) > 0:  # tiles are stored full-size, zero-padded
+            store = pixels(ch_t, cw_t)
             store[:out_h, :out_w] = reduced
             enc_h, enc_w = ch_t, cw_t
         else:
@@ -454,7 +394,8 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
             enc_h, enc_w = out_h, out_w
         flat = store.reshape(-1)
         if int(first.predictor) == K.PREDICTOR_HORIZONTAL:
-            flat = K.apply_horizontal_predictor_encode(flat, enc_w, enc_h)
+            flat = K.apply_horizontal_predictor_encode(flat, enc_w, enc_h,
+                                                       spp)
         blob = K.compress(bytes(flat), int(first.compression))
         across_t = (w_tgt + cw_t - 1) // cw_t
         return {
@@ -468,9 +409,7 @@ def build_pyramid(tiles: DataFrame, catalog: DataFrame,
         yield from EX.batched_frames(map(assemble, runs), "blob")
 
     keys = ["media_ref", "ptx", "pty"]
-    rows = src.select(*keys, "tile_x", "tile_y", "blob", "width", "height",
-                      "compression", "predictor", "tile_w", "tile_h",
-                      "rows_per_strip")
+    rows = src.select(*keys, "tile_x", "tile_y", "blob", *meta.columns[1:])
     return EX.sorted_by_keys(rows, keys).mapInPandas(parents, out_schema)
 
 

@@ -85,6 +85,42 @@ def _topk_ids(col: np.ndarray, ids: np.ndarray, kk: int) -> list:
     return sorted(idx, key=lambda i: (-col[i], ids[i]))[:kk]
 
 
+_PARTIAL_COLS = ["qid", "nbr_id", "cos_e6"]
+
+
+def _score_block(Q: np.ndarray, na: np.ndarray, qids: np.ndarray,
+                 V: np.ndarray, ids: np.ndarray, k: int) -> pd.DataFrame:
+    """Per-query partial top-k (qid, nbr_id, cos_e6) of one block of vectors
+    ``V`` (ids ``ids``) against the queries ``Q`` (norms ``na``), with
+    oracle-parity values: norms via sequential cumsum, dots via one matmul,
+    and any pair whose e6 value lands within 1e-5 of an integer (≫
+    matmul-vs-sequential ulp drift) re-scored with the exact sequential
+    expression the HOF/oracle computes.  Zero-norm vectors have no cosine
+    and are left out."""
+    V = V.astype(np.float64)
+    nb = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
+    if (nb == 0).any():
+        V, ids, nb = V[nb > 0], ids[nb > 0], nb[nb > 0]
+        if len(V) == 0:
+            return pd.DataFrame(columns=_PARTIAL_COLS)
+    e6 = (Q @ V.T) / (na[:, None] * nb[None, :]) * 1e6  # (nq, nv)
+    fr = np.abs(e6 - np.rint(e6))
+    qb, vb = np.nonzero(fr < 1e-5)  # boundary pairs → exact re-score
+    if len(qb):
+        dseq = np.cumsum(Q[qb] * V[vb], axis=1)[:, -1]
+        e6[qb, vb] = dseq / (na[qb] * nb[vb]) * 1e6
+    ce6 = np.floor(e6).astype(np.int64)
+    out_q, out_i, out_c = [], [], []
+    kk = min(k, ce6.shape[1])
+    for qi in range(ce6.shape[0]):
+        col = ce6[qi]
+        for i in _topk_ids(col, ids, kk):
+            out_q.append(qids[qi])
+            out_i.append(ids[i])
+            out_c.append(int(col[i]))
+    return pd.DataFrame({"qid": out_q, "nbr_id": out_i, "cos_e6": out_c})
+
+
 def cosine_topk_fast(embeddings: DataFrame, queries: DataFrame, k: int,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      qid_col: str = "qid",
@@ -161,13 +197,10 @@ def cosine_topk_exact(embeddings: DataFrame, queries: DataFrame, k: int,
     bit-for-bit, unlike :func:`cosine_topk_fast` (which normalizes first
     and may flip cos_e6 by one ulp near integer boundaries).
 
-    Parity recipe (same as ivf_topk's scorer): norms via sequential cumsum,
-    dots via one matmul per partition batch against the broadcast query
-    matrix, and any pair whose e6 value lands within 1e-5 of an integer
-    (≫ matmul-vs-sequential ulp drift) re-scored with the exact sequential
-    expression the HOF/oracle computes.  Partial top-k per batch, global
-    window merge — O(Q·N) by contract (the exact baseline; ivf_topk is the
-    scale path)."""
+    Each partition batch is one :func:`_score_block` (ivf_topk's scorer
+    too) against the broadcast query matrix: partial top-k per batch,
+    global window merge — O(Q·N) by contract (the exact baseline;
+    ivf_topk is the scale path)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..session import ensure_parallelism
@@ -191,30 +224,11 @@ def cosine_topk_exact(embeddings: DataFrame, queries: DataFrame, k: int,
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            ids = pdf["nbr_id"].to_numpy()
-            nb = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-            if (nb == 0).any():  # undefined cosine → excluded from top-k
-                V, ids, nb = V[nb > 0], ids[nb > 0], nb[nb > 0]
-                if len(V) == 0:
-                    continue
-            e6 = (Q @ V.T) / (na[:, None] * nb[None, :]) * 1e6  # (nq, nv)
-            fr = np.abs(e6 - np.rint(e6))
-            qb, vb = np.nonzero(fr < 1e-5)  # boundary → exact re-score
-            if len(qb):
-                dseq = np.cumsum(Q[qb] * V[vb], axis=1)[:, -1]
-                e6[qb, vb] = dseq / (na[qb] * nb[vb]) * 1e6
-            ce6 = np.floor(e6).astype(np.int64)
-            out_q, out_i, out_c = [], [], []
-            kk = min(k, ce6.shape[1])
-            for qi in range(ce6.shape[0]):
-                col = ce6[qi]
-                for i in _topk_ids(col, ids, kk):
-                    out_q.append(qids[qi])
-                    out_i.append(ids[i])
-                    out_c.append(int(col[i]))
-            yield pd.DataFrame(
-                {"qid": out_q, "nbr_id": out_i, "cos_e6": out_c})
+            out = _score_block(Q, na, qids,
+                               np.stack(pdf["v"].to_numpy()),
+                               pdf["nbr_id"].to_numpy(), k)
+            if len(out):
+                yield out
 
     e = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("nbr_id"),
@@ -383,38 +397,16 @@ def _score_lists_cogrouped(e: DataFrame, probes: DataFrame, k: int,
     ])
 
     def score_list(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cols = ["qid", "nbr_id", "cos_e6"]
         if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(columns=cols)
-        V = np.stack(left["v"].to_numpy()).astype(np.float64)
+            return pd.DataFrame(columns=_PARTIAL_COLS)
         Q = np.stack(right["qv"].to_numpy()).astype(np.float64)
-        ids = left["nbr_id"].to_numpy()
-        nb = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])  # oracle-parity norms
-        na = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
+        na = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])  # oracle-parity norms
         if (na == 0).any():
             raise ValueError("ivf_topk: zero-norm query vector — cosine "
                              "similarity is undefined for it")
-        if (nb == 0).any():  # undefined cosine → excluded from top-k
-            V, ids, nb = V[nb > 0], ids[nb > 0], nb[nb > 0]
-            if len(V) == 0:
-                return pd.DataFrame(columns=cols)
-        e6 = (Q @ V.T) / (na[:, None] * nb[None, :]) * 1e6  # (nq, nv)
-        fr = np.abs(e6 - np.rint(e6))
-        qb, vb = np.nonzero(fr < 1e-5)  # boundary pairs → exact re-score
-        if len(qb):
-            dseq = np.cumsum(Q[qb] * V[vb], axis=1)[:, -1]
-            e6[qb, vb] = dseq / (na[qb] * nb[vb]) * 1e6
-        ce6 = np.floor(e6).astype(np.int64)
-        qids = right["qid"].to_numpy()
-        out_q, out_i, out_c = [], [], []
-        kk = min(k, ce6.shape[1])
-        for qi in range(ce6.shape[0]):
-            col = ce6[qi]
-            for i in _topk_ids(col, ids, kk):
-                out_q.append(qids[qi])
-                out_i.append(ids[i])
-                out_c.append(int(col[i]))
-        return pd.DataFrame({"qid": out_q, "nbr_id": out_i, "cos_e6": out_c})
+        return _score_block(Q, na, right["qid"].to_numpy(),
+                            np.stack(left["v"].to_numpy()),
+                            left["nbr_id"].to_numpy(), k)
 
     partials = (e.groupBy("list_id")
                 .cogroup(probes.groupBy("list_id"))

@@ -94,6 +94,19 @@ def test_build_pyramid_two_levels(env):
         assert want == have
 
 
+def test_build_pyramid_stops_below_one_pixel(env):
+    """Levels past a raster's last (1-pixel) overview yield no rows for it:
+    a 0-pixel-wide strip level used to divide by zero in the parent key."""
+    c, sdfs = env
+    got = api.build_pyramid(sdfs["tiles"], sdfs["media_catalog"], levels=7) \
+        .groupBy("media_ref").agg(F.max("level").alias("top")).toPandas()
+    cat = c.media_catalog.set_index("media_ref")
+    for r in got.itertuples():
+        w, h = cat.loc[r.media_ref, ["width", "height"]]
+        assert (int(w) >> r.top) >= 1 and (int(h) >> r.top) >= 1, r
+        assert (int(w) >> (r.top + 1)) == 0 or (int(h) >> (r.top + 1)) == 0, r
+
+
 def test_spatial_facade(env):
     import pandas as pd
     c, sdfs = env

@@ -141,12 +141,14 @@ def test_render_windows_distributed(spark):
 def test_reproject_metadata_and_lod(spark):
     from pyspark.sql import functions as F
     from rasterkit_spark.fixtures import corpus as CP
+    from rasterkit_spark.operators import extract as EX
     c = CP.build_corpus(n_media=6, n_docs=5, n_queries=5)
     cat = spark.createDataFrame(c.media_catalog)
     re = CIO.reproject_metadata(cat, 3857).toPandas()
     assert (re.epsg == 3857).all()
     assert "source_epsg" in re.columns
-    lvl = cat.select(CIO.select_level(cat, F.lit(1000.0)).alias("lvl")).toPandas()
+    lvl = cat.select(EX.select_level(F.col("pixel_sx"), F.lit(1000.0))
+                     .alias("lvl")).toPandas()
     assert lvl.lvl.between(0, 2).all()
 
 

@@ -4,6 +4,8 @@ pip_join and shared_span_pairs.  Each call is counted under a job group
 of the returned DataFrame is censused for shuffle Exchanges,
 BroadcastExchanges, MapInPandas nodes and Python-UDF nodes."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -71,24 +73,32 @@ def test_knn_join_plan_and_job_budget(spark, fixture):
 
 
 # measured on the fixture below: the call is lazy; the collect runs the
-# polygon-side broadcast and the dedup's shuffle.  Python-UDF nodes: the
-# refinement MapInPandas and the WKT-parse Arrow UDF, evaluated once (the
-# parent evaluated it twice: 3 nodes)
-PIP_BUDGET = ((0, 2), (1, 1, 1), 2)
+# polygon-side broadcast, the dedup's shuffle and, once pairs survive the
+# refinement, the result stage after that shuffle (world-uniform points
+# joined none, and AQE skipped it: 2 collect jobs).  Python-UDF nodes: the refinement MapInPandas and
+# the WKT-parse Arrow UDF, evaluated once (evaluated twice it was 3 nodes)
+PIP_BUDGET = ((0, 3), (1, 1, 1), 2)
 
 
 def test_pip_join_plan_and_job_budget(spark):
+    """2,000 points drawn inside the 8 corpus zones' bboxes, so the
+    refinement emits rows (world-uniform points joined none)."""
     c = CP.build_corpus(n_media=6, n_docs=20, n_queries=6)
     rng = np.random.default_rng(5)
-    pts = rng.uniform([-180, -80], [180, 80], size=(2000, 2))
+    pts = []
+    for wkt in c.zones.polygon_wkt:
+        xy = np.array(re.findall(r"-?[\d.]+", wkt), float).reshape(-1, 2)
+        pts.append(rng.uniform(xy.min(0), xy.max(0), size=(250, 2)))
+    pts = np.vstack(pts)
     points = spark.createDataFrame(pd.DataFrame({
         "id": [f"p{i}" for i in range(len(pts))],
         "lon": pts[:, 0], "lat": pts[:, 1]}))
     zones = spark.createDataFrame(c.zones)
-    jobs, plan_census, udf_nodes, _, arrow_udfs = _budget(
+    jobs, plan_census, udf_nodes, rows, arrow_udfs = _budget(
         spark, "pip", lambda: SP.pip_join(
             points, zones, "id", "lon", "lat", "zone_id", "polygon_wkt",
             res=8))
+    assert rows, "no point joined a zone"
     assert arrow_udfs == ["wkt_coords_udf"], arrow_udfs
     assert (jobs, plan_census, udf_nodes) == PIP_BUDGET, \
         f"pip_join: {jobs}, {plan_census}, {udf_nodes}"

@@ -14,10 +14,14 @@ from rasterkit_spark.fixtures import corpus as CP
 
 # measured on this fixture before the worker archive pin (which must not
 # move them): (call jobs, collect jobs) and (shuffle Exchanges,
-# BroadcastExchanges, MapInPandas nodes) of the executed plan
+# BroadcastExchanges, MapInPandas nodes) of the executed plan.  A
+# three-level pyramid materializes levels 1 and 2 in the call (3 jobs
+# each) and leaves one level's reduce in the plan; when every level's plan
+# held the levels under it, it ran (0, 15) jobs over 7 box-reduce nodes
 BUDGETS = {
     "extract": {"jobs": (0, 4), "census": (1, 2, 1)},
     "pyramid": {"jobs": (0, 3), "census": (1, 1, 1)},
+    "pyramid3": {"jobs": (6, 3), "census": (1, 1, 1)},
 }
 
 
@@ -41,6 +45,8 @@ CALLS = {
                                       sd["tiles"]),
     "pyramid": lambda sd: api.build_pyramid(sd["pyramid_tiles"],
                                             sd["media_catalog"], levels=1),
+    "pyramid3": lambda sd: api.build_pyramid(sd["pyramid_tiles"],
+                                             sd["media_catalog"], levels=3),
 }
 
 

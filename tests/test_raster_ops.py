@@ -101,7 +101,19 @@ def test_unsupported_compression_rejected(spark, sdfs):
         RO.convert_compression(sdfs["tiles"], sdfs["media_catalog"], 5)  # LZW
 
 
-def test_grayscale_minmax_matches_groundtruth(spark, corpus, sdfs):
+@pytest.fixture(scope="module")
+def rgb_corpus():
+    """Every third raster 3-sample RGB."""
+    return CP.build_corpus(n_media=8, n_docs=10, n_queries=10, rgb_every=3)
+
+
+@pytest.fixture(scope="module")
+def rgb_sdfs(spark, rgb_corpus):
+    return rgb_corpus.to_spark(spark, ["queries_bbox", "media_catalog",
+                                       "tiles"])
+
+
+def _check_minmax(corpus, sdfs):
     got = RO.grayscale_minmax(sdfs["tiles"], sdfs["media_catalog"]) \
         .toPandas().set_index(["media_ref", "level"])
     for ref, levels in corpus.pixels.items():
@@ -111,7 +123,18 @@ def test_grayscale_minmax_matches_groundtruth(spark, corpus, sdfs):
             assert got.loc[(ref, lvl), "max_sample_value"] == mx, (ref, lvl)
 
 
-def test_build_pyramid_matches_fixture_overviews(spark, corpus, sdfs):
+def test_grayscale_minmax_matches_groundtruth(spark, corpus, sdfs):
+    _check_minmax(corpus, sdfs)
+
+
+def test_grayscale_minmax_matches_groundtruth_rgb(spark, rgb_corpus,
+                                                  rgb_sdfs):
+    """RGB rasters: the byte min/max over all samples (A2) at every level."""
+    assert (rgb_corpus.media_catalog.samples_per_pixel == 3).any()
+    _check_minmax(rgb_corpus, rgb_sdfs)
+
+
+def _check_pyramid(corpus, sdfs):
     """Generated level-1 rows must decode to the fixture's level-1 pixels
     (which were produced by box-reducing the full image)."""
     gen = RO.build_pyramid(sdfs["tiles"], sdfs["media_catalog"], 0).toPandas()
@@ -125,6 +148,19 @@ def test_build_pyramid_matches_fixture_overviews(spark, corpus, sdfs):
         want = K.decompress(bytes(o.blob), int(c.compression))
         have = K.decompress(bytes(row.blob), int(c.compression))
         assert want == have, (row.media_ref, row.tile_x, row.tile_y)
+    return gen
+
+
+def test_build_pyramid_matches_fixture_overviews(spark, corpus, sdfs):
+    _check_pyramid(corpus, sdfs)
+
+
+def test_build_pyramid_matches_fixture_overviews_rgb(spark, rgb_corpus,
+                                                     rgb_sdfs):
+    """RGB rasters reduce per sample and re-encode 3-sample chunks."""
+    gen = _check_pyramid(rgb_corpus, rgb_sdfs)
+    cat = rgb_corpus.media_catalog.set_index("media_ref")
+    assert (cat.loc[gen.media_ref, "samples_per_pixel"] == 3).any()
 
 
 def test_analyze(spark, sdfs):
@@ -199,19 +235,13 @@ def test_write_windows_geotiff_executor_side(spark, tmp_path):
     assert TC.epsg_from_geo_keys(TC.parse_geo_key_directory(ifd2)) == 4326
 
 
-def test_single_band_post_ops_luma_collapse_rgb(spark):
-    """apply_filter / transparency / circle mask / render_windows on RGB
-    windows must luma-collapse (the reference grayscales before every
-    single-band post-op) — a plain reshape(h, w) on the 3-sample buffer
-    used to crash the stage."""
-    import numpy as np
-    from rasterkit_spark import kernels as K
-    from rasterkit_spark.operators import raster_ops as RO
+def test_single_band_post_ops_luma_collapse_rgb(spark, rgb_sdfs):
+    """apply_filter / transparency / circle mask / colormap / render_windows
+    on RGB windows must luma-collapse (the reference grayscales before
+    every single-band post-op) — a plain reshape(h, w) on the 3-sample
+    buffer used to crash the stage."""
     from rasterkit_spark.operators import sinks as SK
-    from rasterkit_spark.fixtures import corpus as CP
-    from rasterkit_spark.operators import extract as EX
-    c = CP.build_corpus(n_media=8, n_docs=10, n_queries=10, rgb_every=3)
-    sd = c.to_spark(spark, ["queries_bbox", "media_catalog", "tiles"])
+    sd = rgb_sdfs
     w = EX.extract(sd["queries_bbox"], sd["media_catalog"], sd["tiles"])
     assert w.filter("samples_per_pixel = 3").count() > 0
     filt = RO.apply_filter(w, 10, 200).toPandas()
@@ -220,8 +250,20 @@ def test_single_band_post_ops_luma_collapse_rgb(spark):
     RO.apply_circle_mask(w).toPandas()
     rendered = SK.render_windows(w, "npy").toPandas()
     assert len(rendered) == len(filt)
-    # parity: filter(RGB window) == filter(luma(RGB window))
-    luma_first = RO.apply_filter(RO.to_luma_op(w), 10, 200).toPandas()
-    a = filt.set_index(["query_id", "media_ref"]).filtered_sha256
-    b = luma_first.set_index(["query_id", "media_ref"]).filtered_sha256
+    key = ["query_id", "media_ref"]
+    # parity: op(RGB window) == op(luma(RGB window))
+    luma = RO.to_luma_op(w)
+    luma_first = RO.apply_filter(luma, 10, 200).toPandas()
+    a = filt.set_index(key).filtered_sha256
+    b = luma_first.set_index(key).filtered_sha256
+    assert a.sort_index().equals(b.sort_index())
+    cmaps = spark.createDataFrame(pd.DataFrame({
+        "cmap_id": "c", "map_type": "ramp", "value": [0, 128, 255],
+        "r": [0, 255, 10], "g": [0, 0, 200], "b": [255, 0, 30]}))
+    rgb = RO.apply_colormap_op(w.withColumn("cmap_id", F.lit("c")), cmaps)
+    gray = RO.apply_colormap_op(luma.withColumn("cmap_id", F.lit("c")),
+                                cmaps)
+    a = rgb.toPandas().set_index(key).rgb_sha256
+    b = gray.toPandas().set_index(key).rgb_sha256
+    assert len(a) == len(filt)
     assert a.sort_index().equals(b.sort_index())
