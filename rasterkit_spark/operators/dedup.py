@@ -54,6 +54,10 @@ SPANS_BROADCAST_BYTES = 192_000_000
 #: ~16 MB of Arrow on the driver.
 CC_DRIVER_EDGE_CAP = 1_000_000
 
+#: star rounds after which connected_components gives up: for n nodes
+#: log₂²(n) rounds suffice, so 25 covers any physically storable graph
+CC_MAX_ROUNDS = 25
+
 
 def md5_int(c: Column) -> Column:
     """Portable 60-bit int from md5 (first 15 hex digits).  DuckDB replay:
@@ -208,7 +212,7 @@ def _driver_components(e: DataFrame) -> DataFrame:
 
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 25) -> DataFrame:
+                         dst: str = "id_b") -> DataFrame:
     """Connected components of an undirected dup-pair graph →
     (node, component) with component = min node id of the component.
 
@@ -242,8 +246,7 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     edge sets and would break silently).  The check runs on round outputs
     only, never on the entry edge set: that set is not oriented u > v, and
     a lone edge (6, 7) passes the predicate there and would be labelled 7.
-    Raises after ``max_iter`` rounds — for n nodes log₂²(n) rounds
-    suffice, so 25 covers any physically storable graph.
+    Raises after ``CC_MAX_ROUNDS`` rounds.
 
     Ids keep their NATIVE type (long, string, …) in both arms — the
     algorithm only needs the column's total order, and a silent cast
@@ -261,14 +264,14 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     # un-materialized previous round would re-execute several times
     # inside the next one — batching two rounds per checkpoint was tried
     # round 6 and measured SLOWER for exactly that reason
-    for rnd in range(max_iter + 1):
+    for rnd in range(CC_MAX_ROUNDS + 1):
         if driver_ok and m["n"] <= CC_DRIVER_EDGE_CAP:
             return _driver_components(e)
         if rnd and _is_min_star_forest(e):
             break
-        if rnd == max_iter:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds")
+        if rnd == CC_MAX_ROUNDS:
+            raise RuntimeError(f"connected_components did not converge in "
+                               f"{CC_MAX_ROUNDS} rounds")
         e, m = materialize(_small_star(_large_star(e)), n=F.count(F.lit(1)))
     # converged star forest: every edge is (member, component-min)
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component"))

@@ -1,29 +1,34 @@
 """Flagship extraction pipeline (SURVEY.md §3.1 / §7 Phase 1).
 
-Distributed re-expression of the reference's
+Distributed re-expression of the reference's window reads: the
 ``rasterkit input.tif --extract --bbox=… --crs=…`` path
 (src/commands/extract_command.rs:251-291 → src/extractor/tile_reader.rs /
-strip_reader.rs → src/tiff/builders/geo_tags.rs:114-201):
+strip_reader.rs → src/tiff/builders/geo_tags.rs:114-201), the explicit
+``--region=x,y,WxH`` path and the overview (LOD) read.  Three entry points
+— :func:`extract` (bbox at one level), :func:`extract_auto_level`
+(per-query level) and :func:`extract_pixel_region` — share one front end
+and one back end:
 
-1. **Region resolution** — pure Column expressions
+1. **One catalog at a level** — :func:`raster_catalog` at a level given as
+   SQL (a literal, or an ``explode`` over several), each row carrying its
+   ``level`` and that level's geotransform, dims and chunk geometry
+   (:func:`level_geometry`), broadcast-joined to the queries.
+2. **One region join** — :func:`resolve_regions`: pure Column expressions
    (:func:`rasterkit_spark.functions.geo.region_dispatch_stages`, applied
    as successive narrow projections), whole-stage codegen, no Python.
-2. **Tile-key expansion** — each query row explodes into the covered
-   ``(media_ref, level, tile_x, tile_y)`` keys (J1/J2; strips are tiles with
-   tile_w = image width, so one code path covers both layouts).
-3. **Tile join** — equi-join against the tile table.  The query side is
-   usually tiny → broadcast; at corpus scale both sides are bucketed by
-   media_ref (AQE handles residual skew; hot refs can additionally be
-   salted — see operators/spatial.py).
-4. **Decode + clip + reassemble** — the matched rows are hash-partitioned
-   by ``(query_id, media_ref)`` into one partition per core, sorted within
-   each partition, and streamed through one ``mapInPandas`` pass that
-   assembles each run of equal keys with the *same* numpy kernels the
-   oracle uses (C1/C2 → W1 → P1), emitting the clipped window bytes, its
-   sha256, and the adjusted geotransform (G9) in batched frames.
+   Explicit pixel regions are validated instead of resolved.
+3. **One window back end** — :func:`_windows`: each region row explodes
+   into its covered ``(media_ref, level, tile_x, tile_y)`` keys (J1/J2;
+   strips are tiles with tile_w = image width, so one code path covers
+   both layouts), meets its blobs (broadcast key join, or a python-side
+   tile map), and the rows are hash-partitioned by ``(query_id,
+   media_ref)``, one partition per core, sorted, and streamed through one
+   ``mapInPandas`` pass that assembles each run with the *same* numpy
+   kernels the oracle uses (C1/C2 → W1 → P1), emitting the clipped window
+   bytes, its sha256, its ``level`` and the adjusted geotransform (G9).
 
-Two shuffles total: the tile join (skippable via broadcast) and the
-assembly exchange.  Everything else is narrow.
+One shuffle, the assembly exchange; everything else is narrow or
+broadcast.
 """
 
 from __future__ import annotations
@@ -45,6 +50,7 @@ from ..functions import geo
 WINDOW_SCHEMA = StructType([
     StructField("query_id", StringType()),
     StructField("media_ref", StringType()),
+    StructField("level", LongType()),
     StructField("region_x", LongType()),
     StructField("region_y", LongType()),
     StructField("region_w", LongType()),
@@ -92,19 +98,25 @@ def level_geometry(level: str) -> dict[str, Column]:
     }.items()}
 
 
-def raster_catalog(catalog: DataFrame) -> DataFrame:
-    """The raster rows of ``catalog`` with the columns chunk reads need,
-    at level 0 (``samples_per_pixel`` defaults to 1)."""
+def raster_catalog(catalog: DataFrame, level: str | None = None) -> DataFrame:
+    """The raster rows of ``catalog`` with the columns chunk reads need
+    (``samples_per_pixel`` defaults to 1).
+
+    With ``level``, a SQL expression (an integer literal for one level,
+    ``explode(sequence(0, N))`` for one row per level), every row also
+    carries ``level``, ``pixel_s0`` (the base pixel size
+    :func:`select_level` compares against) and its
+    :func:`level_geometry`.  Without, the rows are at level 0 as stored."""
     spp = (F.col("samples_per_pixel") if "samples_per_pixel"
            in catalog.columns else F.lit(1)).alias("samples_per_pixel")
-    return catalog.filter(F.col("media_kind") == "raster").select(
+    cat = catalog.filter(F.col("media_kind") == "raster").select(
         "media_ref", "width", "height", "tile_w", "tile_h", "rows_per_strip",
         "epsg", "pixel_sx", "pixel_sy", "origin_x", "origin_y",
         "compression", "predictor", spp)
-
-
-def _catalog_select(catalog: DataFrame) -> DataFrame:
-    return raster_catalog(catalog).withColumns(level_geometry("0"))
+    if level is None:
+        return cat
+    return cat.selectExpr("*", "pixel_sx AS pixel_s0", f"{level} AS level") \
+        .withColumns(level_geometry("level"))
 
 
 #: (SparkContext, {has_radius: stages}) — the region Column lists are
@@ -133,32 +145,28 @@ def _region_stages(has_radius: bool) -> list[list]:
     return cache[has_radius]
 
 
-def _resolve_regions_joined(q: DataFrame, has_radius: bool) -> DataFrame:
-    """Region + adjusted-tiepoint columns over an already query×catalog
-    joined frame (the geotransform columns may be level-scaled;
-    pixel_h = -pixel_sy, G8)."""
-    for stage in _region_stages(has_radius):
-        q = q.select("*", *stage)
-    return q.drop(*geo.REGION_STAGE_COLS)
-
-
-def resolve_regions(queries: DataFrame, catalog: DataFrame) -> DataFrame:
-    """Join bbox queries to the raster catalog and compute pixel regions.
+def resolve_regions(queries: DataFrame, catalog: DataFrame,
+                    level: int | str = 0) -> DataFrame:
+    """Join bbox queries to the raster catalog at ``level`` (see
+    :func:`raster_catalog`) and compute pixel regions against each row's
+    level-scaled geotransform and dims (pixel_h = -pixel_sy, G8).
 
     The catalog is metadata-only (no blobs) → broadcast-join.
     ``queries`` needs columns: query_id, media_ref, minx/miny/maxx/maxy,
     crs, radius_m (nullable).
     """
-    cat = _catalog_select(catalog)
+    cat = raster_catalog(catalog, str(level))
     q = queries.join(F.broadcast(cat), "media_ref", "inner")
-    return _resolve_regions_joined(q, "radius_m" in queries.columns)
+    for stage in _region_stages("radius_m" in queries.columns):
+        q = q.select("*", *stage)
+    return q.drop(*geo.REGION_STAGE_COLS)
 
 
 #: tile identity: one chunk of one raster at one overview level
 TILE_KEY = ["media_ref", "level", "tile_x", "tile_y"]
 
 
-def expand_tile_keys(regions: DataFrame, level: int = 0) -> DataFrame:
+def expand_tile_keys(regions: DataFrame) -> DataFrame:
     """J1/J2 key expansion: one row per covered chunk.
 
     The explode is bounded by (w/chunk+2)·(h/chunk+2) per query — narrow,
@@ -174,8 +182,6 @@ def expand_tile_keys(regions: DataFrame, level: int = 0) -> DataFrame:
         F.sequence(F.col("start_tile_y"), F.col("end_tile_y") - 1)))
     r = r.withColumn("tile_x", F.explode(
         F.sequence(F.col("start_tile_x"), F.col("end_tile_x") - 1)))
-    if "level" not in regions.columns:  # per-row levels (LOD) pass through
-        r = r.withColumn("level", F.lit(level))
     return r.drop("start_tile_x", "start_tile_y", "end_tile_x", "end_tile_y")
 
 
@@ -356,6 +362,7 @@ def _assemble_window(rows: list, emit_window: bool, tile_map: dict | None,
     return {
         "query_id": first.query_id,
         "media_ref": first.media_ref,
+        "level": int(first.level),
         "region_x": rx, "region_y": ry, "region_w": rw, "region_h": rh,
         "window": bytearray(buf) if emit_window else None,
         "window_sha256": hashlib.sha256(buf).hexdigest(),
@@ -379,15 +386,6 @@ def _assemble_stream(pdf_iter, emit_window: bool = True,
     yield from batched_frames(
         (_assemble_window(rows, emit_window, tile_map, memo)
          for rows in key_runs(pdf_iter, _WINDOW_KEY)), "window")
-
-
-def decode_and_clip(joined: DataFrame, emit_window: bool = True) -> DataFrame:
-    """Reassemble the matched chunks into clipped windows: one exchange of
-    the matched rows (:func:`sorted_by_keys` on (query_id, media_ref)),
-    then one streaming ``mapInPandas`` pass (:func:`_assemble_stream`)."""
-    rows = sorted_by_keys(joined.select(*_ASSEMBLE_COLS, "blob"), _WINDOW_KEY)
-    return rows.mapInPandas(lambda it: _assemble_stream(it, emit_window),
-                            WINDOW_SCHEMA)
 
 
 #: blob-bytes ceiling for the python-side tile broadcast; above it the
@@ -422,61 +420,51 @@ def tile_map_broadcast(tiles: DataFrame):
           int(r["tile_y"])): bytes(r["blob"]) for r in t_rows})
 
 
+def _windows(regions: DataFrame, tiles: DataFrame, emit_window: bool = True,
+             broadcast_tiles: bool = False) -> DataFrame:
+    """The one window back end: region rows → covered tile keys → one
+    exchange of the rows by (query_id, media_ref)
+    (:func:`sorted_by_keys`) → one streaming assembly
+    (:func:`_assemble_stream`).  The arms differ in where blobs meet keys:
+
+    - default: the key rows broadcast and the big tile table streams
+      (:func:`join_tiles`); the matched blobs shuffle into the assembly —
+      the 100-TB regime, where tiles dwarf every other side;
+    - ``broadcast_tiles=True``: only the key rows shuffle, and assembly
+      looks the blobs up in a python-side broadcast of the tile table
+      (:func:`tile_map_broadcast`; over its ceiling the default runs) —
+      the blob shuffle is the non-scaling term when queries ≫ catalog."""
+    keys = expand_tile_keys(regions)
+    bc = tile_map_broadcast(tiles) if broadcast_tiles else None
+    if bc is None:
+        rows = join_tiles(keys, tiles).select(*_ASSEMBLE_COLS, "blob")
+    else:
+        rows = keys.select(*_ASSEMBLE_COLS)
+    return sorted_by_keys(rows, _WINDOW_KEY).mapInPandas(
+        lambda it: _assemble_stream(it, emit_window,
+                                    None if bc is None else bc.value),
+        WINDOW_SCHEMA)
+
+
 def extract(queries: DataFrame, catalog: DataFrame, tiles: DataFrame,
             level: int = 0, broadcast_tiles: bool = False,
             emit_window: bool = True) -> DataFrame:
     """End-to-end flagship extraction: bbox queries → clipped windows +
-    adjusted geotransform.  See module docstring for the physical plan.
+    adjusted geotransform at overview ``level``, through the one region
+    join (:func:`resolve_regions`) and the one window back end
+    (:func:`_windows`, whose arm ``broadcast_tiles`` picks).
 
-    Two physical strategies, picked by which side is small:
-
-    - default: broadcast the expanded query keys, stream the big tile
-      table, then ONE shuffle of the matched blobs into the sorted
-      per-(query, media) assembly — the 100-TB regime, where tiles dwarf
-      every other side.
-    - ``broadcast_tiles=True``: broadcast the tile table and keep the
-      blobs where the query keys already live — the matched blobs NEVER
-      shuffle (the group shuffle of decoded-size payloads is the
-      non-scaling term when queries ≫ catalog).  Only the key rows (tiny)
-      are repartitioned and sorted, and assembly looks the blobs up from
-      a python-side broadcast of the tile table
-      (:func:`tile_map_broadcast`; over its ceiling the default runs).
-
-    ``level`` selects an overview: regions resolve against the LEVEL's
-    geotransform/dims/chunk geometry (half-size per level), matching a
-    direct read of that overview IFD — resolving against the base level
-    and only stamping the key would put level-0 pixel regions onto the
-    half-size grid, silently extracting the wrong window.  A raster whose
-    pyramid is shallower than ``level`` joins zero tiles and is absent
-    from the output (use :func:`extract_auto_level` for per-query levels
-    with deepest-available fallback).
+    Regions resolve against the LEVEL's geotransform/dims/chunk geometry
+    (half-size per level), matching a direct read of that overview IFD —
+    resolving against the base level and only stamping the key would put
+    level-0 pixel regions onto the half-size grid, silently extracting the
+    wrong window.  A raster whose pyramid is shallower than ``level``
+    joins zero tiles and is absent from the output (use
+    :func:`extract_auto_level` for per-query levels with deepest-available
+    fallback).
     """
-    if level > 0:
-        cat = catalog_at_levels(catalog, level) \
-            .filter(F.col("level") == level)
-        q = queries.join(F.broadcast(cat), "media_ref", "inner")
-        regions = _resolve_regions_joined(q, "radius_m" in queries.columns)
-    else:
-        regions = resolve_regions(queries, catalog)
-    keys = expand_tile_keys(regions, level=level)
-    bc = tile_map_broadcast(tiles) if broadcast_tiles else None
-    if bc is not None:
-        # key rows only (no blobs): partitioned like decode_and_clip
-        k = sorted_by_keys(keys.select(*_ASSEMBLE_COLS), _WINDOW_KEY)
-        return k.mapInPandas(
-            lambda it: _assemble_stream(it, emit_window, bc.value),
-            WINDOW_SCHEMA)
-    return decode_and_clip(join_tiles(keys, tiles), emit_window)
-
-
-def catalog_at_levels(catalog: DataFrame, max_level: int) -> DataFrame:
-    """Raster catalog × overview levels 0..max_level, each row at its
-    level's :func:`level_geometry`.  Adds ``level`` and keeps ``pixel_s0``
-    (the base resolution :func:`select_level` compares against)."""
-    c = raster_catalog(catalog).selectExpr(
-        "*", "pixel_sx AS pixel_s0",
-        f"explode(sequence(0, {int(max_level)})) AS level")
-    return c.withColumns(level_geometry("level"))
+    return _windows(resolve_regions(queries, catalog, level), tiles,
+                    emit_window, broadcast_tiles)
 
 
 def select_level(pixel_s: Column, target_resolution: Column,
@@ -499,11 +487,12 @@ def extract_auto_level(queries: DataFrame, catalog: DataFrame,
     into the flagship pipeline): each query carries a target resolution
     (map units per output pixel); the overview whose effective pixel size
     best reaches it — level = clamp(floor(log2(target/pixel_s0)), 0,
-    max_level) — serves the window, at that level's geotransform.
+    max_level) — serves the window, at that level's geotransform.  Each
+    window's ``level`` column says which.
 
-    One plan, no per-level driver loop: queries join the level-expanded
-    catalog, keep their selected level's row, and flow through the same
-    region→keys→join→decode pipeline with per-row levels.
+    One plan, no per-level driver loop: queries join the catalog at every
+    level 0..max_level (:func:`resolve_regions`), keep their selected
+    level's row, and flow through the same window back end.
 
     The chosen level is additionally clamped to the deepest level that
     actually HAS tiles for that raster (pyramids stop once dims < 2, so a
@@ -513,73 +502,54 @@ def extract_auto_level(queries: DataFrame, catalog: DataFrame,
     The per-media max level comes from one column-pruned aggregate over
     the tile table ((media_ref, level) only — no blobs are read).
     """
-    cat = catalog_at_levels(catalog, max_level)
     max_lvl = tiles.groupBy("media_ref").agg(
         F.max("level").alias("_max_tile_level"))
-    q = (queries.join(F.broadcast(cat), "media_ref", "inner")
-         .join(F.broadcast(max_lvl), "media_ref", "inner"))
+    regions = resolve_regions(
+        queries, catalog, f"explode(sequence(0, {int(max_level)}))")
     want = F.least(
         select_level(F.col("pixel_s0"), F.col(target_col), max_level),
         F.col("_max_tile_level"))
-    q = q.filter(F.col("level") == want).drop("_max_tile_level")
-    regions = _resolve_regions_joined(q, "radius_m" in queries.columns)
-    keys = expand_tile_keys(regions)
-    joined = join_tiles(keys, tiles)
-    out = decode_and_clip(joined, emit_window)
-    lv = regions.select("query_id", "media_ref", "level")
-    return out.join(lv, ["query_id", "media_ref"])
+    regions = regions.join(F.broadcast(max_lvl), "media_ref", "inner") \
+        .filter(F.col("level") == want)
+    return _windows(regions, tiles, emit_window)
 
 
 def extract_pixel_region(queries: DataFrame, catalog: DataFrame,
-                         tiles: DataFrame, level: int = 0,
-                         strict: bool = True) -> DataFrame:
+                         tiles: DataFrame) -> DataFrame:
     """Explicit pixel-region extraction — the reference's ``--region=x,y,WxH``
     path (P2, ``determine_extraction_region``,
     src/utils/tiff_extraction_utils.rs:268-293).
 
     ``queries`` rows carry (query_id, media_ref, region_x, region_y,
-    region_w, region_h).  Validation follows the reference exactly: a
-    region whose end exceeds the image dimensions is a HARD error (the
-    reference fails the whole command; ``strict=True`` raises with the
-    offending rows).  ``strict=False`` drops invalid rows instead —
-    the forgiving mode for corpus-scale batch runs.  Negative origins
-    are rejected too (the reference's Region fields are u32 — the type
-    system enforces what we must check).
+    region_w, region_h), in level-0 pixels.  Validation follows the
+    reference exactly: a region whose end exceeds the image dimensions is
+    a HARD error — the reference fails the whole command, and this raises
+    with the offending rows before any tile is read.  Negative origins are
+    rejected too (the reference's Region fields are u32 — the type system
+    enforces what we must check).
     """
-    if level > 0:
-        # regions are in the overview's pixel grid — validate and clip
-        # against the LEVEL dims/chunks (see extract() docstring)
-        cat = catalog_at_levels(catalog, level) \
-            .filter(F.col("level") == level)
-    else:
-        cat = _catalog_select(catalog)
-    q = queries.join(F.broadcast(cat), "media_ref", "inner")
+    q = queries.join(F.broadcast(raster_catalog(catalog, "0")), "media_ref",
+                     "inner")
     bad = ((F.col("region_x") < 0) | (F.col("region_y") < 0) |
            (F.col("region_x") + F.col("region_w") > F.col("width")) |
            (F.col("region_y") + F.col("region_h") > F.col("height")))
-    if strict:
-        first_bad = q.filter(bad).select(
-            "query_id", "media_ref", "region_x", "region_y", "region_w",
-            "region_h", "width", "height").limit(5)
-        offenders = first_bad.collect()  # eager: raises before any read
-        if offenders:
-            r = offenders[0]
-            raise ValueError(
-                f"Region ({r.region_x},{r.region_y} - {r.region_w}x"
-                f"{r.region_h}) exceeds image dimensions "
-                f"({r.width}x{r.height})"
-                + (f" (+{len(offenders) - 1} more)"
-                   if len(offenders) > 1 else ""))
-    else:
-        q = q.filter(~bad)
+    first_bad = q.filter(bad).select(
+        "query_id", "media_ref", "region_x", "region_y", "region_w",
+        "region_h", "width", "height").limit(5)
+    offenders = first_bad.collect()  # eager: raises before any read
+    if offenders:
+        r = offenders[0]
+        raise ValueError(
+            f"Region ({r.region_x},{r.region_y} - {r.region_w}x"
+            f"{r.region_h}) exceeds image dimensions "
+            f"({r.width}x{r.height})"
+            + (f" (+{len(offenders) - 1} more)"
+               if len(offenders) > 1 else ""))
     tie = geo.adjusted_tiepoint_cols(
         F.col("region_x"), F.col("region_y"),
         F.col("origin_x"), F.col("origin_y"),
         F.col("pixel_sx"), F.col("pixel_sy"))
-    regions = q.select("*", *tie)
-    keys = expand_tile_keys(regions, level=level)
-    joined = join_tiles(keys, tiles)
-    return decode_and_clip(joined)
+    return _windows(q.select("*", *tie), tiles)
 
 
 def extract_for_docs(docs: DataFrame, catalog: DataFrame, tiles: DataFrame,

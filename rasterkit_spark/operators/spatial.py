@@ -549,18 +549,17 @@ def zonal_footprint_pairs(zq: DataFrame, catalog: DataFrame) -> DataFrame:
 
 
 def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
-                broadcast_tiles: bool = False,
-                on_unplaceable: str = "error") -> DataFrame:
+                broadcast_tiles: bool = False) -> DataFrame:
     """min/max/sum/count of raster values per (zone polygon, raster).
 
-    ``on_unplaceable``: rasters whose CRS is neither WebMercator (any
-    alias) nor 4326 cannot be compared against the 4326 zone polygons —
-    ``"error"`` (default) raises naming offenders, counted by aggregates
-    that the candidate-pair checkpoint's job evaluates
+    A catalog raster whose CRS is neither WebMercator (any alias) nor 4326
+    cannot be compared against the 4326 zone polygons, so it raises
+    ``ValueError`` naming offenders, counted by aggregates that the
+    candidate-pair checkpoint's job evaluates
     (:func:`~rasterkit_spark.plans.materialize.materialize`), at no job
-    of their own; ``"skip"`` silently excludes them.  Either way no such
-    raster reaches the PIP stage, which would compare meter coordinates
-    against degree polygons — all-outside, silently-empty stats.
+    of their own.  No such raster reaches the PIP stage, which would
+    compare meter coordinates against degree polygons — all-outside,
+    silently-empty stats.
 
     Each paired ``zone_id`` must be non-NULL and name one polygon, or
     ``ValueError`` (counted on the same job); duplicate rows count once.
@@ -605,24 +604,17 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
                                  "zsum": 0, "zcount": 0})
     """
     from ..session import ensure_parallelism
-    if on_unplaceable not in ("error", "skip"):
-        raise ValueError(
-            f"on_unplaceable must be 'error' or 'skip', got {on_unplaceable!r}")
     # the CRSs the PIP stage can place against 4326 polygons
     placeable = (F.col("media_kind") != "raster") \
         | F.col("epsg").isin(*MERC_EPSGS, 4326)
-    screen, probes, observed = {}, (), catalog
-    if on_unplaceable == "error":
-        # counted on the pairs checkpoint's own job: the observed node sits
-        # on the catalog input, upstream of the placeable filter and the
-        # joins, so it counts every bad raster, paired or not
-        bad = ~placeable
-        ref = F.when(bad, F.col("media_ref"))
-        screen = {"n": F.count_if(bad), "lo": F.min(ref),
-                  "any": F.any_value(ref, ignoreNulls=True),
-                  "hi": F.max(ref)}
-        observed, probe = observe(catalog, **screen)
-        probes = (probe,)
+    # counted on the pairs checkpoint's own job: the observed node sits on
+    # the catalog input, upstream of the placeable filter and the joins,
+    # so it counts every bad raster, paired or not
+    bad = ~placeable
+    ref = F.when(bad, F.col("media_ref"))
+    screen = {"n": F.count_if(bad), "lo": F.min(ref),
+              "any": F.any_value(ref, ignoreNulls=True), "hi": F.max(ref)}
+    observed, probe = observe(catalog, **screen)
     zq = polygons(zones, F.col("zone_id").alias("query_id"), "polygon_wkt",
                   F.coalesce(F.col("epsg"), F.lit(4326)).alias("crs"))
     # materialize the candidate pairs once, each carrying its polygon: the
@@ -634,20 +626,18 @@ def zonal_stats(zones: DataFrame, catalog: DataFrame, tiles: DataFrame,
         null_ids=F.count_if(F.col("query_id").isNull()),
         split_ids=F.count_if(F.col("zone") != F.col("_zone_max")))
     pairs, m = materialize(pairs.select("query_id", "media_ref", "zone.*"),
-                           ids, *probes)
-    if screen:
-        if m["n"] is None:
-            # no job ran the catalog subtree (the optimizer prunes it when
-            # there are no zones), so the screen needs a job of its own
-            own = catalog.agg(*[c.alias(k) for k, c in screen.items()])
-            m |= own.first().asDict()  # eager: the screen's own job
-        if m["n"]:
-            offenders = sorted({m["lo"], m["any"], m["hi"]} - {None})
-            raise ValueError(
-                f"zonal_stats: catalog contains {m['n']} raster(s) whose "
-                "CRS the 4326-polygon PIP stage cannot place (e.g. "
-                f"{offenders}); reproject them or pass "
-                "on_unplaceable='skip'")
+                           ids, probe)
+    if m["n"] is None:
+        # no job ran the catalog subtree (the optimizer prunes it when
+        # there are no zones), so the screen needs a job of its own
+        own = catalog.agg(*[c.alias(k) for k, c in screen.items()])
+        m |= own.first().asDict()  # eager: the screen's own job
+    if m["n"]:
+        offenders = sorted({m["lo"], m["any"], m["hi"]} - {None})
+        raise ValueError(
+            f"zonal_stats: catalog contains {m['n']} raster(s) whose CRS "
+            f"the 4326-polygon PIP stage cannot place (e.g. {offenders}); "
+            "reproject them")
     if m["null_ids"] or m["split_ids"]:
         raise ValueError(
             f"zonal_stats: zone_id must be non-NULL and name one polygon "

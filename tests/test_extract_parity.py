@@ -261,11 +261,6 @@ def test_pixel_region_strict_validation(spark, corpus, sdfs):
     with pytest.raises(ValueError, match="exceeds image dimensions"):
         EX.extract_pixel_region(spark.createDataFrame(bad, schema),
                                 sdfs["media_catalog"], sdfs["tiles"])
-    # forgiving mode drops the row instead
-    n = EX.extract_pixel_region(spark.createDataFrame(bad, schema),
-                                sdfs["media_catalog"], sdfs["tiles"],
-                                strict=False).count()
-    assert n == 0
 
 
 def test_extract_broadcast_tiles_strategy_same_result(spark, corpus, sdfs):
@@ -300,7 +295,10 @@ def test_extract_auto_level_matches_oracle(spark, corpus, sdfs):
     q = sdfs["queries_bbox"].join(
         spark.createDataFrame(qpdf[["query_id", "target_res"]]), "query_id")
     out = EX.extract_auto_level(q, sdfs["media_catalog"], sdfs["tiles"],
-                                max_level=2).toPandas().set_index("query_id")
+                                max_level=2)
+    # the level comes from the window rows themselves, no join-back
+    assert out.schema == EX.WINDOW_SCHEMA
+    out = out.toPandas().set_index("query_id")
     assert len(out) == len(qpdf)
     lvl_seen = set()
     for i, r in enumerate(qpdf.itertuples()):
@@ -363,6 +361,7 @@ def test_extract_explicit_level_matches_oracle(spark, corpus, sdfs):
                      sdfs["tiles"], level=1).toPandas() \
         .set_index("query_id")
     assert len(out) > 0
+    assert (out.level == 1).all()
     cat = corpus.media_catalog.set_index("media_ref", drop=False)
     checked = 0
     for r in corpus.queries_bbox.itertuples():

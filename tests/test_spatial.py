@@ -276,9 +276,9 @@ def test_knn_join_releases_round_caches(spark, points_pdf):
 
 def test_zonal_stats_rejects_unplaceable_crs(spark):
     """A raster CRS the 4326-polygon PIP stage cannot place must raise up
-    front (default) or be excluded (on_unplaceable='skip') — it used to be
-    conservatively paired with every zone and silently report empty stats
-    (meter pixel centers PIP-tested against degree polygons)."""
+    front — it used to be conservatively paired with every zone and
+    silently report empty stats (meter pixel centers PIP-tested against
+    degree polygons)."""
     c = CP.build_corpus(n_media=4, n_docs=10, n_queries=6)
     sd = c.to_spark(spark, ["zones", "media_catalog", "tiles"])
     bad_ref = c.media_catalog[c.media_catalog.media_kind == "raster"] \
@@ -288,9 +288,6 @@ def test_zonal_stats_rejects_unplaceable_crs(spark):
                  .otherwise(F.col("epsg")))
     with pytest.raises(ValueError, match="cannot place"):
         SP.zonal_stats(sd["zones"], bad_cat, sd["tiles"])
-    out = SP.zonal_stats(sd["zones"], bad_cat, sd["tiles"],
-                         on_unplaceable="skip").toPandas()
-    assert bad_ref not in set(out.media_ref)
     # Mercator aliases are placeable, not unplaceable
     alias_cat = sd["media_catalog"].withColumn(
         "epsg", F.when(F.col("epsg") == 3857, F.lit(3785))
